@@ -23,16 +23,42 @@ Spark-side additions:
 - ``EVM_ARCHIVE_STREAM``         "1" → tail-follow via Structured Streaming
   with a processingTime trigger of SLEEP_SECONDS (A13); default bounded
   batch backfill (availableNow semantics)
+
+Sink contract.  The reference's loop (poll the head, ``eth_getLogs`` per
+``blockStep`` window, upsert, advance; main.go:217-241) both backfills and
+tails.  Here one *ingest unit* (``_ingest_unit``) lands the logs of a block
+range ``[lo, hi]`` and the price probes over it; ``run_batch`` runs one
+unit over [resume start, toBlock or the head], and ``run_stream`` one per
+non-empty micro-batch, over the blocks it carries.  Every unit:
+
+- dedups logs on ``LOGS_PK + removed``: a reorg re-delivers a log's PK with
+  removed=true, and the row and its tombstone are both stored
+  (get_logs.go:52); ``read_sink`` resolves them at read time.  Prices dedup
+  on ``PRICE_PK``;
+- overwrites only its own ``ingest_batch=<key>`` partition
+  (``_write_idempotent``).  A ``run_batch`` unit's key is its start block
+  (>= 0), a micro-batch's is ``-1 - batch_id`` (< 0): the two never meet, a
+  replayed micro-batch rewrites only its own partition, and a later unit
+  carrying tombstones for old blocks never rewrites an earlier one;
+- calls ``publish('logs')`` / ``publish('price')`` after the matching write
+  commits.  A listener that raises is logged with its traceback and never
+  fails the unit.
+
+``run_batch`` resumes from the sink's max block + 1, ``run_stream`` from
+its checkpoint (on first start, from the sink's max block + 1).
 """
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
 
 from .schemas import LOGS_PK, PRICE_PK
 from .sources import rpc
+
+log = logging.getLogger(__name__)
 
 
 def env_config(env: dict | None = None) -> dict:
@@ -66,9 +92,8 @@ def _write_idempotent(df, path: str, batch_key: int) -> None:
     writes its own hive partition ``ingest_batch=<key>`` with *dynamic*
     partition overwrite — the replay deterministically rewrites the same
     partition and nothing else (the parquet analog of the reference's
-    ``ON CONFLICT DO NOTHING``, get_logs.go:112-137).  batch_key is the
-    streaming batch_id (stable across restarts from one checkpoint) or
-    the batch backfill's resume-start block."""
+    ``ON CONFLICT DO NOTHING``, get_logs.go:112-137).  ``_ingest_unit``
+    picks batch_key (see the module docstring)."""
     from pyspark.sql import functions as F
 
     (
@@ -123,57 +148,60 @@ def _resume_from(spark: SparkSession, path: str, from_block: int) -> int:
     return max((mx + 1) if mx is not None else 0, from_block)
 
 
+def _source(reader, fmt: str, cfg: dict, lo: int, hi: int, **extra):
+    """One ``evm_*`` source over blocks [lo, hi] (hi < 0: up to the chain
+    head) in ``blockStep`` windows, with any per-source options."""
+    opts = {"endpoint": cfg["endpoint"], "fromBlock": lo, "toBlock": hi,
+            "blockStep": cfg["block_step"], **extra}
+    return reader.format(fmt).options(**{k: str(v) for k, v in opts.items()}).load()
+
+
+def _notify(publish, topic: str) -> None:
+    if publish is None:
+        return
+    try:
+        publish(topic)
+    except Exception:  # noqa: BLE001 — listeners never fail ingest
+        log.warning("publish(%r) failed after its sink commit", topic, exc_info=True)
+
+
+def _ingest_unit(logs, cfg: dict, logs_path: str, price_path: str,
+                 lo: int, hi: int, batch_id: int | None = None, publish=None) -> None:
+    """Land one ingest unit: the logs of blocks [lo, hi] (optionally with
+    header timestamps) and the price probes over them, under the sink
+    contract of the module docstring.  ``batch_id`` is the micro-batch's
+    id, or None for a ``run_batch`` unit."""
+    spark = logs.sparkSession
+    key = lo if batch_id is None else -1 - batch_id
+    logs = logs.dropDuplicates(LOGS_PK + ["removed"])
+    if cfg["enrich"]:
+        headers = _source(spark.read, "evm_blocks", cfg, lo, hi)
+        logs = rpc.enrich_block_timestamps(logs, headers)
+    _write_idempotent(logs, logs_path, key)
+    _notify(publish, "logs")
+    if cfg["tokens"] and cfg["oracles"]:
+        price = _source(spark.read, "evm_price", cfg, lo, hi,
+                        tokens=cfg["tokens"], oracles=cfg["oracles"])
+        _write_idempotent(price.dropDuplicates(PRICE_PK), price_path, key)
+        _notify(publish, "price")
+
+
 def run_batch(spark: SparkSession, cfg: dict | None = None) -> dict:
-    """Bounded backfill: logs + price + (optional) header enrichment into
-    partitioned parquet.  Returns row counts per table."""
+    """Bounded backfill: one ingest unit over [resume start, toBlock], the
+    chain head read once here when toBlock is unset.  Returns row counts
+    per table."""
     cfg = cfg or env_config()
     rpc.register(spark)
     logs_path = os.path.join(cfg["out"], "logs")
-    start = _resume_from(spark, logs_path, cfg["from_block"])
-
-    reader = (
-        spark.read.format("evm_logs")
-        .option("endpoint", cfg["endpoint"])
-        .option("fromBlock", str(start))
-        .option("blockStep", str(cfg["block_step"]))
-    )
-    if cfg["to_block"] >= 0:
-        reader = reader.option("toBlock", str(cfg["to_block"]))
-    if cfg["contracts"]:
-        reader = reader.option("contracts", cfg["contracts"])
-    logs = reader.load().dropDuplicates(LOGS_PK)
-
-    if cfg["enrich"]:
-        blocks_reader = (
-            spark.read.format("evm_blocks")
-            .option("endpoint", cfg["endpoint"])
-            .option("fromBlock", str(start))
-            .option("blockStep", str(cfg["block_step"]))
-        )
-        if cfg["to_block"] >= 0:
-            blocks_reader = blocks_reader.option("toBlock", str(cfg["to_block"]))
-        logs = rpc.enrich_block_timestamps(logs, blocks_reader.load())
-
-    _write_idempotent(logs, logs_path, start)
+    price_path = os.path.join(cfg["out"], "price")
+    lo = _resume_from(spark, logs_path, cfg["from_block"])
+    hi = cfg["to_block"]
+    if hi < 0:
+        hi = rpc.chain_head(rpc.make_transport(cfg["endpoint"]))
+    logs = _source(spark.read, "evm_logs", cfg, lo, hi, contracts=cfg["contracts"])
+    _ingest_unit(logs, cfg, logs_path, price_path, lo, hi)
     counts = {"logs": read_sink(spark, logs_path).count()}
-
     if cfg["tokens"] and cfg["oracles"]:
-        price_path = os.path.join(cfg["out"], "price")
-        price = (
-            spark.read.format("evm_price")
-            .option("endpoint", cfg["endpoint"])
-            .option("tokens", cfg["tokens"])
-            .option("oracles", cfg["oracles"])
-            .option("fromBlock", str(start))
-            .option(
-                "toBlock",
-                str(cfg["to_block"]) if cfg["to_block"] >= 0 else "-1",
-            )
-            .option("blockStep", str(cfg["block_step"]))
-            .load()
-            .dropDuplicates(PRICE_PK)
-        )
-        _write_idempotent(price, price_path, start)
         counts["price"] = read_sink(spark, price_path).count()
     return counts
 
@@ -181,66 +209,23 @@ def run_batch(spark: SparkSession, cfg: dict | None = None) -> dict:
 def _stream_batch_writer(
     cfg: dict, logs_path: str, price_path: str, publish=None
 ):
-    """foreachBatch body for run_stream, factored out so replay semantics
-    are directly testable: calling it twice with the same batch_id must
-    leave the sink unchanged (see _write_idempotent).
+    """foreachBatch body for run_stream: one ingest unit per non-empty
+    micro-batch, over the bounds of the blocks it carries.  Factored out
+    so replay semantics are directly testable: calling it twice with the
+    same batch_id must leave the sink unchanged.
 
     ``publish`` (optional, e.g. a graphql.serve() server's ``publish``)
-    is called with topic 'logs' / 'price' after the corresponding sink
-    commit — the engine-side analogue of the reference's insert trigger
-    firing Postgres NOTIFY for Postgraphile --simple-subscriptions."""
+    is the engine-side analogue of the reference's insert trigger firing
+    Postgres NOTIFY for Postgraphile --simple-subscriptions."""
     from pyspark.sql import functions as F
 
-    want_price = bool(cfg["tokens"] and cfg["oracles"])
-
-    def _notify(topic: str) -> None:
-        if publish is not None:
-            try:
-                publish(topic)
-            except Exception:  # noqa: BLE001 — listeners never fail ingest
-                pass
-
     def write_batch(batch_df, batch_id: int) -> None:
-        # dedup on PK + removed, NOT the PK alone: a reorg re-delivers a
-        # log's PK with removed=true in the same or a later poll window,
-        # and the tombstone must be STORED verbatim (reference
-        # get_logs.go:52 stores removed as a column) — a PK-only dedup
-        # would arbitrarily drop either the row or its tombstone.
-        # Resolution is a read-time concern (reorg.resolve_removed via
-        # read_sink), keeping the sink append-only and idempotent.
-        batch_df = batch_df.dropDuplicates(LOGS_PK + ["removed"])
         bounds = batch_df.agg(
             F.min("block_number").alias("lo"), F.max("block_number").alias("hi")
         ).collect()[0]
-        if bounds["lo"] is None:
-            return
-        if cfg["enrich"]:
-            headers = (
-                batch_df.sparkSession.read.format("evm_blocks")
-                .option("endpoint", cfg["endpoint"])
-                .option("fromBlock", str(bounds["lo"]))
-                .option("toBlock", str(bounds["hi"]))
-                .option("blockStep", str(cfg["block_step"]))
-                .load()
-            )
-            batch_df = rpc.enrich_block_timestamps(batch_df, headers)
-        _write_idempotent(batch_df, logs_path, batch_id)
-        _notify("logs")
-        if not want_price:
-            return
-        price = (
-            batch_df.sparkSession.read.format("evm_price")
-            .option("endpoint", cfg["endpoint"])
-            .option("tokens", cfg["tokens"])
-            .option("oracles", cfg["oracles"])
-            .option("fromBlock", str(bounds["lo"]))
-            .option("toBlock", str(bounds["hi"]))
-            .option("blockStep", str(cfg["block_step"]))
-            .load()
-            .dropDuplicates(PRICE_PK)
-        )
-        _write_idempotent(price, price_path, batch_id)
-        _notify("price")
+        if bounds["lo"] is not None:
+            _ingest_unit(batch_df, cfg, logs_path, price_path,
+                         bounds["lo"], bounds["hi"], batch_id, publish)
 
     return write_batch
 
@@ -261,26 +246,16 @@ def run_stream(
     logs_path = os.path.join(cfg["out"], "logs")
     price_path = os.path.join(cfg["out"], "price")
     start = _resume_from(spark, logs_path, cfg["from_block"])
-    reader = (
-        spark.readStream.format("evm_logs")
-        .option("endpoint", cfg["endpoint"])
-        .option("fromBlock", str(start))
-        .option("blockStep", str(cfg["block_step"]))
+    stream = _source(
+        spark.readStream, "evm_logs", cfg, start, cfg["to_block"],
+        contracts=cfg["contracts"],
+        maxBlocksPerBatch=cfg.get("max_blocks_per_batch", -1),
     )
-    if cfg["to_block"] >= 0:
-        reader = reader.option("toBlock", str(cfg["to_block"]))
-    if cfg["contracts"]:
-        reader = reader.option("contracts", cfg["contracts"])
-    if cfg.get("max_blocks_per_batch", -1) > 0:
-        reader = reader.option(
-            "maxBlocksPerBatch", str(cfg["max_blocks_per_batch"])
-        )
 
     write_batch = _stream_batch_writer(cfg, logs_path, price_path, publish)
 
     writer = (
-        reader.load()
-        .writeStream.foreachBatch(write_batch)
+        stream.writeStream.foreachBatch(write_batch)
         .option(
             "checkpointLocation", os.path.join(cfg["out"], "_checkpoint")
         )

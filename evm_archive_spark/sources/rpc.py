@@ -212,6 +212,11 @@ def make_transport(endpoint: str, retry_seconds: float = 10.0, max_retries: int 
     return HttpTransport(endpoint, retry_seconds, max_retries)
 
 
+def chain_head(transport) -> int:
+    """A2: the chain head, from ``eth_blockNumber``."""
+    return _from_hex(transport.call("eth_blockNumber", []))
+
+
 # --------------------------------------------------------------------------
 # shared planning + row materialization
 # --------------------------------------------------------------------------
@@ -336,7 +341,7 @@ def _opts(options) -> dict:
         "from_block": int(options.get("fromblock", "0")),
         "to_block": int(options.get("toblock", "-1")),
         "block_step": int(options.get("blockstep", "100")),  # main.go:77 default
-        # 0 = uncapped.  The cap is admission control for *continuous*
+        # <= 0 = uncapped.  The cap is admission control for *continuous*
         # tail-follow (processingTime trigger), where the reader observes
         # batch starts and clamps the next window.  Leave 0 for
         # availableNow backfills: that trigger snapshots latestOffset once,
@@ -349,50 +354,53 @@ def _opts(options) -> dict:
 
 
 # --------------------------------------------------------------------------
-# batch reader (bounded backfill)
+# block-range readers: one base for every source, batch and stream
 # --------------------------------------------------------------------------
 
-class EvmLogsBatchReader(DataSourceReader):
+class _BlockRangeReader:
+    """What every block-range reader shares: its options, its transport,
+    ``blockStep`` window planning and the empty-range guard.  A subclass
+    supplies only ``_window(transport, rng)``, the rows of one window;
+    ``partitions()`` is the batch planner (a stream reader plans from its
+    offsets instead)."""
+
     def __init__(self, options):
         self.o = _opts(options)
+
+    def _transport(self):
+        o = self.o
+        return make_transport(o["endpoint"], o["retry_seconds"], o["max_retries"])
+
+    def _plan(self, lo: int, hi: int) -> list[BlockRange]:
+        # already caught up (lo > hi): the DataSource API needs >= 1
+        # partition, so plan one empty placeholder range
+        return plan_ranges(lo, hi, self.o["block_step"]) or [BlockRange(lo, lo - 1)]
 
     def partitions(self):
         o = self.o
         end = o["to_block"]
         if end < 0:
-            t = make_transport(o["endpoint"], o["retry_seconds"], o["max_retries"])
-            end = _from_hex(t.call("eth_blockNumber", []))  # A2 head clamp
-        ranges = plan_ranges(o["from_block"], end, o["block_step"])
-        # already caught up (resume cursor past the bound): the DataSource
-        # API needs >= 1 partition, so emit one empty placeholder range
-        return ranges or [BlockRange(o["from_block"], o["from_block"] - 1)]
+            end = chain_head(self._transport())  # A2 head clamp
+        return self._plan(o["from_block"], end)
 
     def read(self, partition: BlockRange):
-        if partition.end < partition.start:
-            return
-        o = self.o
-        t = make_transport(o["endpoint"], o["retry_seconds"], o["max_retries"])
-        yield from _rows_to_batches(
-            _fetch_range(t, partition, o["contracts"]), _arrow_logs_schema()
+        if partition.end >= partition.start:
+            yield from self._window(self._transport(), partition)
+
+
+class EvmLogsBatchReader(_BlockRangeReader, DataSourceReader):
+    """Bounded backfill: one ``eth_getLogs`` call per window."""
+
+    def _window(self, t, rng: BlockRange):
+        return _rows_to_batches(
+            _fetch_range(t, rng, self.o["contracts"]), _arrow_logs_schema()
         )
 
 
-# --------------------------------------------------------------------------
-# stream reader (tail-follow)
-# --------------------------------------------------------------------------
+class EvmLogsStreamReader(_BlockRangeReader, DataSourceStreamReader):
+    """Tail-follow: block-number offsets, same windows as the batch reader."""
 
-class EvmLogsStreamReader(DataSourceStreamReader):
-    def __init__(self, options):
-        self.o = _opts(options)
-        self._transport = None
-
-    def _t(self):
-        if self._transport is None:
-            o = self.o
-            self._transport = make_transport(
-                o["endpoint"], o["retry_seconds"], o["max_retries"]
-            )
-        return self._transport
+    _window = EvmLogsBatchReader._window
 
     def initialOffset(self) -> dict:
         # A11: start = FROM_BLOCK arg; resume-from-sink reconciliation is
@@ -406,7 +414,7 @@ class EvmLogsStreamReader(DataSourceStreamReader):
         # runs uncapped — the Python stream API exposes no start offset
         # here, and under-reporting would stall availableNow runs.
         o = self.o
-        head = _from_hex(self._t().call("eth_blockNumber", []))
+        head = chain_head(self._transport())
         if o["to_block"] >= 0:
             head = min(head, o["to_block"])
         latest = head + 1
@@ -417,19 +425,7 @@ class EvmLogsStreamReader(DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict):
         self._next_start = end["next_block"]
-        lo, hi = start["next_block"], end["next_block"] - 1
-        if hi < lo:
-            return [BlockRange(lo, lo - 1)]  # empty batch placeholder
-        return plan_ranges(lo, hi, self.o["block_step"])
-
-    def read(self, partition: BlockRange):
-        if partition.end < partition.start:
-            return
-        o = self.o
-        t = make_transport(o["endpoint"], o["retry_seconds"], o["max_retries"])
-        yield from _rows_to_batches(
-            _fetch_range(t, partition, o["contracts"]), _arrow_logs_schema()
-        )
+        return self._plan(start["next_block"], end["next_block"] - 1)
 
     def commit(self, end: dict) -> None:
         pass  # progress lives in the Spark checkpoint (A10 analog)
@@ -460,36 +456,23 @@ class EvmLogsDataSource(DataSource):
 # price probe source (A3/A9)
 # --------------------------------------------------------------------------
 
-class EvmPriceBatchReader(DataSourceReader):
+class EvmPriceBatchReader(_BlockRangeReader, DataSourceReader):
     """One row (token, block, price) per (token, oracle) pair per window
     start — the reference's price probe (get_price.go:31-50, main.go:191-198)
     generalized to a partition per window."""
 
     def __init__(self, options):
-        self.o = _opts(options)
+        super().__init__(options)
         self.tokens = [t for t in (options.get("tokens") or "").split(",") if t]
         self.oracles = [t for t in (options.get("oracles") or "").split(",") if t]
         if len(self.tokens) != len(self.oracles):
             # the reference panics on index (main.go:192-193); we fail early
             raise ValueError("tokens and oracles must be equal-length CSVs")
 
-    def partitions(self):
-        o = self.o
-        end = o["to_block"]
-        if end < 0:
-            t = make_transport(o["endpoint"], o["retry_seconds"], o["max_retries"])
-            end = _from_hex(t.call("eth_blockNumber", []))
-        ranges = plan_ranges(o["from_block"], end, o["block_step"])
-        return ranges or [BlockRange(o["from_block"], o["from_block"] - 1)]
-
-    def read(self, partition: BlockRange):
+    def _window(self, t, rng: BlockRange):
         from decimal import Decimal
 
-        if partition.end < partition.start:
-            return
-        o = self.o
-        t = make_transport(o["endpoint"], o["retry_seconds"], o["max_retries"])
-        as_of = partition.start  # price sampled at window start (main.go:196)
+        as_of = rng.start  # price sampled at window start (main.go:196)
         for token, oracle in zip(self.tokens, self.oracles):
             try:
                 res = t.call(
@@ -520,31 +503,13 @@ class EvmPriceDataSource(DataSource):
 # declares block_timestamp but never populates it, get_logs.go:118-119)
 # --------------------------------------------------------------------------
 
-class EvmBlocksBatchReader(DataSourceReader):
+class EvmBlocksBatchReader(_BlockRangeReader, DataSourceReader):
     """One row (block_number, block_hash, block_timestamp) per block —
     ``eth_getBlockByNumber`` fetched per block within partition-parallel
     block sub-ranges (same planning as the logs source)."""
 
-    def __init__(self, options):
-        self.o = _opts(options)
-
-    def partitions(self):
-        o = self.o
-        end = o["to_block"]
-        if end < 0:
-            t = make_transport(o["endpoint"], o["retry_seconds"], o["max_retries"])
-            end = _from_hex(t.call("eth_blockNumber", []))
-        ranges = plan_ranges(o["from_block"], end, o["block_step"])
-        return ranges or [BlockRange(o["from_block"], o["from_block"] - 1)]
-
-    def read(self, partition: BlockRange):
-        if partition.end < partition.start:
-            return
-        o = self.o
-        t = make_transport(o["endpoint"], o["retry_seconds"], o["max_retries"])
-        yield from _rows_to_batches(
-            self._headers(t, partition), _arrow_blocks_schema()
-        )
+    def _window(self, t, rng: BlockRange):
+        return _rows_to_batches(self._headers(t, rng), _arrow_blocks_schema())
 
     def _headers(self, t, partition: BlockRange):
         import datetime as dt

@@ -194,3 +194,79 @@ def test_stream_reorg_tombstone_reverts_prior_row(spark, tmp_path):
     raw2 = spark.read.parquet(logs_path)
     assert raw2.count() == raw.count()
     assert read_sink(spark, logs_path, LOGS_PK).count() == 19 * 2
+
+
+_REORG = "mock://head=19,logs_per_block=2,reorg_block=5,reorg_seen_from=10"
+
+
+def test_batch_keeps_reorg_tombstones(spark, tmp_path):
+    """run_batch dedups on PK + removed, like every ingest unit: a range
+    holding both a log and its removed=true re-delivery stores both, and
+    the view hides the reorged-out block."""
+    from evm_archive_spark.pipeline import read_sink
+    from evm_archive_spark.schemas import LOGS_PK
+
+    cfg = _cfg(
+        tmp_path, EVM_ARCHIVE_ENDPOINT=_REORG, EVM_ARCHIVE_TOKENS="", EVM_ARCHIVE_ORACLES=""
+    )
+    run_batch(spark, cfg)
+    logs_path = str(tmp_path / "out" / "logs")
+    raw = spark.read.parquet(logs_path).filter("block_number = 5")
+    assert raw.count() == 4  # 2 logs + 2 tombstones
+    assert raw.filter("removed").count() == 2
+    view = read_sink(spark, logs_path, LOGS_PK)
+    assert view.filter("block_number = 5").count() == 0
+    assert view.count() == 19 * 2
+
+
+def test_batch_then_stream_keeps_backfill(spark, tmp_path):
+    """A stream started over a run_batch backfill resumes after it and
+    writes partitions whose keys cannot meet the backfill's."""
+    from evm_archive_spark.pipeline import read_sink, run_stream
+    from evm_archive_spark.schemas import LOGS_PK
+
+    run_batch(spark, _cfg(tmp_path, EVM_ARCHIVE_TO_BLOCK="9"))
+    q = run_stream(spark, _cfg(tmp_path), available_now=True)
+    q.awaitTermination()
+    view = read_sink(spark, str(tmp_path / "out" / "logs"), LOGS_PK)
+    assert view.count() == 40
+    assert view.agg({"block_number": "min"}).collect()[0][0] == 0
+    # the price sink keeps the backfill's window probes too
+    price = read_sink(spark, str(tmp_path / "out" / "price"))
+    assert {r["block_number"] for r in price.collect()} == {0, 5, 10, 15}
+
+
+def test_publish_failure_is_logged_and_unit_lands(spark, tmp_path, caplog):
+    """Listeners never fail ingest, but each failed publish call leaves
+    one warning with its traceback."""
+    import logging
+
+    from evm_archive_spark.pipeline import _stream_batch_writer, read_sink
+    from evm_archive_spark.sources import rpc
+
+    cfg = _cfg(tmp_path, EVM_ARCHIVE_TO_BLOCK="9")
+    calls = []
+
+    def publish(topic):
+        calls.append(topic)
+        raise RuntimeError(f"listener down: {topic}")
+
+    logs_path = str(tmp_path / "out" / "logs")
+    price_path = str(tmp_path / "out" / "price")
+    rpc.register(spark)
+    batch = (
+        spark.read.format("evm_logs")
+        .option("endpoint", cfg["endpoint"])
+        .option("fromBlock", "0")
+        .option("toBlock", "9")
+        .option("blockStep", "5")
+        .load()
+    )
+    with caplog.at_level(logging.WARNING, logger="evm_archive_spark.pipeline"):
+        _stream_batch_writer(cfg, logs_path, price_path, publish)(batch, 0)
+    assert calls == ["logs", "price"]
+    assert read_sink(spark, logs_path).count() == 20
+    assert read_sink(spark, price_path).count() == 2
+    warned = [r for r in caplog.records if r.name == "evm_archive_spark.pipeline"]
+    assert len(warned) == 2
+    assert all(r.levelno == logging.WARNING and r.exc_info for r in warned)

@@ -126,19 +126,49 @@ def test_streaming_tail_and_sink(registered, tmp_path):
     con.close()
 
 
-def test_blocks_source_and_head_clamp(registered):
+_RANGE_SOURCES = {
+    # format: (reader class, extra options, row block numbers over [2, 5]
+    # in steps of 2)
+    "evm_logs": (rpc.EvmLogsBatchReader, {}, [2, 2, 3, 3, 4, 4, 5, 5]),
+    "evm_blocks": (rpc.EvmBlocksBatchReader, {}, [2, 3, 4, 5]),
+    "evm_price": (
+        rpc.EvmPriceBatchReader, {"tokens": "0xtokenA", "oracles": "0xoracleA"}, [2, 4]
+    ),
+}
+
+
+@pytest.mark.parametrize("fmt", sorted(_RANGE_SOURCES))
+def test_blocks_source_and_head_clamp(registered, fmt):
+    """Every block-range source shares one planner: without toBlock it
+    clamps at the chain head; caught up (fromBlock > toBlock) it plans one
+    empty placeholder partition and yields no rows."""
     spark = registered
-    df = (
-        spark.read.format("evm_blocks")
-        .option("endpoint", "mock://head=5")
-        .option("fromBlock", "2")
-        .option("blockStep", "2")
-        .load()
-    )
-    rows = sorted(tuple(r) for r in df.collect())
-    assert [r[0] for r in rows] == [2, 3, 4, 5]  # clamped at head
-    # deterministic 12s cadence from the mock genesis
-    assert (rows[1][2] - rows[0][2]).total_seconds() == 12.0
+    cls, extra, blocks = _RANGE_SOURCES[fmt]
+
+    def load(**opts):
+        reader = spark.read.format(fmt).option("endpoint", "mock://head=5")
+        for k, v in {**extra, **opts}.items():
+            reader = reader.option(k, v)
+        return reader.load()
+
+    def plan(**opts):
+        # Spark hands a reader its options with lower-cased keys
+        lower = {k.lower(): v for k, v in opts.items()}
+        reader = cls({"endpoint": "mock://head=5", **extra, **lower})
+        return [(p.start, p.end) for p in reader.partitions()]
+
+    assert plan(fromBlock="2", blockStep="2") == [(2, 3), (4, 5)]  # clamped at head
+    rows = load(fromBlock="2", blockStep="2").collect()
+    assert sorted(r["block_number"] for r in rows) == blocks
+    if fmt == "evm_blocks":
+        # deterministic 12s cadence from the mock genesis
+        ts = sorted((r["block_number"], r["block_timestamp"]) for r in rows)
+        assert (ts[1][1] - ts[0][1]).total_seconds() == 12.0
+
+    assert plan(fromBlock="7", toBlock="6") == [(7, 6)]  # caught up
+    caught_up = load(fromBlock="7", toBlock="6")
+    assert caught_up.rdd.getNumPartitions() == 1
+    assert caught_up.count() == 0
 
 
 def test_price_source(registered):
