@@ -365,66 +365,28 @@ def stream_cdc_admission(
     bucketed_state: bool = False,
     n_buckets: int = 64,
     table_prefix: str | None = None,
-    available_now: bool = True,
-    processing_time: str | None = None,
 ):
-    """The STREAMING face of chunk-level binary dedup — the CDC member
-    of the admission-lane family (corpus / URL / image): each
-    micro-batch of binary payloads is FastCDC-chunked, probed against
-    the persisted chunk-digest state as of the previous batch, admitted
-    when at most ``max_dup_ppm`` of its bytes are already ingested, and
-    the survivors' digests appended to the state.  Ingested payloads
-    are never re-read — only their digests.
+    """The STREAMING face of chunk-level binary dedup (``admission``
+    driver): each micro-batch of payloads is FastCDC-chunked and
+    admitted when at most ``max_dup_ppm`` of its bytes are in the
+    persisted ``chunks/`` digests (bucketed by ``chunk_md5`` under
+    ``bucketed_state=True``); the survivors' digests join the state.
+    Ingested payloads are never re-read.  ``survivors/`` holds the
+    admitted rows + dup stats."""
+    from . import admission
 
-    Replay semantics match the other lanes (ADVICE r5/r6): survivors
-    are exactly-once via ``survivors/batch_id=<N>/``
-    overwrite-by-partition; state rows carry their ``batch_id`` and the
-    per-batch probe reads only ``batch_id < current``
-    (``util.read_admission_state``), so a replay never semi-joins
-    against its own delta; state rows are membership-only (semi-join
-    probes), so a bucketed replay's duplicate digests (same batch_id)
-    change no admission decision.
-
-    ``bucketed_state=True`` keeps the digest state as a hash-bucketed
-    catalog table (``chunk_md5``, the ``persist_chunk_index`` layout):
-    the per-batch probe plans a one-sided shuffle with zero Exchange
-    above the state scan.
-
-    Layout under ``state_dir``: ``chunks/`` (digests), ``survivors/``
-    (admitted rows + dup stats, partitioned by batch_id),
-    ``_checkpoint``.  Returns the started StreamingQuery."""
-    import hashlib as _hashlib
-    import os
-
-    chunks_path = os.path.join(state_dir, "chunks")
-    survivors_path = os.path.join(state_dir, "survivors")
-    prefix = table_prefix or (
-        "cdc_" + _hashlib.md5(state_dir.encode()).hexdigest()[:10]
-    )
-    idx_table = f"{prefix}_chunks"
     kw = dict(min_size=min_size, avg_size=avg_size, max_size=max_size)
 
-    def admit(batch_df, batch_id):
-        from .. import storage
-        from .util import read_admission_state
+    def admit(batch, state):
+        return incremental_cdc_dedup(
+            batch, cdc_chunks(batch, payload_col, id_col, **kw),
+            state("chunks"), id_col=id_col, max_dup_ppm=max_dup_ppm,
+        )
 
-        s = batch_df.sparkSession
-        index = read_admission_state(
-            s, batch_id=batch_id, cols=["chunk_md5"],
-            empty_schema="chunk_md5 string",
-            path=None if bucketed_state else chunks_path,
-            table=idx_table if bucketed_state else None,
-        )
-        chunks = cdc_chunks(batch_df, payload_col, id_col, **kw)
-        surv = incremental_cdc_dedup(
-            batch_df, chunks, index, id_col=id_col,
-            max_dup_ppm=max_dup_ppm,
-        ).localCheckpoint(eager=True)
-        surv.write.mode("overwrite").parquet(
-            os.path.join(survivors_path, f"batch_id={batch_id}")
-        )
-        delta = (
-            chunks.join(
+    def delta(batch, surv):
+        return (
+            cdc_chunks(batch, payload_col, id_col, **kw)
+            .join(
                 surv.select(F.col(id_col).alias("__sid")),
                 F.col("media_id") == F.col("__sid"),
                 "left_semi",
@@ -432,33 +394,16 @@ def stream_cdc_admission(
             .select("chunk_md5")
             .dropDuplicates()
         )
-        if bucketed_state:
-            delta = delta.withColumn("batch_id", F.lit(batch_id))
-            if s.catalog.tableExists(idx_table):
-                (
-                    delta.write.mode("append").format("parquet")
-                    .option("path", chunks_path)
-                    .bucketBy(n_buckets, "chunk_md5").sortBy("chunk_md5")
-                    .saveAsTable(idx_table)
-                )
-            else:
-                storage.write_bucketed(
-                    delta, idx_table, chunks_path, ["chunk_md5"],
-                    n_buckets,
-                )
-        else:
-            delta.write.mode("overwrite").parquet(
-                os.path.join(chunks_path, f"batch_id={batch_id}")
-            )
 
-    writer = payload_stream.writeStream.foreachBatch(admit).option(
-        "checkpointLocation", os.path.join(state_dir, "_checkpoint")
+    return admission.run(
+        payload_stream,
+        state_dir,
+        admit,
+        [admission.State("chunks", "chunk_md5 string", delta, ("chunk_md5",))],
+        bucketed_state=bucketed_state,
+        n_buckets=n_buckets,
+        table_prefix=table_prefix,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 def chunk_dedup_stats(chunks: DataFrame) -> DataFrame:

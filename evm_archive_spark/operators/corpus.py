@@ -88,7 +88,6 @@ def incremental_corpus_update(
     method: str = "md5",
     id_col: str = "doc_id",
     text_col: str = "text",
-    materialize: bool = False,
 ):
     """The composed NIGHTLY-SHARD lane: admit a new shard into a corpus
     whose text is never re-read, using only its persisted state — the
@@ -107,12 +106,7 @@ def incremental_corpus_update(
     deltas to the state tables (parquet / bucketed per
     persist_minhash_band_index) and the next shard repeats.  Survivor
     rows carry ``n_tokens`` so downstream mixing/packing reuses the
-    count without re-tokenizing.
-
-    ``materialize=True`` localCheckpoints the survivor set before the
-    deltas are derived — the right call when all three outputs get
-    written (the streaming admission path): one evaluation of the lane
-    instead of three."""
+    count without re-tokenizing."""
     from .dedup import (
         incremental_exact_dedup,
         incremental_minhash_dedup,
@@ -130,8 +124,6 @@ def incremental_corpus_update(
         exact, band_index, id_col=id_col, text_col=text_col,
         num_perm=num_perm, bands=bands, k=k, method=method,
     )
-    if materialize:
-        survivors = survivors.localCheckpoint(eager=True)
     digest_delta = survivors.select(F.md5(text_col).alias("digest")).distinct()
     band_delta = minhash_band_index(
         survivors, id_col=id_col, text_col=text_col,
@@ -178,133 +170,43 @@ def stream_corpus_admission(
     bucketed_state: bool = False,
     n_buckets: int = 64,
     table_prefix: str | None = None,
-    available_now: bool = True,
-    processing_time: str | None = None,
 ):
-    """The STREAMING face of the nightly-shard admission lane (VERDICT
-    r4 #7): wire ``incremental_corpus_update`` into ``foreachBatch`` so
-    a live document ingest feeds the SAME persisted dedup state the
-    batch lane (gate q_incr_corpus) maintains — each micro-batch is
-    admitted against the state as of the previous batch, then persists
-    its survivor rows and both state deltas.
+    """The STREAMING face of the nightly-shard admission lane
+    (``admission`` driver): a live document ingest feeds the SAME dedup
+    state the batch lane (gate q_incr_corpus) keeps — ``digests/`` (seen
+    content digests) and ``bands/`` (MinHash band rows), bucketed by
+    ``digest`` and ``(band, bhash)`` under ``bucketed_state=True`` (the
+    ``dedup.persist_minhash_band_index`` layout).  Earlier corpus text is
+    never re-read.  ``survivors/`` holds admitted rows + n_tokens."""
+    from . import admission
+    from .dedup import minhash_band_index
 
-    Replay semantics (foreachBatch re-runs a failed batch): survivors
-    are EXACTLY-ONCE — each batch writes
-    ``survivors/batch_id=<N>/`` with ``mode('overwrite')``, so a replay
-    rewrites its own partition instead of appending duplicates.  Every
-    state row carries its ``batch_id`` (partition dir in the default
-    layout, data column in the bucketed layout) and the per-batch state
-    read filters ``batch_id < current``
-    (``util.read_admission_state``, ADVICE r6 high) — a replay crashed
-    between the state-delta write and the checkpoint commit sees
-    exactly the state the original attempt saw instead of anti-joining
-    against its own delta and losing the batch.  The state deltas are
-    overwrite-by-partition in the default layout; in the bucketed
-    layout a replay after a partial append can duplicate state rows
-    (same batch_id), which is benign — digests/bands are membership
-    state consumed only through anti-/semi-joins, so duplicate rows
-    change no admission decision, and the replay itself never sees
-    them.
-
-    ``bucketed_state=True`` maintains the digest and band state as
-    hash-bucketed catalog tables (``storage.write_bucketed``, the
-    ``dedup.persist_minhash_band_index`` pattern: digests bucketed by
-    ``digest``, bands by ``(band, bhash)``) instead of plain parquet.
-    Each micro-batch probe then plans a ONE-SIDED shuffle: only the
-    (small) incoming batch's keys move, the ever-growing state is read
-    in place with zero Exchange — at nightly-shard scale the difference
-    between reshuffling the whole index per batch and touching only its
-    matching buckets.  ``table_prefix`` names the catalog tables
-    (default: derived from ``state_dir``).
-
-    Layout under ``state_dir``:
-      ``digests/``   — seen content digests
-      ``bands/``     — MinHash band index rows
-      ``survivors/`` — admitted document rows (+ n_tokens),
-                       partitioned by ``batch_id``
-      ``_checkpoint``— streaming checkpoint
-
-    Returns the started StreamingQuery.  Test pins: two micro-batches
-    through this == the sequential batch replay of the same shards
-    (earlier corpus text never re-read), with a cross-batch near-dup
-    actually dropped by the persisted band state; bucketed mode pins
-    the zero-Exchange state-side scan."""
-    import hashlib
-    import os
-
-    lane_kw = dict(
-        min_tokens=min_tokens, num_perm=num_perm, bands=bands, k=k,
-        method=method, id_col=id_col, text_col=text_col,
+    band_kw = dict(
+        num_perm=num_perm, bands=bands, k=k, method=method,
+        id_col=id_col, text_col=text_col,
     )
-    digests_path = os.path.join(state_dir, "digests")
-    bands_path = os.path.join(state_dir, "bands")
-    survivors_path = os.path.join(state_dir, "survivors")
-    prefix = table_prefix or (
-        "adm_" + hashlib.md5(state_dir.encode()).hexdigest()[:10]
+    return admission.run(
+        docs_stream,
+        state_dir,
+        lambda batch, state: incremental_corpus_update(
+            batch, state("digests"), state("bands"),
+            min_tokens=min_tokens, **band_kw,
+        )[0],
+        [
+            admission.State(
+                "digests", "digest string",
+                lambda batch, surv: surv.select(
+                    F.md5(text_col).alias("digest")
+                ).distinct(),
+                ("digest",),
+            ),
+            admission.State(
+                "bands", f"{id_col} long, band int, bhash string",
+                lambda batch, surv: minhash_band_index(surv, **band_kw),
+                ("band", "bhash"),
+            ),
+        ],
+        bucketed_state=bucketed_state,
+        n_buckets=n_buckets,
+        table_prefix=table_prefix,
     )
-    dig_table, band_table = f"{prefix}_digests", f"{prefix}_bands"
-
-    def admit(batch_df, batch_id):
-        from .. import storage
-        from .util import read_admission_state
-
-        s = batch_df.sparkSession
-        seen = read_admission_state(
-            s, batch_id=batch_id, cols=["digest"],
-            empty_schema="digest string",
-            path=None if bucketed_state else digests_path,
-            table=dig_table if bucketed_state else None,
-        )
-        idx = read_admission_state(
-            s, batch_id=batch_id, cols=[id_col, "band", "bhash"],
-            empty_schema=f"{id_col} long, band int, bhash string",
-            path=None if bucketed_state else bands_path,
-            table=band_table if bucketed_state else None,
-        )
-        surv, ddelta, bdelta = incremental_corpus_update(
-            batch_df, seen, idx, materialize=True, **lane_kw
-        )
-        surv.write.mode("overwrite").parquet(
-            os.path.join(survivors_path, f"batch_id={batch_id}")
-        )
-        if bucketed_state:
-            ddelta = ddelta.withColumn("batch_id", F.lit(batch_id))
-            bdelta = bdelta.withColumn("batch_id", F.lit(batch_id))
-            if s.catalog.tableExists(dig_table):
-                (
-                    ddelta.write.mode("append").format("parquet")
-                    .option("path", digests_path)
-                    .bucketBy(n_buckets, "digest").sortBy("digest")
-                    .saveAsTable(dig_table)
-                )
-                (
-                    bdelta.write.mode("append").format("parquet")
-                    .option("path", bands_path)
-                    .bucketBy(n_buckets, "band", "bhash")
-                    .sortBy("band", "bhash")
-                    .saveAsTable(band_table)
-                )
-            else:
-                storage.write_bucketed(
-                    ddelta, dig_table, digests_path, ["digest"], n_buckets
-                )
-                storage.write_bucketed(
-                    bdelta, band_table, bands_path, ["band", "bhash"],
-                    n_buckets,
-                )
-        else:
-            ddelta.write.mode("overwrite").parquet(
-                os.path.join(digests_path, f"batch_id={batch_id}")
-            )
-            bdelta.write.mode("overwrite").parquet(
-                os.path.join(bands_path, f"batch_id={batch_id}")
-            )
-
-    writer = docs_stream.writeStream.foreachBatch(admit).option(
-        "checkpointLocation", os.path.join(state_dir, "_checkpoint")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()

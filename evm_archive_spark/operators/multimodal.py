@@ -1792,69 +1792,30 @@ def stream_video_admission(
     id_col: str = "media_id",
     payload_col: str = "payload",
     strict: bool = False,
-    available_now: bool = True,
-    processing_time: str | None = None,
 ):
-    """The STREAMING face of the video-dedup lane: each micro-batch is
-    admitted via ``incremental_video_dedup`` against the persisted
-    frame-hash index as of the previous batch, then persists its
-    survivors and their frame rows.  Admitted videos decode once; the
-    index carries their frame hashes, so earlier payloads are never
-    re-read.
+    """The STREAMING face of the video-dedup lane (``admission``
+    driver): each micro-batch is admitted via ``incremental_video_dedup``
+    against the persisted ``index/`` of (media_id, frame_hash) rows, so
+    earlier payloads are never re-decoded.  The index feeds a
+    count_distinct, so it declares no bucket keys and stays exactly
+    once.  ``survivors/`` holds media_id rows."""
+    from . import admission
 
-    Replay semantics: survivors AND index deltas are EXACTLY-ONCE
-    (``.../batch_id=<N>/`` with ``mode('overwrite')`` — frame-hash
-    rows feed a count_distinct, so unlike membership state duplicate
-    index rows would NOT be benign; the batch-partitioned layout is
-    mandatory here, the stream_postings_admission reasoning), and the
-    state read filters ``batch_id < current``
-    (``util.read_admission_state``, ADVICE r6 high) so a replay probes
-    exactly the state the original attempt saw, never its own delta.
-
-    Layout under ``state_dir``: ``index/`` ((media_id, frame_hash),
-    partitioned by batch_id), ``survivors/`` (media_id rows,
-    partitioned by batch_id), ``_checkpoint``.  Returns the
-    StreamingQuery."""
-    import os
-
-    index_path = os.path.join(state_dir, "index")
-    survivors_path = os.path.join(state_dir, "survivors")
-
-    def admit(batch_df, batch_id):
-        from .util import read_admission_state
-
-        s = batch_df.sparkSession
-        idx = read_admission_state(
-            s, batch_id=batch_id, cols=[id_col, "frame_hash"],
-            empty_schema=f"{id_col} long, frame_hash string",
-            path=index_path,
-        )
-        surv = incremental_video_dedup(
-            batch_df, idx, every_n=every_n, min_shared=min_shared,
-            strict=strict,
-        ).localCheckpoint(eager=True)
-        surv.write.mode("overwrite").parquet(
-            os.path.join(survivors_path, f"batch_id={batch_id}")
-        )
-        delta = frame_sample(
-            batch_df.join(surv, id_col), payload_col, id_col,
+    def delta(batch, surv):
+        return frame_sample(
+            batch.join(surv, id_col), payload_col, id_col,
             every_n=every_n, strict=strict,
         ).select(id_col, "frame_hash")
-        delta.write.mode("overwrite").parquet(
-            os.path.join(index_path, f"batch_id={batch_id}")
-        )
 
-    writer = media_stream.writeStream.foreachBatch(admit).option(
-        "checkpointLocation", os.path.join(state_dir, "_checkpoint")
+    return admission.run(
+        media_stream,
+        state_dir,
+        lambda batch, state: incremental_video_dedup(
+            batch, state("index"), every_n=every_n,
+            min_shared=min_shared, strict=strict,
+        ),
+        [admission.State("index", f"{id_col} long, frame_hash string", delta)],
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    q = writer.start()
-    if available_now:
-        q.awaitTermination()
-    return q
 
 
 def stream_image_admission(
@@ -1868,83 +1829,31 @@ def stream_image_admission(
     bucketed_state: bool = False,
     n_buckets: int = 64,
     table_prefix: str | None = None,
-    available_now: bool = True,
-    processing_time: str | None = None,
 ):
-    """The STREAMING face of the image-dedup lane — the multimodal
-    mirror of ``corpus.stream_corpus_admission``: each micro-batch of
-    media rows is admitted via ``incremental_image_dedup`` against the
-    persisted band index as of the previous batch, then persists its
-    survivors and their index rows.  Admitted images are decoded once,
-    at admission time; the index carries their full hashes, so no
-    earlier payload is ever re-read.
+    """The STREAMING face of the image-dedup lane (``admission``
+    driver): each micro-batch is admitted via ``incremental_image_dedup``
+    against the persisted ``index/`` of banded hash rows (bucketed by
+    ``(bi, bv)`` under ``bucketed_state=True``).  Images decode once, at
+    admission; the index carries their full hashes, so no earlier
+    payload is re-read.  ``survivors/`` holds (media_id, ahash) rows."""
+    from . import admission
 
-    Replay semantics: survivors are EXACTLY-ONCE — each batch writes
-    ``survivors/batch_id=<N>/`` with ``mode('overwrite')``, so a
-    foreachBatch replay rewrites its own partition instead of appending
-    duplicates.  The index delta is written the same way in the default
-    layout; with ``bucketed_state=True`` the band index is a catalog
-    table bucketed by ``(bi, bv)`` (``persist_image_hash_index``
-    pattern), making the per-batch probe join one-sided.  Index rows
-    carry their ``batch_id`` and the state read filters
-    ``batch_id < current`` (``util.read_admission_state``, ADVICE r6
-    high) so a replay never probes its own delta; a replay after a
-    partial bucketed append can duplicate index rows (same batch_id) —
-    benign, the index is membership state consumed via semi-/anti-join.
-
-    Layout under ``state_dir``: ``index/`` (banded hash rows),
-    ``survivors/`` ((media_id, ahash) rows, partitioned by
-    ``batch_id``), ``_checkpoint``.  Returns the StreamingQuery."""
-    import hashlib
-    import os
-
-    index_path = os.path.join(state_dir, "index")
-    survivors_path = os.path.join(state_dir, "survivors")
-    idx_table = table_prefix or (
-        "imgadm_" + hashlib.md5(state_dir.encode()).hexdigest()[:10]
-    )
-
-    def admit(batch_df, batch_id):
-        from .. import storage
-        from .util import read_admission_state
-
-        s = batch_df.sparkSession
-        idx = read_admission_state(
-            s, batch_id=batch_id, cols=[id_col, "ahash", "bi", "bv"],
-            empty_schema=f"{id_col} long, ahash long, bi int, bv long",
-            path=None if bucketed_state else index_path,
-            table=idx_table if bucketed_state else None,
-        )
-        surv = incremental_image_dedup(
-            batch_df, idx, max_hamming, id_col, payload_col, strict
-        ).localCheckpoint(eager=True)
-        surv.write.mode("overwrite").parquet(
-            os.path.join(survivors_path, f"batch_id={batch_id}")
-        )
-        delta = image_hash_index(surv, max_hamming, id_col, "ahash")
-        if bucketed_state:
-            delta = delta.withColumn("batch_id", F.lit(batch_id))
-            if s.catalog.tableExists(idx_table):
-                (
-                    delta.write.mode("append").format("parquet")
-                    .option("path", index_path)
-                    .bucketBy(n_buckets, "bi", "bv").sortBy("bi", "bv")
-                    .saveAsTable(idx_table)
-                )
-            else:
-                storage.write_bucketed(
-                    delta, idx_table, index_path, ["bi", "bv"], n_buckets
-                )
-        else:
-            delta.write.mode("overwrite").parquet(
-                os.path.join(index_path, f"batch_id={batch_id}")
+    return admission.run(
+        media_stream,
+        state_dir,
+        lambda batch, state: incremental_image_dedup(
+            batch, state("index"), max_hamming, id_col, payload_col, strict
+        ),
+        [
+            admission.State(
+                "index", f"{id_col} long, ahash long, bi int, bv long",
+                lambda batch, surv: image_hash_index(
+                    surv, max_hamming, id_col, "ahash"
+                ),
+                ("bi", "bv"),
             )
-
-    writer = media_stream.writeStream.foreachBatch(admit).option(
-        "checkpointLocation", os.path.join(state_dir, "_checkpoint")
+        ],
+        bucketed_state=bucketed_state,
+        n_buckets=n_buckets,
+        table_prefix=table_prefix,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()

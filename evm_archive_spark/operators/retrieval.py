@@ -133,42 +133,26 @@ def stream_postings_admission(
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
-    available_now: bool = True,
-    processing_time: str | None = None,
 ):
-    """The STREAMING face of the postings index: each micro-batch's
-    documents are tokenized into postings rows and written
-    ``postings/batch_id=<N>/`` with ``mode('overwrite')`` — EXACTLY
-    ONCE under foreachBatch replay (the stream_corpus_admission
-    survivor contract; duplicated postings would inflate tf/df, so
-    unlike membership state the benign-duplicate argument does NOT
-    apply and the bucketed-append layout is deliberately not used
-    here).  ``keyword_topk_indexed`` probes the partitioned tree
-    directly; ``compact_postings_index`` folds it into the bucketed
-    catalog table when the partition count grows (the nightly
-    compaction step — after which probes regain bucket pruning).
+    """The STREAMING face of the postings index (``admission`` driver):
+    each micro-batch's postings go to ``postings/``, which declares no
+    bucket keys and stays exactly once (duplicate postings would inflate
+    tf/df).  ``keyword_topk_indexed`` probes the partitioned tree;
+    ``compact_postings_index`` folds it into the bucketed table when the
+    partition count grows, after which probes regain bucket pruning."""
+    from . import admission
 
-    Returns the started StreamingQuery."""
-    import os
-
-    postings_path = os.path.join(state_dir, "postings")
-
-    def admit(batch_df, batch_id):
-        build_postings(batch_df, id_col, text_col).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(postings_path, f"batch_id={batch_id}"))
-
-    writer = docs_stream.writeStream.foreachBatch(admit).option(
-        "checkpointLocation", os.path.join(state_dir, "_checkpoint")
+    return admission.run(
+        docs_stream,
+        state_dir,
+        lambda batch, state: None,
+        [
+            admission.State(
+                "postings", "doc_id long, term string, dl int, tf long",
+                lambda batch, surv: build_postings(batch, id_col, text_col),
+            )
+        ],
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    q = writer.start()
-    if available_now:
-        q.awaitTermination()
-    return q
 
 
 def compact_postings_index(

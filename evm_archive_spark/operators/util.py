@@ -30,49 +30,6 @@ def bind_once(expr, fn):
     return F.element_at(F.transform(F.array(expr), fn), 1)
 
 
-def read_admission_state(
-    spark,
-    *,
-    batch_id: int,
-    cols: list[str],
-    empty_schema: str,
-    path: str | None = None,
-    table: str | None = None,
-) -> DataFrame:
-    """Read a streaming-admission dedup state (digests / bands /
-    canonical URLs / chunk digests / image bands / frame hashes) **as of
-    the PREVIOUS micro-batch** — the shared replay-safe read every
-    ``stream_*_admission`` lane uses (ADVICE r6 high).
-
-    The hazard: foreachBatch re-runs a batch after a crash between the
-    state-delta write and the checkpoint commit.  A naive state read
-    then includes the current batch's OWN delta, so the replayed batch
-    anti-joins against its own digests/bands/URLs, drops every survivor,
-    and overwrites ``survivors/batch_id=N`` (and the delta) with an
-    empty set — permanent loss.  Every state row therefore carries a
-    ``batch_id`` (the partition directory in the default layout, a data
-    column in the bucketed layout) and this read filters
-    ``batch_id < current`` — a replay sees exactly the state the
-    original attempt saw and reproduces its output byte-for-byte.
-
-    ``table`` (bucketed catalog layout) wins when it exists; else
-    ``path`` (batch-partitioned parquet) when it exists; else an empty
-    frame with ``empty_schema``.  In the bucketed layout the filter is a
-    data filter below the bucketed scan, so the one-sided-shuffle probe
-    plan is unchanged."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    if table is not None and spark.catalog.tableExists(table):
-        df = spark.table(table)
-    elif path is not None and os.path.exists(path):
-        df = spark.read.parquet(path)
-    else:
-        return spark.createDataFrame([], empty_schema)
-    return df.filter(F.col("batch_id") < F.lit(batch_id)).select(*cols)
-
-
 #: Logical operators that can never put an Exchange in the physical
 #: plan.  Anything NOT in this set (joins, aggregates, sorts, windows,
 #: repartitions, limits, ...) is treated as shuffle-introducing — the

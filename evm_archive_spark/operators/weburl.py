@@ -371,91 +371,31 @@ def stream_url_admission(
     bucketed_state: bool = False,
     n_buckets: int = 64,
     table_prefix: str | None = None,
-    available_now: bool = True,
-    processing_time: str | None = None,
 ):
-    """The STREAMING face of URL-level dedup — the web mirror of
-    ``corpus.stream_corpus_admission``: each micro-batch of crawl rows
-    is admitted via ``incremental_url_dedup`` against the persisted
-    canonical-URL index as of the previous batch, then persists its
-    survivors and their canonical keys.
+    """The STREAMING face of URL-level dedup (``admission`` driver): each
+    micro-batch of crawl rows is admitted via ``incremental_url_dedup``
+    against the persisted ``index/`` of canonical URLs, bucketed by
+    ``canonical_url`` under ``bucketed_state=True``.  ``survivors/``
+    holds the surviving rows + canonical_url."""
+    from . import admission
 
-    Replay semantics: survivors are EXACTLY-ONCE — each batch writes
-    ``survivors/batch_id=<N>/`` with ``mode('overwrite')``, so a
-    foreachBatch replay rewrites its own partition instead of appending
-    duplicates.  Index rows carry their ``batch_id`` and the per-batch
-    state read filters ``batch_id < current``
-    (``util.read_admission_state``, ADVICE r6 high), so a replay never
-    anti-joins against its own delta.  The index delta is
-    overwrite-by-partition in the default layout; with
-    ``bucketed_state=True`` the canonical-URL index is a catalog table
-    hash-bucketed by ``canonical_url`` (``storage.write_bucketed``), so
-    the per-batch anti-join probe is ONE-SIDED — only the incoming
-    batch's keys shuffle, the growing index is read in place with zero
-    Exchange.  A replay after a partial bucketed append can duplicate
-    index rows (same batch_id) — benign: the index is membership state
-    consumed through an anti-join, and the replay itself filters them
-    out.
-
-    Layout under ``state_dir``: ``index/`` (one ``canonical_url``
-    column), ``survivors/`` (full surviving rows + canonical_url,
-    partitioned by ``batch_id``), ``_checkpoint``.  Returns the
-    StreamingQuery."""
-    import hashlib
-    import os
-
-    index_path = os.path.join(state_dir, "index")
-    survivors_path = os.path.join(state_dir, "survivors")
-    idx_table = table_prefix or (
-        "urladm_" + hashlib.md5(state_dir.encode()).hexdigest()[:10]
-    )
-
-    def admit(batch_df, batch_id):
-        from .. import storage
-        from .util import read_admission_state
-
-        s = batch_df.sparkSession
-        idx = read_admission_state(
-            s, batch_id=batch_id, cols=["canonical_url"],
-            empty_schema="canonical_url string",
-            path=None if bucketed_state else index_path,
-            table=idx_table if bucketed_state else None,
-        )
-        surv = incremental_url_dedup(
-            batch_df, idx, url_col, id_col
-        ).localCheckpoint(eager=True)
-        surv.write.mode("overwrite").parquet(
-            os.path.join(survivors_path, f"batch_id={batch_id}")
-        )
-        delta = surv.select("canonical_url")
-        if bucketed_state:
-            delta = delta.withColumn("batch_id", F.lit(batch_id))
-            if s.catalog.tableExists(idx_table):
-                (
-                    delta.write.mode("append").format("parquet")
-                    .option("path", index_path)
-                    .bucketBy(n_buckets, "canonical_url")
-                    .sortBy("canonical_url")
-                    .saveAsTable(idx_table)
-                )
-            else:
-                storage.write_bucketed(
-                    delta, idx_table, index_path, ["canonical_url"],
-                    n_buckets,
-                )
-        else:
-            delta.write.mode("overwrite").parquet(
-                os.path.join(index_path, f"batch_id={batch_id}")
+    return admission.run(
+        page_stream,
+        state_dir,
+        lambda batch, state: incremental_url_dedup(
+            batch, state("index"), url_col, id_col
+        ),
+        [
+            admission.State(
+                "index", "canonical_url string",
+                lambda batch, surv: surv.select("canonical_url"),
+                ("canonical_url",),
             )
-
-    writer = page_stream.writeStream.foreachBatch(admit).option(
-        "checkpointLocation", os.path.join(state_dir, "_checkpoint")
+        ],
+        bucketed_state=bucketed_state,
+        n_buckets=n_buckets,
+        table_prefix=table_prefix,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 def host_stats(df: DataFrame, url_col: str = "url") -> DataFrame:

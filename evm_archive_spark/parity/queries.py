@@ -6459,16 +6459,20 @@ _add(
 # row certifies the streaming lane end-to-end, not just the batch
 # operator beneath it (which q_incr_corpus already gates).
 
-def _q_st_admission(spark, sf_dir):
+def _even_odd_doc_stream(spark, sf_dir, prefix):
+    """The two-micro-batch document stream the q_st_* gates share: the
+    even-doc shard, then the odd-doc shard, as two parquet files whose
+    modification times are pinned so the file source's oldest-first
+    order is deterministic (a same-second tie would fall back to path
+    order).  Returns ``(base, docs, stream)``; ``stream()`` opens a
+    fresh reader over the two files."""
     import os
     import tempfile
     import time
 
-    from ..operators.corpus import stream_corpus_admission
-
     register_testdata(spark, sf_dir, ["documents"])
     docs = spark.table("documents").select("doc_id", "text")
-    base = tempfile.mkdtemp(prefix="st_adm_")
+    base = tempfile.mkdtemp(prefix=prefix)
     src = os.path.join(base, "src")
     docs.filter("doc_id % 2 = 0").coalesce(1).write.mode(
         "append"
@@ -6477,25 +6481,42 @@ def _q_st_admission(spark, sf_dir):
     docs.filter("doc_id % 2 = 1").coalesce(1).write.mode(
         "append"
     ).parquet(src)
-    # pin modification times so the file source's oldest-first ordering
-    # is deterministic (a same-second tie would fall back to path order)
     now = time.time()
     for f in os.listdir(src):
-        if not f.endswith(".parquet"):
-            continue
-        t = now - 100 if f in first else now - 50
-        os.utime(os.path.join(src, f), (t, t))
-    stream = (
+        if f.endswith(".parquet"):
+            t = now - 100 if f in first else now - 50
+            os.utime(os.path.join(src, f), (t, t))
+    return base, docs, lambda: (
         spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    q = stream_corpus_admission(
-        stream, os.path.join(base, "state"),
-        min_tokens=20, num_perm=8, bands=4, k=8, method="md5",
-    )
-    q.awaitTermination()
-    surv = spark.read.parquet(os.path.join(base, "state", "survivors"))
+
+
+def _st_admission_survivors(spark, sf_dir, replay):
+    """q_st_admission, and with ``replay`` its crash-replay twin."""
+    import os
+
+    from ..operators.corpus import stream_corpus_admission
+
+    base, _, stream = _even_odd_doc_stream(spark, sf_dir, "st_adm_")
+    state = os.path.join(base, "state")
+    kw = dict(min_tokens=20, num_perm=8, bands=4, k=8, method="md5")
+    stream_corpus_admission(stream(), state, **kw)
+    if replay:
+        # crash simulation: batch 1's survivors + state delta are
+        # written, its checkpoint commit is not -> the restart MUST
+        # replay batch 1
+        commits = os.path.join(state, "_checkpoint", "commits")
+        last = max(
+            (f for f in os.listdir(commits) if f.isdigit()), key=int
+        )
+        os.remove(os.path.join(commits, last))
+        crc = os.path.join(commits, f".{last}.crc")
+        if os.path.exists(crc):  # the Hadoop checksum sibling goes too
+            os.remove(crc)
+        stream_corpus_admission(stream(), state, **kw)
+    surv = spark.read.parquet(os.path.join(state, "survivors"))
     return surv.select(
         F.col("doc_id").cast("long"),
         F.col("n_tokens").cast("long"),
@@ -6537,7 +6558,7 @@ _ST_ADMISSION_ORACLE = (
 
 _add(
     "q_st_admission",
-    _q_st_admission,
+    lambda spark, sf_dir: _st_admission_survivors(spark, sf_dir, False),
     _ST_ADMISSION_ORACLE,
     "streaming admission (2 real micro-batches over persisted state) == "
     "sequential SQL replay of shard-by-shard admission",
@@ -6551,74 +6572,14 @@ _add(
 # checkpoint commit is not — by deleting the LAST commit marker and
 # restarting the stream.  foreachBatch then re-runs the final batch
 # against state that already contains that batch's own delta; the
-# replay-safe read (util.read_admission_state filters batch_id < current)
-# must reproduce the original survivors byte-for-byte instead of
-# anti-joining the batch against itself and losing it.  The oracle is
-# therefore EXACTLY the q_st_admission oracle: a correct replay changes
-# nothing.
-
-def _q_st_admission_replay(spark, sf_dir):
-    import os
-    import tempfile
-    import time
-
-    from ..operators.corpus import stream_corpus_admission
-
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = spark.table("documents").select("doc_id", "text")
-    base = tempfile.mkdtemp(prefix="st_adm_rp_")
-    src = os.path.join(base, "src")
-    state = os.path.join(base, "state")
-    docs.filter("doc_id % 2 = 0").coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    first = set(os.listdir(src))
-    docs.filter("doc_id % 2 = 1").coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    now = time.time()
-    for f in os.listdir(src):
-        if not f.endswith(".parquet"):
-            continue
-        t = now - 100 if f in first else now - 50
-        os.utime(os.path.join(src, f), (t, t))
-    kw = dict(min_tokens=20, num_perm=8, bands=4, k=8, method="md5")
-
-    def run():
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        q = stream_corpus_admission(stream, state, **kw)
-        q.awaitTermination()
-        # availableNow termination deregisters asynchronously; the
-        # restart must not race it on the shared checkpoint
-        while any(a.runId == q.runId for a in spark.streams.active):
-            time.sleep(0.05)
-
-    run()
-    # crash simulation: batch 1's survivors + state delta are written,
-    # its checkpoint commit is not -> the restart MUST replay batch 1
-    commits = os.path.join(state, "_checkpoint", "commits")
-    last = max(
-        (f for f in os.listdir(commits) if f.isdigit()), key=int
-    )
-    os.remove(os.path.join(commits, last))
-    crc = os.path.join(commits, f".{last}.crc")
-    if os.path.exists(crc):  # Hadoop checksum sibling dies with the file
-        os.remove(crc)
-    run()
-    surv = spark.read.parquet(os.path.join(state, "survivors"))
-    return surv.select(
-        F.col("doc_id").cast("long"),
-        F.col("n_tokens").cast("long"),
-    ).orderBy("doc_id")
-
+# replay-safe read (operators.admission filters batch_id < current) must
+# reproduce the original survivors byte-for-byte instead of anti-joining
+# the batch against itself and losing it.  The oracle is therefore
+# EXACTLY the q_st_admission oracle: a correct replay changes nothing.
 
 _add(
     "q_st_admission_replay",
-    _q_st_admission_replay,
+    lambda spark, sf_dir: _st_admission_survivors(spark, sf_dir, True),
     _ST_ADMISSION_ORACLE,
     "foreachBatch crash-replay of the last micro-batch (commit marker "
     "deleted, state delta present) reproduces the sequential admission "
@@ -13258,8 +13219,6 @@ _add(
 
 def _q_st_retrieval(spark, sf_dir):
     import os
-    import tempfile
-    import time
 
     from ..operators.retrieval import (
         keyword_topk_indexed,
@@ -13267,29 +13226,8 @@ def _q_st_retrieval(spark, sf_dir):
     )
     from ..operators.textanalysis import word_terms
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = spark.table("documents").select("doc_id", "text")
-    base = tempfile.mkdtemp(prefix="st_ret_")
-    src = os.path.join(base, "src")
-    docs.filter("doc_id % 2 = 0").coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    first = set(os.listdir(src))
-    docs.filter("doc_id % 2 = 1").coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    now = time.time()
-    for f in os.listdir(src):
-        if not f.endswith(".parquet"):
-            continue
-        t = now - 100 if f in first else now - 50
-        os.utime(os.path.join(src, f), (t, t))
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    stream_postings_admission(stream, os.path.join(base, "state"))
+    base, docs, stream = _even_odd_doc_stream(spark, sf_dir, "st_ret_")
+    stream_postings_admission(stream(), os.path.join(base, "state"))
     idx = spark.read.parquet(os.path.join(base, "state", "postings"))
     qs = docs.filter("doc_id >= 3 AND doc_id < 6").select(
         F.col("doc_id").alias("query_id"),

@@ -3957,7 +3957,7 @@ def _pooled_stream_corpus_admission_equals_sequential_replay(spark, tmp_path):
     expect = []
     for shard in (b1, b2):
         surv, ddelta, bdelta = incremental_corpus_update(
-            shard, seen, idx, materialize=True, **kw
+            shard, seen, idx, **kw
         )
         expect += [r["doc_id"] for r in surv.collect()]
         seen = seen.union(ddelta).localCheckpoint()
@@ -4023,83 +4023,6 @@ def _pooled_prepare_audio_video_corpus_scan_counts(spark):
     assert acc.value == 2 * 8, (
         f"video lane scanned {acc.value}, expected 16 (meta+frames)"
     )
-
-
-def _pooled_stream_corpus_admission_replay_safe(spark, tmp_path):
-    """ADVICE r6 high: a foreachBatch replay of a batch whose state
-    delta is already on disk (crash between the state write and the
-    checkpoint commit) must reproduce the original survivors — not
-    anti-join the batch against its own digests and lose it.  Simulated
-    for real: run the two-batch stream, delete the last commit marker,
-    restart, and require byte-identical survivors."""
-    import os
-    import time
-
-    from evm_archive_spark.operators.corpus import stream_corpus_admission
-
-    kw = dict(min_tokens=4, num_perm=8, bands=4, k=5, method="md5")
-    rows1 = [
-        (0, "first anchor document body with several tokens inside"),
-        (1, "completely different content about storage engines and "
-            "columnar formats for analytical workloads"),
-    ]
-    rows2 = [
-        (10, "first anchor document body with several tokens inside"),
-        (12, "novel second shard document with enough tokens to pass "
-             "the quality gate easily and no shared shingles at all"),
-    ]
-    schema = "doc_id long, text string"
-    b1 = spark.createDataFrame(rows1, schema)
-    b2 = spark.createDataFrame(rows2, schema)
-    src = tmp_path / "rp_src"
-    b1.coalesce(1).write.mode("append").parquet(str(src))
-    first = set(os.listdir(str(src)))
-    b2.coalesce(1).write.mode("append").parquet(str(src))
-    now = time.time()
-    for f in os.listdir(str(src)):
-        if not f.endswith(".parquet"):
-            continue
-        t = now - 100 if f in first else now - 50
-        os.utime(str(src / f), (t, t))
-
-    state = str(tmp_path / "rp_state")
-
-    def run():
-        stream = spark.readStream.schema(b1.schema).option(
-            "maxFilesPerTrigger", "1"
-        ).parquet(str(src))
-        q = stream_corpus_admission(stream, state, **kw)
-        q.awaitTermination()
-        # availableNow termination deregisters asynchronously; the
-        # restart must not race it on the shared checkpoint
-        while any(a.runId == q.runId for a in spark.streams.active):
-            time.sleep(0.05)
-
-    run()
-    surv_path = f"{state}/survivors"
-    before = sorted(
-        r["doc_id"] for r in spark.read.parquet(surv_path).collect()
-    )
-    assert before == [0, 1, 12]  # cross-batch dup 10 dropped via state
-    # crash window: batch 1's delta + survivors are written, its commit
-    # marker is not -> delete the marker and restart
-    commits = f"{state}/_checkpoint/commits"
-    last = max((f for f in os.listdir(commits) if f.isdigit()), key=int)
-    assert last == "1"
-    os.remove(os.path.join(commits, last))
-    crc = os.path.join(commits, f".{last}.crc")
-    if os.path.exists(crc):  # Hadoop checksum sibling dies with the file
-        os.remove(crc)
-    run()
-    after = sorted(
-        r["doc_id"] for r in spark.read.parquet(surv_path).collect()
-    )
-    assert after == before, (
-        f"replayed batch lost survivors: {before} -> {after}"
-    )
-    # and the replayed batch partition itself is non-empty
-    b1_rows = spark.read.parquet(f"{surv_path}/batch_id=1").count()
-    assert b1_rows == 1
 
 
 def _pooled_stream_corpus_admission_bucketed_state_one_sided(
@@ -4174,7 +4097,7 @@ def _pooled_stream_corpus_admission_bucketed_state_one_sided(
         idx = spark.table(band_table)
         # bucketed state rows carry batch_id, and the replay-safe read
         # as-of batch 1 sees ONLY batch-0 rows (ADVICE r6 high)
-        from evm_archive_spark.operators.util import read_admission_state
+        from evm_archive_spark.operators.admission import read_admission_state
 
         assert "batch_id" in idx.columns
         as_of_1 = read_admission_state(
@@ -4344,7 +4267,6 @@ _POOLED_HEAVY = [
     _pooled_stream_cdc_admission_equals_sequential_replay,
     _pooled_stream_corpus_admission_equals_sequential_replay,
     _pooled_prepare_audio_video_corpus_scan_counts,
-    _pooled_stream_corpus_admission_replay_safe,
     _pooled_stream_corpus_admission_bucketed_state_one_sided,
     _pooled_streaming_rollup_maintenance_equals_batch,
     _pooled_streaming_incremental_dedup_equals_batch,
