@@ -29,7 +29,7 @@ Sink contract.  The reference's loop (poll the head, ``eth_getLogs`` per
 tails.  Here one *ingest unit* (``_ingest_unit``) lands the logs of a block
 range ``[lo, hi]`` and the price probes over it; ``run_batch`` runs one
 unit over [resume start, toBlock or the head], and ``run_stream`` one per
-non-empty micro-batch, over the blocks it carries.  Every unit:
+micro-batch, over the blocks it carries.  Every unit:
 
 - dedups logs on ``LOGS_PK + removed``: a reorg re-delivers a log's PK with
   removed=true, and the row and its tombstone are both stored
@@ -42,10 +42,21 @@ non-empty micro-batch, over the blocks it carries.  Every unit:
   carrying tombstones for old blocks never rewrites an earlier one;
 - calls ``publish('logs')`` / ``publish('price')`` after the matching write
   commits.  A listener that raises is logged with its traceback and never
-  fails the unit.
+  fails the unit.  A micro-batch that carries no rows lands nothing: no
+  partition, no ``publish``, no price probe.
+
+One scan of the node per unit.  The logs write is the unit's only
+``eth_getLogs`` read: its row count and ``min``/``max(block_number)`` come
+from a ``DataFrame.observe`` on the write itself, at no extra job, and feed
+the unit's INFO log line, the micro-batch's price range (the bounds of the
+blocks it carries) and ``run_batch``'s returned counts.  A micro-batch with
+timestamp enrichment needs its bounds before the write, for the header
+range, so it persists the deduped batch and takes them from that one read.
 
 ``run_batch`` resumes from the sink's max block + 1, ``run_stream`` from
-its checkpoint (on first start, from the sink's max block + 1).
+its checkpoint (on first start, from the sink's max block + 1).  The
+resume aggregate also counts each sink partition, so ``run_batch`` returns
+its totals without reading the sink back.
 """
 
 from __future__ import annotations
@@ -83,8 +94,10 @@ def env_config(env: dict | None = None) -> dict:
     }
 
 
-def _write_idempotent(df, path: str, batch_key: int) -> None:
-    """Land one ingest unit in the parquet sink exactly-once-per-key.
+def _write_idempotent(df, path: str, batch_key: int) -> dict:
+    """Land one ingest unit in the parquet sink exactly-once-per-key, and
+    return the written rows' ``rows`` count and ``lo``/``hi`` block bounds,
+    observed on the write itself.
 
     foreachBatch is at-least-once: after a crash between the logs write
     and the price write, Spark replays the whole micro-batch.  A plain
@@ -92,17 +105,23 @@ def _write_idempotent(df, path: str, batch_key: int) -> None:
     writes its own hive partition ``ingest_batch=<key>`` with *dynamic*
     partition overwrite — the replay deterministically rewrites the same
     partition and nothing else (the parquet analog of the reference's
-    ``ON CONFLICT DO NOTHING``, get_logs.go:112-137).  ``_ingest_unit``
-    picks batch_key (see the module docstring)."""
+    ``ON CONFLICT DO NOTHING``, get_logs.go:112-137).  A write of no rows
+    leaves every partition as it was.  ``_ingest_unit`` picks batch_key
+    (see the module docstring)."""
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
+    seen = Observation()
     (
-        df.withColumn("ingest_batch", F.lit(int(batch_key)))
+        df.observe(seen, F.count(F.lit(1)).alias("rows"),
+                   F.min("block_number").alias("lo"), F.max("block_number").alias("hi"))
+        .withColumn("ingest_batch", F.lit(int(batch_key)))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("ingest_batch")
         .parquet(path)
     )
+    return seen.get
 
 
 def read_sink(
@@ -132,20 +151,23 @@ def read_sink(
     return df.dropDuplicates(pk) if pk else df
 
 
-def _resume_from(spark: SparkSession, path: str, from_block: int) -> int:
+def _resume_from(spark: SparkSession, path: str, from_block: int) -> tuple[int, dict]:
     """A10/A11: start = max(sink max + 1, FROM_BLOCK) (main.go:162-175,
-    206-215) — reconciliation against the parquet sink."""
+    206-215) — reconciliation against the parquet sink.  The same
+    aggregate returns the sink's row count per ``ingest_batch`` key."""
     from pyspark.sql import functions as F
 
     try:
-        mx = (
-            spark.read.parquet(path)
-            .agg(F.max("block_number").alias("m"))
-            .collect()[0]["m"]
+        parts = (
+            spark.read.parquet(path).groupBy("ingest_batch")
+            .agg(F.max("block_number").alias("m"), F.count(F.lit(1)).alias("n"))
+            .collect()
         )
     except Exception:  # noqa: BLE001 — empty/missing sink == block 0
-        mx = None
-    return max((mx + 1) if mx is not None else 0, from_block)
+        parts = []
+    mx = max((r["m"] for r in parts if r["m"] is not None), default=None)
+    start = max((mx + 1) if mx is not None else 0, from_block)
+    return start, {r["ingest_batch"]: r["n"] for r in parts}
 
 
 def _source(reader, fmt: str, cfg: dict, lo: int, hi: int, **extra):
@@ -166,66 +188,82 @@ def _notify(publish, topic: str) -> None:
 
 
 def _ingest_unit(logs, cfg: dict, logs_path: str, price_path: str,
-                 lo: int, hi: int, batch_id: int | None = None, publish=None) -> None:
-    """Land one ingest unit: the logs of blocks [lo, hi] (optionally with
-    header timestamps) and the price probes over them, under the sink
-    contract of the module docstring.  ``batch_id`` is the micro-batch's
-    id, or None for a ``run_batch`` unit."""
+                 bounds: tuple | None = None, batch_id: int | None = None,
+                 publish=None) -> dict:
+    """Land one ingest unit, the logs (optionally with header timestamps)
+    and the price probes over them, under the sink contract of the module
+    docstring, and return the rows written per table.  A ``run_batch``
+    unit passes its block range as ``bounds``; a micro-batch passes its
+    ``batch_id``, and its bounds are those of the blocks it carries."""
+    from pyspark.sql import functions as F
+
     spark = logs.sparkSession
-    key = lo if batch_id is None else -1 - batch_id
     logs = logs.dropDuplicates(LOGS_PK + ["removed"])
-    if cfg["enrich"]:
-        headers = _source(spark.read, "evm_blocks", cfg, lo, hi)
-        logs = rpc.enrich_block_timestamps(logs, headers)
-    _write_idempotent(logs, logs_path, key)
+    # the header range needs a micro-batch's bounds before the write: take
+    # them from one materialized read of the node
+    cached = logs.persist() if cfg["enrich"] and bounds is None else None
+    if cached is not None:
+        bounds = tuple(cached.agg(F.min("block_number"), F.max("block_number")).first())
+    try:
+        if cfg["enrich"] and bounds[0] is not None:
+            headers = _source(spark.read, "evm_blocks", cfg, *bounds)
+            logs = rpc.enrich_block_timestamps(logs, headers)
+        key = bounds[0] if batch_id is None else -1 - batch_id
+        seen = _write_idempotent(logs, logs_path, key)
+    finally:
+        if cached is not None:
+            cached.unpersist()
+    log.info("ingest unit %d: blocks [%s, %s], %d log rows written",
+             key, seen["lo"], seen["hi"], seen["rows"])
+    written = {"logs": seen["rows"]}
+    if batch_id is not None and not seen["rows"]:
+        return written
     _notify(publish, "logs")
     if cfg["tokens"] and cfg["oracles"]:
-        price = _source(spark.read, "evm_price", cfg, lo, hi,
+        price = _source(spark.read, "evm_price", cfg, *(bounds or (seen["lo"], seen["hi"])),
                         tokens=cfg["tokens"], oracles=cfg["oracles"])
-        _write_idempotent(price.dropDuplicates(PRICE_PK), price_path, key)
+        written["price"] = _write_idempotent(price.dropDuplicates(PRICE_PK), price_path, key)["rows"]
         _notify(publish, "price")
+    return written
 
 
 def run_batch(spark: SparkSession, cfg: dict | None = None) -> dict:
     """Bounded backfill: one ingest unit over [resume start, toBlock], the
     chain head read once here when toBlock is unset.  Returns row counts
-    per table."""
+    per table: the resume aggregate's, less the partition the unit
+    overwrote, plus the rows it wrote."""
     cfg = cfg or env_config()
     rpc.register(spark)
     logs_path = os.path.join(cfg["out"], "logs")
     price_path = os.path.join(cfg["out"], "price")
-    lo = _resume_from(spark, logs_path, cfg["from_block"])
+    lo, before = _resume_from(spark, logs_path, cfg["from_block"])
+    tables = {"logs": before}
+    if cfg["tokens"] and cfg["oracles"]:
+        tables["price"] = _resume_from(spark, price_path, 0)[1]
     hi = cfg["to_block"]
     if hi < 0:
         hi = rpc.chain_head(rpc.make_transport(cfg["endpoint"]))
     logs = _source(spark.read, "evm_logs", cfg, lo, hi, contracts=cfg["contracts"])
-    _ingest_unit(logs, cfg, logs_path, price_path, lo, hi)
-    counts = {"logs": read_sink(spark, logs_path).count()}
-    if cfg["tokens"] and cfg["oracles"]:
-        counts["price"] = read_sink(spark, price_path).count()
-    return counts
+    written = _ingest_unit(logs, cfg, logs_path, price_path, bounds=(lo, hi))
+    # a write of no rows leaves partition lo as it was
+    return {t: sum(rows.values()) - (rows.get(lo, 0) if written[t] else 0) + written[t]
+            for t, rows in tables.items()}
 
 
 def _stream_batch_writer(
     cfg: dict, logs_path: str, price_path: str, publish=None
 ):
-    """foreachBatch body for run_stream: one ingest unit per non-empty
-    micro-batch, over the bounds of the blocks it carries.  Factored out
-    so replay semantics are directly testable: calling it twice with the
-    same batch_id must leave the sink unchanged.
+    """foreachBatch body for run_stream: one ingest unit per micro-batch.
+    Factored out so replay semantics are directly testable: calling it
+    twice with the same batch_id must leave the sink unchanged.
 
     ``publish`` (optional, e.g. a graphql.serve() server's ``publish``)
     is the engine-side analogue of the reference's insert trigger firing
     Postgres NOTIFY for Postgraphile --simple-subscriptions."""
-    from pyspark.sql import functions as F
 
     def write_batch(batch_df, batch_id: int) -> None:
-        bounds = batch_df.agg(
-            F.min("block_number").alias("lo"), F.max("block_number").alias("hi")
-        ).collect()[0]
-        if bounds["lo"] is not None:
-            _ingest_unit(batch_df, cfg, logs_path, price_path,
-                         bounds["lo"], bounds["hi"], batch_id, publish)
+        _ingest_unit(batch_df, cfg, logs_path, price_path,
+                     batch_id=batch_id, publish=publish)
 
     return write_batch
 
@@ -245,7 +283,7 @@ def run_stream(
     rpc.register(spark)
     logs_path = os.path.join(cfg["out"], "logs")
     price_path = os.path.join(cfg["out"], "price")
-    start = _resume_from(spark, logs_path, cfg["from_block"])
+    start, _ = _resume_from(spark, logs_path, cfg["from_block"])
     stream = _source(
         spark.readStream, "evm_logs", cfg, start, cfg["to_block"],
         contracts=cfg["contracts"],

@@ -11,6 +11,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory holding this package: python workers import the daemon
+# module from it, whatever directory the driver was started in
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "evm-archive-spark",
@@ -40,6 +44,10 @@ def get_spark(
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        # pyspark.daemon plus a zip directory cache that outlives each
+        # task's importlib.invalidate_caches() (see pydaemon.py)
+        .config("spark.python.daemon.module", "evm_archive_spark.pydaemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -3,6 +3,8 @@ same env surface as the reference (main.go:18-91), idempotent re-run."""
 
 from __future__ import annotations
 
+import pytest
+
 from evm_archive_spark.pipeline import env_config, run_batch
 
 
@@ -20,20 +22,86 @@ def _cfg(tmp_path, **over):
     return env_config(env)
 
 
-def test_batch_backfill_and_idempotent_rerun(spark, tmp_path):
-    cfg = _cfg(tmp_path)
+@pytest.fixture
+def node():
+    """A live JSON-RPC node on localhost that answers from MockTransport
+    and counts the calls per method: ``(endpoint, Counter)``."""
+    import http.server
+    import json
+    import threading
+    from collections import Counter
+
+    from evm_archive_spark.sources.rpc import MockTransport, SkipWindow
+
+    mock = MockTransport("mock://head=19,logs_per_block=2")
+    calls: Counter = Counter()
+    lock = threading.Lock()
+
+    class Handler(http.server.BaseHTTPRequestHandler):
+        def do_POST(self):
+            body = json.loads(self.rfile.read(int(self.headers["Content-Length"])))
+            with lock:
+                calls[body["method"]] += 1
+            try:
+                reply = {"result": mock.call(body["method"], body["params"])}
+            except SkipWindow as e:
+                reply = {"error": {"code": -32602, "message": str(e)}}
+            out = json.dumps({"jsonrpc": "2.0", "id": body["id"], **reply}).encode()
+            self.send_response(200)
+            self.send_header("Content-Type", "application/json")
+            self.send_header("Content-Length", str(len(out)))
+            self.end_headers()
+            self.wfile.write(out)
+
+        def log_message(self, *a):
+            pass
+
+    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    yield f"http://127.0.0.1:{srv.server_address[1]}", calls
+    srv.shutdown()
+    srv.server_close()
+
+
+def _logs_batch(spark, endpoint, lo, hi, **opts):
+    from evm_archive_spark.sources import rpc
+
+    rpc.register(spark)
+    return (
+        spark.read.format("evm_logs")
+        .options(endpoint=endpoint, fromBlock=str(lo), toBlock=str(hi), blockStep="5", **opts)
+        .load()
+    )
+
+
+def _raw(spark, path):
+    return sorted(tuple(r) for r in spark.read.parquet(path).collect())
+
+
+def _assert_counts_exact(spark, tmp_path, counts):
+    out = tmp_path / "out"
+    assert counts == {t: spark.read.parquet(str(out / t)).count() for t in counts}
+
+
+def test_batch_backfill_and_idempotent_rerun(spark, tmp_path, node):
+    endpoint, calls = node
+    cfg = _cfg(tmp_path, EVM_ARCHIVE_ENDPOINT=endpoint)
     counts = run_batch(spark, cfg)
     assert counts["logs"] == 40  # 20 blocks x 2 logs
     assert counts["price"] == 4  # 20 blocks / step 5 windows
+    assert calls["eth_getLogs"] == 4  # one per window
 
     # re-run: resume cursor starts past TO_BLOCK -> no new rows (A10/A11)
     counts2 = run_batch(spark, cfg)
-    assert counts2["logs"] == 40
+    assert counts2 == {"logs": 40, "price": 4}
+    _assert_counts_exact(spark, tmp_path, counts2)
 
 
-def test_batch_with_timestamp_enrichment(spark, tmp_path):
-    cfg = _cfg(tmp_path, EVM_ARCHIVE_ENRICH_TIMESTAMPS="1")
+def test_batch_with_timestamp_enrichment(spark, tmp_path, node):
+    endpoint, calls = node
+    cfg = _cfg(tmp_path, EVM_ARCHIVE_ENDPOINT=endpoint, EVM_ARCHIVE_ENRICH_TIMESTAMPS="1")
     run_batch(spark, cfg)
+    assert calls["eth_getLogs"] == 4  # still one per window
     df = spark.read.parquet(str(tmp_path / "out" / "logs"))
     rows = df.select("block_number", "block_timestamp").collect()
     assert all(r["block_timestamp"] is not None for r in rows)
@@ -59,35 +127,30 @@ def test_stream_captures_logs_and_prices(spark, tmp_path):
     assert "logs" in published and "price" in published
 
 
-def test_stream_replay_is_idempotent(spark, tmp_path):
+def test_stream_replay_is_idempotent(spark, tmp_path, node):
     """foreachBatch is at-least-once: a crash between the logs and price
     writes replays the whole micro-batch.  Replaying the same batch_id
     must leave both sinks unchanged (deterministic-partition overwrite,
-    the parquet analog of ON CONFLICT DO NOTHING)."""
+    the parquet analog of ON CONFLICT DO NOTHING).  Each run of the unit
+    reads each window of the node once."""
     from evm_archive_spark.pipeline import _stream_batch_writer, read_sink
     from evm_archive_spark.schemas import LOGS_PK
-    from evm_archive_spark.sources import rpc
 
-    cfg = _cfg(tmp_path)
-    rpc.register(spark)
-    batch = (
-        spark.read.format("evm_logs")
-        .option("endpoint", cfg["endpoint"])
-        .option("fromBlock", "0")
-        .option("toBlock", "9")
-        .option("blockStep", "5")
-        .load()
-    )
+    endpoint, calls = node
+    cfg = _cfg(tmp_path, EVM_ARCHIVE_ENDPOINT=endpoint)
+    batch = _logs_batch(spark, endpoint, 0, 9)
     logs_path = str(tmp_path / "out" / "logs")
     price_path = str(tmp_path / "out" / "price")
     write_batch = _stream_batch_writer(cfg, logs_path, price_path)
 
     write_batch(batch, 7)
+    assert calls["eth_getLogs"] == 2  # blocks 0-9 in windows of 5
     logs_once = read_sink(spark, logs_path, LOGS_PK).count()
     price_once = read_sink(spark, price_path).count()
     assert logs_once == 20 and price_once >= 1
 
     write_batch(batch, 7)  # crash-replay of the same micro-batch
+    assert calls["eth_getLogs"] == 4
     assert read_sink(spark, logs_path, LOGS_PK).count() == logs_once
     assert read_sink(spark, price_path).count() == price_once
     # and the raw sink itself carries no duplicate PKs (not just the view)
@@ -270,3 +333,91 @@ def test_publish_failure_is_logged_and_unit_lands(spark, tmp_path, caplog):
     warned = [r for r in caplog.records if r.name == "evm_archive_spark.pipeline"]
     assert len(warned) == 2
     assert all(r.levelno == logging.WARNING and r.exc_info for r in warned)
+
+
+def test_enriched_stream_unit_reads_each_window_once(spark, tmp_path, node):
+    """With enrichment a micro-batch needs its bounds before the write; it
+    still reads each window of the node once, and a replay leaves both
+    sinks as they were."""
+    from evm_archive_spark.pipeline import _stream_batch_writer
+
+    endpoint, calls = node
+    cfg = _cfg(tmp_path, EVM_ARCHIVE_ENDPOINT=endpoint, EVM_ARCHIVE_ENRICH_TIMESTAMPS="1")
+    logs_path, price_path = str(tmp_path / "out" / "logs"), str(tmp_path / "out" / "price")
+    write_batch = _stream_batch_writer(cfg, logs_path, price_path)
+    batch = _logs_batch(spark, endpoint, 0, 9)
+
+    write_batch(batch, 7)
+    assert calls["eth_getLogs"] == 2
+    once = _raw(spark, logs_path), _raw(spark, price_path)
+    assert len(once[0]) == 20 and len(once[1]) == 2
+    assert spark.read.parquet(logs_path).filter("block_timestamp IS NULL").count() == 0
+
+    write_batch(batch, 7)
+    assert calls["eth_getLogs"] == 4
+    assert (_raw(spark, logs_path), _raw(spark, price_path)) == once
+
+
+def test_batch_counts_match_the_sink(spark, tmp_path):
+    """run_batch's counts are the sink's row counts without reading it
+    back: on a first run, on a re-run that adds nothing, and over a sink
+    that already holds run_stream partitions."""
+    from evm_archive_spark.pipeline import run_stream
+
+    cfg = _cfg(tmp_path, EVM_ARCHIVE_TO_BLOCK="9")
+    _assert_counts_exact(spark, tmp_path, run_batch(spark, cfg))
+    _assert_counts_exact(spark, tmp_path, run_batch(spark, cfg))
+
+    run_stream(spark, _cfg(tmp_path, EVM_ARCHIVE_TO_BLOCK="14"), available_now=True).awaitTermination()
+    counts = run_batch(spark, _cfg(tmp_path))
+    assert counts["logs"] == 40
+    _assert_counts_exact(spark, tmp_path, counts)
+
+
+@pytest.mark.parametrize("contracts", ["", "0x" + "de" * 20])
+def test_batch_counts_when_its_partition_exists(spark, tmp_path, contracts):
+    """The last batch partition holds only tombstones of older blocks, and
+    fromBlock points at it: the run overwrites it when it writes rows, and
+    leaves it when it writes none (a contract the mock never emits)."""
+    from pyspark.sql import functions as F
+
+    from evm_archive_spark.pipeline import _write_idempotent
+
+    run_batch(spark, _cfg(tmp_path, EVM_ARCHIVE_TO_BLOCK="9"))
+    out = tmp_path / "out"
+    for t in ("logs", "price"):
+        old = spark.read.parquet(str(out / t)).drop("ingest_batch")
+        if t == "logs":
+            old = old.withColumn("removed", F.lit(True))
+        _write_idempotent(old.localCheckpoint(), str(out / t), 10)
+
+    counts = run_batch(spark, _cfg(tmp_path, EVM_ARCHIVE_FROM_BLOCK="10",
+                                   EVM_ARCHIVE_CONTRACTS=contracts))
+    _assert_counts_exact(spark, tmp_path, counts)
+    assert counts == {"logs": 40, "price": 4}
+    tombstones = spark.read.parquet(str(out / "logs")).filter("removed").count()
+    assert tombstones == (20 if contracts else 0)
+
+
+@pytest.mark.parametrize("enrich", ["", "1"])
+def test_empty_micro_batch_lands_nothing(spark, tmp_path, node, enrich):
+    """A micro-batch that carries no rows writes no ingest_batch partition,
+    calls no publish and probes no price."""
+    import os
+
+    from evm_archive_spark.pipeline import _stream_batch_writer
+
+    endpoint, calls = node
+    never = "0x" + "de" * 20  # an address the mock never emits
+    cfg = _cfg(tmp_path, EVM_ARCHIVE_ENDPOINT=endpoint, EVM_ARCHIVE_CONTRACTS=never,
+               EVM_ARCHIVE_ENRICH_TIMESTAMPS=enrich)
+    out = tmp_path / "out"
+    published = []
+    _stream_batch_writer(cfg, str(out / "logs"), str(out / "price"), published.append)(
+        _logs_batch(spark, endpoint, 0, 9, contracts=never), 3)
+    assert calls["eth_getLogs"] >= 1
+    assert published == []
+    assert calls["eth_call"] == 0 and calls["eth_getBlockByNumber"] == 0
+    for t in ("logs", "price"):
+        parts = os.listdir(out / t) if (out / t).exists() else []
+        assert not [p for p in parts if p.startswith("ingest_batch=")]
