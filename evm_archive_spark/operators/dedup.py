@@ -249,7 +249,7 @@ def minhash_near_duplicates(
 
 def simhash(col, seed: int = 42, n_bits: int = 64, hash_fn=None,
             token_split: str = " +") -> F.Column:
-    """SimHash over space-delimited tokens (Charikar '02), ``n_bits``
+    r"""SimHash over space-delimited tokens (Charikar '02), ``n_bits``
     wide.
 
     bit j of the fingerprint = sign of sum over tokens of (+1 if bit j of

@@ -154,27 +154,43 @@ def read_sink(
 def _resume_from(spark: SparkSession, path: str, from_block: int) -> tuple[int, dict]:
     """A10/A11: start = max(sink max + 1, FROM_BLOCK) (main.go:162-175,
     206-215) — reconciliation against the parquet sink.  The same
-    aggregate returns the sink's row count per ``ingest_batch`` key."""
+    aggregate returns the sink's row count per ``ingest_batch`` key.  A
+    missing sink starts at FROM_BLOCK without a query, and so does one
+    that holds no data files; any other read error raises."""
+    from pyspark.errors import AnalysisException
     from pyspark.sql import functions as F
 
-    try:
-        parts = (
-            spark.read.parquet(path).groupBy("ingest_batch")
-            .agg(F.max("block_number").alias("m"), F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-    except Exception:  # noqa: BLE001 — empty/missing sink == block 0
-        parts = []
+    parts = []
+    # ask the sink's Hadoop FileSystem (it may be remote): a read of a
+    # missing path plans a query only to fail it
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    if jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
+        try:
+            sink = spark.read.parquet(path)
+        except AnalysisException as e:
+            if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":  # no data files
+                raise
+        else:
+            parts = (
+                sink.groupBy("ingest_batch")
+                .agg(F.max("block_number").alias("m"), F.count(F.lit(1)).alias("n"))
+                .collect()
+            )
     mx = max((r["m"] for r in parts if r["m"] is not None), default=None)
     start = max((mx + 1) if mx is not None else 0, from_block)
     return start, {r["ingest_batch"]: r["n"] for r in parts}
 
 
-def _source(reader, fmt: str, cfg: dict, lo: int, hi: int, **extra):
+def _source(spark: SparkSession, fmt: str, cfg: dict, lo: int, hi: int,
+            stream: bool = False, **extra):
     """One ``evm_*`` source over blocks [lo, hi] (hi < 0: up to the chain
-    head) in ``blockStep`` windows, with any per-source options."""
+    head) in ``blockStep`` windows, packed into at most defaultParallelism
+    partitions (the planner process cannot see the session), with any
+    per-source options."""
     opts = {"endpoint": cfg["endpoint"], "fromBlock": lo, "toBlock": hi,
-            "blockStep": cfg["block_step"], **extra}
+            "blockStep": cfg["block_step"],
+            "maxPartitions": spark.sparkContext.defaultParallelism, **extra}
+    reader = spark.readStream if stream else spark.read
     return reader.format(fmt).options(**{k: str(v) for k, v in opts.items()}).load()
 
 
@@ -206,7 +222,7 @@ def _ingest_unit(logs, cfg: dict, logs_path: str, price_path: str,
         bounds = tuple(cached.agg(F.min("block_number"), F.max("block_number")).first())
     try:
         if cfg["enrich"] and bounds[0] is not None:
-            headers = _source(spark.read, "evm_blocks", cfg, *bounds)
+            headers = _source(spark, "evm_blocks", cfg, *bounds)
             logs = rpc.enrich_block_timestamps(logs, headers)
         key = bounds[0] if batch_id is None else -1 - batch_id
         seen = _write_idempotent(logs, logs_path, key)
@@ -220,7 +236,7 @@ def _ingest_unit(logs, cfg: dict, logs_path: str, price_path: str,
         return written
     _notify(publish, "logs")
     if cfg["tokens"] and cfg["oracles"]:
-        price = _source(spark.read, "evm_price", cfg, *(bounds or (seen["lo"], seen["hi"])),
+        price = _source(spark, "evm_price", cfg, *(bounds or (seen["lo"], seen["hi"])),
                         tokens=cfg["tokens"], oracles=cfg["oracles"])
         written["price"] = _write_idempotent(price.dropDuplicates(PRICE_PK), price_path, key)["rows"]
         _notify(publish, "price")
@@ -243,7 +259,7 @@ def run_batch(spark: SparkSession, cfg: dict | None = None) -> dict:
     hi = cfg["to_block"]
     if hi < 0:
         hi = rpc.chain_head(rpc.make_transport(cfg["endpoint"]))
-    logs = _source(spark.read, "evm_logs", cfg, lo, hi, contracts=cfg["contracts"])
+    logs = _source(spark, "evm_logs", cfg, lo, hi, contracts=cfg["contracts"])
     written = _ingest_unit(logs, cfg, logs_path, price_path, bounds=(lo, hi))
     # a write of no rows leaves partition lo as it was
     return {t: sum(rows.values()) - (rows.get(lo, 0) if written[t] else 0) + written[t]
@@ -285,7 +301,7 @@ def run_stream(
     price_path = os.path.join(cfg["out"], "price")
     start, _ = _resume_from(spark, logs_path, cfg["from_block"])
     stream = _source(
-        spark.readStream, "evm_logs", cfg, start, cfg["to_block"],
+        spark, "evm_logs", cfg, start, cfg["to_block"], stream=True,
         contracts=cfg["contracts"],
         maxBlocksPerBatch=cfg.get("max_blocks_per_batch", -1),
     )

@@ -23,7 +23,10 @@ workers inherit it; then it runs ``pyspark.daemon`` unchanged.
 ``PYTHONPATH``.  That covers its ``local[N]`` sessions only: a cluster
 deployment that reuses the setting must install this package on every
 executor (see SCALING.md).  The planner forks of Python data sources run
-under a fixed ``pyspark.daemon`` and still pay the re-reads.
+under a fixed ``pyspark.daemon`` that this setting does not reach; each one
+that unpickles an ``evm_*`` source imports ``sources/rpc.py``, which calls
+``install()`` there, so a reused planner worker skips the re-reads from
+its second call on.
 """
 
 from __future__ import annotations

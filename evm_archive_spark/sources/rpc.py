@@ -8,10 +8,12 @@ upsert, advance (main.go:217-241).  Re-architected for Spark
 - the *driver* plans offsets: ``initialOffset`` = resume cursor (A10/A11),
   ``latestOffset`` = chain head clamped by the admission cap (A2/A12);
 - *executors* fetch in parallel: the window splits into ``blockStep``-sized
-  ``InputPartition``s, each an independent ``eth_getLogs`` call with the
-  retry taxonomy (A4) — horizontal fetch parallelism the reference lacks
-  (its §6 ceiling is one window per RTT; ours is one window per RTT *per
-  task*);
+  windows, each an independent ``eth_getLogs`` call with the retry
+  taxonomy (A4) — horizontal fetch parallelism the reference lacks (its §6
+  ceiling is one window per RTT; ours is one window per RTT *per task*).
+  The ``maxPartitions`` option packs contiguous windows into at most that
+  many ``InputPartition``s (one Python task each), so a catch-up of many
+  windows runs in one wave of tasks; unset, each window is a partition;
 - rows come out in the storage shape (A5-A7 applied in the reader);
 - the sink side composes with ``sinks.upsert.foreach_batch_upsert``.
 
@@ -36,6 +38,7 @@ import urllib.error
 import urllib.request
 from dataclasses import dataclass
 
+from pyspark import SparkFiles
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -45,6 +48,15 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from ..schemas import BLOCKS_SCHEMA, LOGS_SCHEMA, PRICE_SCHEMA
+
+if SparkFiles._is_running_on_worker:
+    # a Python worker unpickling an evm_* source.  The data source planner
+    # forks run under a fixed pyspark.daemon, which spark.python.daemon.module
+    # does not reach: give this process the stamped zip cache, so a reused
+    # worker skips the pyspark.zip re-reads from its next call on
+    from .. import pydaemon
+
+    pydaemon.install()
 
 RETRYABLE_HTTP = {429, 503, 504}
 SKIP_RPC_CODE = -32602  # skip window, no retry (main.go:141-143)
@@ -341,6 +353,8 @@ def _opts(options) -> dict:
         "from_block": int(options.get("fromblock", "0")),
         "to_block": int(options.get("toblock", "-1")),
         "block_step": int(options.get("blockstep", "100")),  # main.go:77 default
+        # <= 0: one partition per window
+        "max_partitions": int(options.get("maxpartitions", "0")),
         # <= 0 = uncapped.  The cap is admission control for *continuous*
         # tail-follow (processingTime trigger), where the reader observes
         # batch starts and clamps the next window.  Leave 0 for
@@ -359,10 +373,10 @@ def _opts(options) -> dict:
 
 class _BlockRangeReader:
     """What every block-range reader shares: its options, its transport,
-    ``blockStep`` window planning and the empty-range guard.  A subclass
-    supplies only ``_window(transport, rng)``, the rows of one window;
-    ``partitions()`` is the batch planner (a stream reader plans from its
-    offsets instead)."""
+    ``blockStep`` window planning and packing, and the empty-range guard.
+    A subclass supplies only ``_window(transport, rng)``, the rows of one
+    window; ``partitions()`` is the batch planner (a stream reader plans
+    from its offsets instead)."""
 
     def __init__(self, options):
         self.o = _opts(options)
@@ -372,9 +386,20 @@ class _BlockRangeReader:
         return make_transport(o["endpoint"], o["retry_seconds"], o["max_retries"])
 
     def _plan(self, lo: int, hi: int) -> list[BlockRange]:
-        # already caught up (lo > hi): the DataSource API needs >= 1
-        # partition, so plan one empty placeholder range
-        return plan_ranges(lo, hi, self.o["block_step"]) or [BlockRange(lo, lo - 1)]
+        """The ``blockStep`` windows over [lo, hi], packed contiguously and
+        evenly into at most ``maxPartitions`` partitions, each the block
+        range its windows cover; ``read`` splits it back into the same
+        windows."""
+        step, most = self.o["block_step"], self.o["max_partitions"]
+        windows = len(range(lo, hi + 1, step))
+        if not windows:
+            # already caught up: the DataSource API needs >= 1 partition,
+            # so plan one empty placeholder range
+            return [BlockRange(lo, lo - 1)]
+        parts = min(windows, most) if most > 0 else windows
+        # partition i takes windows [i*windows//parts, (i+1)*windows//parts)
+        cuts = [lo + i * windows // parts * step for i in range(parts + 1)]
+        return [BlockRange(a, min(b - 1, hi)) for a, b in zip(cuts, cuts[1:])]
 
     def partitions(self):
         o = self.o
@@ -384,8 +409,9 @@ class _BlockRangeReader:
         return self._plan(o["from_block"], end)
 
     def read(self, partition: BlockRange):
-        if partition.end >= partition.start:
-            yield from self._window(self._transport(), partition)
+        t = self._transport()
+        for rng in plan_ranges(partition.start, partition.end, self.o["block_step"]):
+            yield from self._window(t, rng)
 
 
 class EvmLogsBatchReader(_BlockRangeReader, DataSourceReader):
@@ -436,7 +462,8 @@ class EvmLogsDataSource(DataSource):
 
     Options: endpoint, contracts (CSV), fromBlock, toBlock, blockStep,
     maxBlocksPerBatch, retrySeconds, maxRetries — the reference's env
-    surface (A14, main.go:18-91) as reader options."""
+    surface (A14, main.go:18-91) as reader options — and maxPartitions
+    (unset: one partition per ``blockStep`` window)."""
 
     @classmethod
     def name(cls):

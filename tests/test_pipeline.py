@@ -63,13 +63,13 @@ def node():
     srv.server_close()
 
 
-def _logs_batch(spark, endpoint, lo, hi, **opts):
+def _logs_batch(spark, endpoint, lo, hi, step=5, **opts):
     from evm_archive_spark.sources import rpc
 
     rpc.register(spark)
     return (
         spark.read.format("evm_logs")
-        .options(endpoint=endpoint, fromBlock=str(lo), toBlock=str(hi), blockStep="5", **opts)
+        .options(endpoint=endpoint, fromBlock=str(lo), toBlock=str(hi), blockStep=str(step), **opts)
         .load()
     )
 
@@ -421,3 +421,63 @@ def test_empty_micro_batch_lands_nothing(spark, tmp_path, node, enrich):
     for t in ("logs", "price"):
         parts = os.listdir(out / t) if (out / t).exists() else []
         assert not [p for p in parts if p.startswith("ingest_batch=")]
+
+
+def test_packed_batch_reads_each_window_once(spark, tmp_path, node):
+    """More windows than defaultParallelism: run_batch packs them into one
+    wave of partitions, still with one eth_getLogs per window, and lands
+    the rows of the unpacked layout and one price per window start."""
+    from evm_archive_spark.pipeline import _source
+
+    endpoint, calls = node
+    cfg = _cfg(tmp_path, EVM_ARCHIVE_ENDPOINT=endpoint, EVM_ARCHIVE_BLOCK_STEP="2")
+    counts = run_batch(spark, cfg)
+    assert calls["eth_getLogs"] == 10  # 20 blocks / blockStep 2
+    assert counts == {"logs": 40, "price": 10}
+    parallelism = spark.sparkContext.defaultParallelism
+    assert parallelism < 10
+    assert _source(spark, "evm_logs", cfg, 0, 19).rdd.getNumPartitions() == parallelism
+    out = tmp_path / "out"
+    sink = spark.read.parquet(str(out / "logs")).drop("ingest_batch")
+    unpacked = _logs_batch(spark, endpoint, 0, 19, step=2)
+    assert unpacked.rdd.getNumPartitions() == 10
+    assert sorted(map(tuple, sink.collect())) == sorted(map(tuple, unpacked.collect()))
+    prices = spark.read.parquet(str(out / "price")).select("block_number").collect()
+    assert sorted(r[0] for r in prices) == list(range(0, 20, 2))
+
+
+def test_resume_from_a_missing_sink_reads_nothing(spark, tmp_path, monkeypatch):
+    """A catch-up into a new output plans no parquet read and starts no
+    Spark job: it starts at FROM_BLOCK."""
+    from pyspark.sql import DataFrameReader
+
+    from evm_archive_spark.pipeline import _resume_from
+
+    reads = []
+    parquet = DataFrameReader.parquet
+    monkeypatch.setattr(DataFrameReader, "parquet",
+                        lambda self, *paths, **kw: reads.append(paths) or parquet(self, *paths, **kw))
+    sc = spark.sparkContext
+    sc.setJobGroup("resume-missing", "resume from a missing sink")
+    try:
+        assert _resume_from(spark, str(tmp_path / "nowhere"), 7) == (7, {})
+        assert sc.statusTracker().getJobIdsForGroup("resume-missing") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert reads == []
+
+    (tmp_path / "empty").mkdir()  # a sink with no data files
+    assert _resume_from(spark, str(tmp_path / "empty"), 7) == (7, {})
+
+
+def test_corrupt_sink_fails_the_catch_up(spark, tmp_path):
+    """A sink that cannot be read is an error, not an empty sink: the
+    catch-up raises instead of restarting ingest at FROM_BLOCK."""
+    cfg = _cfg(tmp_path, EVM_ARCHIVE_TO_BLOCK="9")
+    run_batch(spark, cfg)
+    bad = tmp_path / "out" / "logs" / "ingest_batch=0" / "part-99999-corrupt.parquet"
+    bad.write_bytes(b"not a parquet file" * 8)
+    with pytest.raises(Exception, match="(?i)parquet"):
+        run_batch(spark, _cfg(tmp_path))
+    assert bad.exists()

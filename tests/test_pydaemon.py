@@ -42,6 +42,59 @@ def test_reused_worker_keeps_the_pyspark_zip_directory(spark):
     pytest.fail("no worker ran two of the tasks")
 
 
+def test_reused_planner_worker_keeps_the_pyspark_zip_directory(spark):
+    """The planner forks of Python data sources run under a fixed
+    pyspark.daemon.  Importing the evm_* sources there installs the
+    stamped cache, so a reused planner worker finds a previous read's mark
+    on its pyspark.zip directory.  The probe source subclasses evm_logs and
+    marks the directory from partitions(), which runs in the planner."""
+    from dataclasses import dataclass
+
+    from pyspark.sql.datasource import DataSourceReader, InputPartition
+
+    from evm_archive_spark.sources import rpc
+
+    @dataclass
+    class Seen(InputPartition):
+        pid: int
+        seen: int
+
+    class MarkReader(DataSourceReader):
+        def partitions(self):
+            import os
+            import zipimport
+
+            files = next(v for k, v in zipimport._zip_directory_cache.items()
+                         if k.endswith("pyspark.zip"))
+            seen = files.get("__pydaemon_test__", -1)
+            files["__pydaemon_test__"] = os.getpid()
+            return [Seen(os.getpid(), seen)]
+
+        def read(self, partition):
+            yield (partition.pid, partition.seen)
+
+    class PlannerProbe(rpc.EvmLogsDataSource):
+        @classmethod
+        def name(cls):
+            return "evm_planner_probe"
+
+        def schema(self):
+            return "pid long, seen long"
+
+        def reader(self, schema):
+            return MarkReader()
+
+    spark.dataSource.register(PlannerProbe)
+    pids = set()
+    for _ in range(16):
+        pid, seen = spark.read.format("evm_planner_probe").load().collect()[0]
+        if pid in pids:
+            assert seen == pid
+            return
+        pids.add(pid)
+    pytest.fail("no planner worker planned two of the reads")
+
+
 def test_invalidate_caches_rereads_only_a_changed_zip(tmp_path, monkeypatch):
     path = str(tmp_path / "mods.zip")
     with zipfile.ZipFile(path, "w") as z:

@@ -25,6 +25,38 @@ def test_plan_ranges_window_math():
     assert [(x.start, x.end) for x in rpc.plan_ranges(5, 5, 100)] == [(5, 5)]
 
 
+@pytest.mark.parametrize("lo,hi,step,n", [
+    (0, 499, 100, 4), (7, 1006, 100, 4), (0, 19, 2, 4), (0, 19, 5, 4),
+    (3, 3, 10, 4), (0, 250, 100, 8), (10, 9999, 7, 3), (0, 99, 10, 1),
+])
+def test_plan_packs_windows(lo, hi, step, n):
+    """maxPartitions packs the blockStep windows: contiguous, covering
+    [lo, hi] exactly, at most n partitions, and read() splits them back
+    into the unpacked windows, each starting on the same grid."""
+    opts = {"endpoint": "mock://head=99", "blockstep": str(step)}
+    windows = [(w.start, w.end) for w in rpc.EvmLogsBatchReader(opts)._plan(lo, hi)]
+    assert windows == [(w.start, w.end) for w in rpc.plan_ranges(lo, hi, step)]
+
+    r = rpc.EvmLogsBatchReader({**opts, "maxpartitions": str(n)})
+    parts = r._plan(lo, hi)
+    assert len(parts) == min(n, len(windows))
+    assert parts[0].start == lo and parts[-1].end == hi
+    assert all(b.start == a.end + 1 for a, b in zip(parts, parts[1:]))
+    sizes = [len(rpc.plan_ranges(p.start, p.end, step)) for p in parts]
+    assert max(sizes) - min(sizes) <= 1
+    assert [(w.start, w.end) for p in parts
+            for w in rpc.plan_ranges(p.start, p.end, step)] == windows
+
+
+@pytest.mark.parametrize("n", ["", "4"])
+def test_plan_caught_up_is_one_empty_placeholder(n):
+    r = rpc.EvmLogsBatchReader({"endpoint": "mock://head=99", "blockstep": "10",
+                                "maxpartitions": n or "0"})
+    parts = r._plan(50, 49)
+    assert [(p.start, p.end) for p in parts] == [(50, 49)]
+    assert list(r.read(parts[0])) == []
+
+
 def test_mock_transport_deterministic():
     t = rpc.make_transport("mock://head=50,logs_per_block=2")
     logs1 = t.call("eth_getLogs", [{"fromBlock": "0x0", "toBlock": "0x4"}])
