@@ -281,12 +281,6 @@ def values_cte(name: str, columns: list[str], rows: list[tuple]) -> str:
 LOGS_COLUMNS = [f.name for f in LOGS_SCHEMA.fields]
 
 
-def logs_cte() -> str:
-    # DuckDB infers bigint/boolean/varchar from the literals; the
-    # all-NULL block_timestamp column is cast via a wrapper if needed.
-    return values_cte("logs", LOGS_COLUMNS, [r[:12] + (None,) for r in logs_rows()])
-
-
 def price_cte() -> str:
     return values_cte(
         "price_fix", ["address", "block_number", "price"], PRICE_ROWS

@@ -299,8 +299,6 @@ def to_bool(pos, data) -> Column:
 # B18-B20: type dispatch + arrays (init.sql:166-207)
 # --------------------------------------------------------------------------
 
-_BOOL_STR = {True: "true", False: "false"}
-
 
 def to_element(pos, data, type_name: str) -> Column:
     """B18: decode one word as ``type_name``, rendered as text.
@@ -384,14 +382,6 @@ def to_fixed_array(pos, data, type_name: str, size: int) -> Column:
     if size <= 0:
         return F.array().cast("array<string>")
     return F.array(*[to_element(pos + i * WORD, d, type_name) for i in range(size)])
-
-
-def to_fixed_array_str(pos, data, type_name: str, size: int) -> Column:
-    return F.concat(
-        F.lit("["),
-        F.array_join(to_fixed_array(pos, data, type_name, size), ","),
-        F.lit("]"),
-    )
 
 
 # --------------------------------------------------------------------------

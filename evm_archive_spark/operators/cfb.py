@@ -26,7 +26,6 @@ MAGIC = b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1"
 FREESECT = 0xFFFFFFFF
 ENDOFCHAIN = 0xFFFFFFFE
 FATSECT = 0xFFFFFFFD
-DIFSECT = 0xFFFFFFFC
 MAX_SECTORS = 1 << 20  # chain-walk cap (~512 MB at 512-byte sectors)
 
 

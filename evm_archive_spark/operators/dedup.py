@@ -70,34 +70,6 @@ def shingles(col, k: int = 5) -> F.Column:
     )
 
 
-def minhash_signature(col, num_perm: int = 32, k: int = 5, seed: int = 42) -> F.Column:
-    """MinHash signature as a single Column: sig[j] = min over shingles of
-    xxhash64(xxhash64(s, seed), seed+j) (Broder '97 resemblance sketch;
-    permutations simulated by re-hashing one base hash).
-
-    The base-hash array is bound once per row (``bind_once``): inlined,
-    each of the ``num_perm`` per-permutation transforms would re-evaluate
-    the whole shingle+hash subtree (HOF lambdas are outside whole-stage
-    codegen's subexpression elimination).  For corpus-scale signature
-    computation still prefer ``minhash_signatures`` — the relational
-    explode/agg formulation with map-side partial aggregation.
-    """
-    from .util import bind_once
-
-    base = F.transform(shingles(col, k), lambda s: F.xxhash64(s, F.lit(seed)))
-    return bind_once(
-        base,
-        lambda b: F.array(
-            *[
-                F.array_min(
-                    F.transform(b, lambda h: F.xxhash64(h, F.lit(seed + j)))
-                )
-                for j in range(num_perm)
-            ]
-        ),
-    )
-
-
 def minhash_signatures(
     df: DataFrame,
     id_col: str,

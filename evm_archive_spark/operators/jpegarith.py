@@ -653,8 +653,6 @@ for _u in range(8):
         _FDCT_C[_u, _x] = 0.5 * _c * np.cos(
             (2 * _x + 1) * _u * np.pi / 16.0)
 
-_ZZ_OF_NATURAL = np.argsort(np.array(_ZIGZAG))  # natural pos -> zz index
-
 DEFAULT_DC_COND = (0, 1)       # T.81 default L/U thresholds
 DEFAULT_AC_KX = 5              # T.81 default Kx
 

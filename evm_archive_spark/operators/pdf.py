@@ -418,8 +418,6 @@ def _decode_stream(objs: dict, d: dict, raw: bytes) -> bytes:
     return out
 
 
-_TEXT_OPS = {b"Tj", b"'", b'"', b"TJ", b"Td", b"TD", b"T*", b"Tm",
-             b"BT", b"ET"}
 _OP_RE = re.compile(rb"[A-Za-z'\"*]+")
 
 

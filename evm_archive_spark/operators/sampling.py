@@ -45,14 +45,6 @@ def hash_split(
     return df.withColumn(split_col, expr)
 
 
-def deterministic_sample(
-    df: DataFrame, key: str, fraction: float
-) -> DataFrame:
-    """Keep a stable ``fraction`` of rows by key hash (same rows every
-    run, no seed plumbing)."""
-    return df.filter(hash_bucket(key) < int(round(fraction * 10_000)))
-
-
 def deterministic_shuffle(
     df: DataFrame, key: str, partitions: int | None = None,
     *, epoch: int | None = None,

@@ -34,13 +34,6 @@ def dot(a: str, b: str) -> F.Column:
     return F.expr(_DOT.format(a=a, b=b))
 
 
-def quantized_dot(a: str, b: str) -> F.Column:
-    """Integer-quantized (floor(x*1000)) dot product — exact BIGINT sums,
-    deterministic across engines and partitionings (used by the parity
-    gate, where float accumulation order would otherwise differ)."""
-    return F.expr(_QDOT.format(a=a, b=b))
-
-
 def norm(a: str) -> F.Column:
     return F.sqrt(F.expr(_DOT.format(a=a, b=a)))
 

@@ -155,9 +155,9 @@ def _resume_from(spark: SparkSession, path: str, from_block: int) -> tuple[int, 
     """A10/A11: start = max(sink max + 1, FROM_BLOCK) (main.go:162-175,
     206-215) — reconciliation against the parquet sink.  The same
     aggregate returns the sink's row count per ``ingest_batch`` key.  A
-    missing sink starts at FROM_BLOCK without a query, and so does one
-    that holds no data files; any other read error raises."""
-    from pyspark.errors import AnalysisException
+    missing sink starts at FROM_BLOCK without a query, and one that holds
+    no data files without a job; an unreadable sink, or rows with no
+    ``block_number``, raise."""
     from pyspark.sql import functions as F
 
     parts = []
@@ -165,18 +165,18 @@ def _resume_from(spark: SparkSession, path: str, from_block: int) -> tuple[int, 
     # missing path plans a query only to fail it
     jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
     if jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
-        try:
-            sink = spark.read.parquet(path)
-        except AnalysisException as e:
-            if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":  # no data files
-                raise
-        else:
-            parts = (
-                sink.groupBy("ingest_batch")
-                .agg(F.max("block_number").alias("m"), F.count(F.lit(1)).alias("n"))
-                .collect()
-            )
-    mx = max((r["m"] for r in parts if r["m"] is not None), default=None)
+        # a fixed schema reads no footer to infer one, but reads a file
+        # without block_number as NULLs: the k == n check below
+        parts = (
+            spark.read.schema("block_number BIGINT, ingest_batch BIGINT").parquet(path)
+            .groupBy("ingest_batch")
+            .agg(F.max("block_number").alias("m"), F.count(F.lit(1)).alias("n"),
+                 F.count("block_number").alias("k"))
+            .collect()
+        )
+    if any(r["k"] != r["n"] for r in parts):
+        raise ValueError(f"sink {path} holds rows with no block_number")
+    mx = max((r["m"] for r in parts), default=None)
     start = max((mx + 1) if mx is not None else 0, from_block)
     return start, {r["ingest_batch"]: r["n"] for r in parts}
 

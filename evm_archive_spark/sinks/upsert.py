@@ -397,13 +397,3 @@ CREATE TABLE IF NOT EXISTS logs (
 ) PARTITION BY HASH (block_hash);
 {parts}
 """
-
-
-PRICE_DDL_GENERIC = """
-CREATE TABLE IF NOT EXISTS price (
-  address       TEXT,
-  block_number  BIGINT,
-  price         DECIMAL(20,0),
-  PRIMARY KEY (address, block_number)
-)
-"""

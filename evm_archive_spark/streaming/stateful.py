@@ -30,8 +30,6 @@ _OUT_SCHEMA = (
 )
 _STATE_SCHEMA = "n BIGINT, s BIGINT, mn BIGINT, mx BIGINT"
 
-_US = 1_000_000
-
 
 def _totals_fn(
     key: tuple[Any, ...],

@@ -13,12 +13,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .schemas import TESTDATA_TABLES
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.1"
-
-
-def sf_dir_from_env() -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table.

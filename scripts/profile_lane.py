@@ -9,7 +9,6 @@ logging on, then prints per-stage executor run/CPU time and shuffle
 bytes, plus per-lane wall.  Build-phase actions (eager checkpoints,
 centroid collects) are timed separately from the final plan's action.
 """
-import json
 import sys
 import time
 import tempfile
@@ -24,6 +23,7 @@ def main() -> None:
     sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
     import __spark_entry__ as E
     from evm_archive_spark.session import get_spark
+    from perfbench.spans import read_event_logs
 
     # same session shape as bench.py, plus event logging
     spark = get_spark(
@@ -53,51 +53,19 @@ def main() -> None:
         print(f"{name}: build {t1-t0:.2f}s action {t2-t1:.2f}s", flush=True)
     spark.stop()
 
-    # parse event log: stage submit time -> attribute to lane span
-    stages = []
-    logfiles = [p for p in Path(evdir).rglob("*") if p.is_file()]
-    for p in logfiles:
-        for line in p.open():
-            try:
-                ev = json.loads(line)
-            except json.JSONDecodeError:
-                continue
-            if ev.get("Event") == "SparkListenerStageCompleted":
-                si = ev["Stage Info"]
-                sub = si.get("Submission Time", 0) / 1000.0
-                run = cpu = sread = swrite = inp = gc = fwait = 0
-                for acc in si.get("Accumulables", []):
-                    n, v = acc.get("Name"), acc.get("Value", 0)
-                    if n == "internal.metrics.executorRunTime":
-                        run = v / 1000.0
-                    elif n == "internal.metrics.executorCpuTime":
-                        cpu = v / 1e9
-                    elif n == "internal.metrics.jvmGCTime":
-                        gc = v / 1000.0
-                    elif n == "internal.metrics.shuffle.read.fetchWaitTime":
-                        fwait = v / 1000.0
-                    elif n == "internal.metrics.shuffle.read.remoteBytesRead":
-                        sread += v
-                    elif n == "internal.metrics.shuffle.read.localBytesRead":
-                        sread += v
-                    elif n == "internal.metrics.shuffle.write.bytesWritten":
-                        swrite = v
-                    elif n == "internal.metrics.input.bytesRead":
-                        inp = v
-                stages.append((sub, si["Stage ID"], si.get("Number of Tasks"),
-                               run, cpu, gc, fwait, sread, swrite, inp,
-                               (si.get("Stage Name") or "")[:60]))
-    t_start = min(s[0] for s in spans.values()) if spans else 0
+    # stage submit time -> attribute to lane span
+    stages = sorted(read_event_logs(Path(evdir)), key=lambda st: (st["submit_s"], st["stage"]))
     epoch0 = time.time() - time.monotonic()
     print("\nstage  tasks  run_s   cpu_s    gc_s  fwait_s shuf_r(MB) shuf_w(MB) input(MB)")
     for name, (t0, t1, t2) in spans.items():
         print(f"--- {name} (build {t1-t0:.2f}s, action {t2-t1:.2f}s)")
-        for sub, sid, ntask, run, cpu, gc, fw, sr, sw, inp, sname in sorted(stages):
-            if epoch0 + t0 <= sub <= epoch0 + t2:
-                phase = "build " if sub < epoch0 + t1 else "action"
-                print(f"  [{phase}] s{sid:<4} {ntask:<5} {run:7.2f} {cpu:7.2f} "
-                      f"{gc:7.2f} {fw:7.2f} {sr/1e6:9.1f} {sw/1e6:9.1f} "
-                      f"{inp/1e6:9.1f}")
+        for st in stages:
+            if epoch0 + t0 <= st["submit_s"] <= epoch0 + t2:
+                phase = "build " if st["submit_s"] < epoch0 + t1 else "action"
+                print(f"  [{phase}] s{st['stage']:<4} {st['tasks']:<5} {st['run_s']:7.2f} "
+                      f"{st['cpu_s']:7.2f} {st['gc_s']:7.2f} {st['fetch_wait_s']:7.2f} "
+                      f"{st['shuffle_read_bytes']/1e6:9.1f} {st['shuffle_write_bytes']/1e6:9.1f} "
+                      f"{st['input_bytes']/1e6:9.1f}")
 
 
 if __name__ == "__main__":

@@ -448,7 +448,8 @@ def test_packed_batch_reads_each_window_once(spark, tmp_path, node):
 
 def test_resume_from_a_missing_sink_reads_nothing(spark, tmp_path, monkeypatch):
     """A catch-up into a new output plans no parquet read and starts no
-    Spark job: it starts at FROM_BLOCK."""
+    Spark job: it starts at FROM_BLOCK.  One into a sink directory that
+    holds no data files starts no job either."""
     from pyspark.sql import DataFrameReader
 
     from evm_archive_spark.pipeline import _resume_from
@@ -458,17 +459,30 @@ def test_resume_from_a_missing_sink_reads_nothing(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(DataFrameReader, "parquet",
                         lambda self, *paths, **kw: reads.append(paths) or parquet(self, *paths, **kw))
     sc = spark.sparkContext
-    sc.setJobGroup("resume-missing", "resume from a missing sink")
+    (tmp_path / "empty").mkdir()  # a sink with no data files
     try:
+        sc.setJobGroup("resume-missing", "resume from a missing sink")
         assert _resume_from(spark, str(tmp_path / "nowhere"), 7) == (7, {})
         assert sc.statusTracker().getJobIdsForGroup("resume-missing") == []
+        assert reads == []
+
+        sc.setJobGroup("resume-empty", "resume from an empty sink")
+        assert _resume_from(spark, str(tmp_path / "empty"), 7) == (7, {})
+        assert sc.statusTracker().getJobIdsForGroup("resume-empty") == []
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert reads == []
 
-    (tmp_path / "empty").mkdir()  # a sink with no data files
-    assert _resume_from(spark, str(tmp_path / "empty"), 7) == (7, {})
+
+def test_sink_without_block_number_fails_the_catch_up(spark, tmp_path):
+    """Parquet files that carry no block_number are not an empty sink: the
+    catch-up raises instead of restarting ingest at FROM_BLOCK."""
+    cfg = _cfg(tmp_path, EVM_ARCHIVE_TO_BLOCK="9")
+    part = tmp_path / "out" / "logs" / "ingest_batch=0"
+    spark.range(3).withColumnRenamed("id", "log_index").write.parquet(str(part))
+    with pytest.raises(Exception, match="block_number"):
+        run_batch(spark, cfg)
+    assert [p.name for p in part.parent.iterdir()] == ["ingest_batch=0"]
 
 
 def test_corrupt_sink_fails_the_catch_up(spark, tmp_path):
