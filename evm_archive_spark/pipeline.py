@@ -53,6 +53,13 @@ blocks it carries) and ``run_batch``'s returned counts.  A micro-batch with
 timestamp enrichment needs its bounds before the write, for the header
 range, so it persists the deduped batch and takes them from that one read.
 
+Batch reads plan on the driver.  ``run_batch``'s logs read and every
+unit's header and price reads go through ``rpc.read_batch``: the source's
+reader plans its partitions in this process and one ``mapInArrow`` job
+reads them, so ``run_batch`` registers no data source and starts no
+Python planner process.  ``run_stream`` registers the sources, since its
+logs reader is a Python streaming source.
+
 ``run_batch`` resumes from the sink's max block + 1, ``run_stream`` from
 its checkpoint (on first start, from the sink's max block + 1).  The
 resume aggregate also counts each sink partition, so ``run_batch`` returns
@@ -185,13 +192,17 @@ def _source(spark: SparkSession, fmt: str, cfg: dict, lo: int, hi: int,
             stream: bool = False, **extra):
     """One ``evm_*`` source over blocks [lo, hi] (hi < 0: up to the chain
     head) in ``blockStep`` windows, packed into at most defaultParallelism
-    partitions (the planner process cannot see the session), with any
-    per-source options."""
+    partitions, with any per-source options.  A batch read is planned on
+    the driver (``rpc.read_batch``); a stream is the registered Python
+    streaming source, whose planner process cannot see the session and so
+    takes the partition count as an option."""
     opts = {"endpoint": cfg["endpoint"], "fromBlock": lo, "toBlock": hi,
             "blockStep": cfg["block_step"],
             "maxPartitions": spark.sparkContext.defaultParallelism, **extra}
-    reader = spark.readStream if stream else spark.read
-    return reader.format(fmt).options(**{k: str(v) for k, v in opts.items()}).load()
+    opts = {k: str(v) for k, v in opts.items()}
+    if stream:
+        return spark.readStream.format(fmt).options(**opts).load()
+    return rpc.read_batch(spark, fmt, opts)
 
 
 def _notify(publish, topic: str) -> None:
@@ -249,7 +260,6 @@ def run_batch(spark: SparkSession, cfg: dict | None = None) -> dict:
     per table: the resume aggregate's, less the partition the unit
     overwrote, plus the rows it wrote."""
     cfg = cfg or env_config()
-    rpc.register(spark)
     logs_path = os.path.join(cfg["out"], "logs")
     price_path = os.path.join(cfg["out"], "price")
     lo, before = _resume_from(spark, logs_path, cfg["from_block"])

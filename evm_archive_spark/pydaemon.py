@@ -22,7 +22,10 @@ workers inherit it; then it runs ``pyspark.daemon`` unchanged.
 ``spark.python.daemon.module`` and puts the package root on the workers'
 ``PYTHONPATH``.  That covers its ``local[N]`` sessions only: a cluster
 deployment that reuses the setting must install this package on every
-executor (see SCALING.md).  The planner forks of Python data sources run
+executor (see SCALING.md).  The pipeline's batch reads
+(``sources.rpc.read_batch``) are ``mapInArrow`` tasks and run under this
+daemon.  The planner forks of Python data sources, which only
+``spark.read.format("evm_*")`` and ``spark.readStream.format`` start, run
 under a fixed ``pyspark.daemon`` that this setting does not reach; each one
 that unpickles an ``evm_*`` source imports ``sources/rpc.py``, which calls
 ``install()`` there, so a reused planner worker skips the re-reads from

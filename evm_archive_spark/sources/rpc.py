@@ -14,8 +14,16 @@ upsert, advance (main.go:217-241).  Re-architected for Spark
   The ``maxPartitions`` option packs contiguous windows into at most that
   many ``InputPartition``s (one Python task each), so a catch-up of many
   windows runs in one wave of tasks; unset, each window is a partition;
-- rows come out in the storage shape (A5-A7 applied in the reader);
+- rows come out in the storage shape (A5-A7 applied in the reader), as
+  Arrow batches from every reader;
 - the sink side composes with ``sinks.upsert.foreach_batch_upsert``.
+
+Two faces read the same readers.  ``register`` makes the ``DataSource``
+classes ``spark.read.format("evm_*")`` / ``spark.readStream.format(...)``
+sources, planned by Python planner processes that Spark starts on the
+driver.  ``read_batch`` plans a batch read in the driver process itself
+and reads it in one ``mapInArrow`` job, with the same rows and partitions
+and no planner process: the pipeline's batch reads use it.
 
 The transport is selected by endpoint scheme: ``http(s)://`` uses stdlib
 urllib (no extra deps); ``mock://`` is a deterministic in-process fake
@@ -25,7 +33,8 @@ the test strategy the reference lacks entirely (SURVEY §5.1: zero tests).
 Retry taxonomy (main.go:93-160 parity):
 - HTTP 429/503/504 and transport errors -> sleep ``retry_seconds``, retry
   (bounded by ``max_retries``; the reference retries forever);
-- RPC error code -32602 -> skip the window, emit nothing (main.go:141-143);
+- RPC error code -32602 -> skip the window, emit nothing (main.go:141-143)
+  but one WARNING naming the source, the block range and the node's message;
 - any other RPC error -> raise (the reference log.Fatalf's, main.go:145).
 """
 
@@ -33,6 +42,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import logging
 import time
 import urllib.error
 import urllib.request
@@ -57,6 +67,8 @@ if SparkFiles._is_running_on_worker:
     from .. import pydaemon
 
     pydaemon.install()
+
+logger = logging.getLogger(__name__)
 
 RETRYABLE_HTTP = {429, 503, 504}
 SKIP_RPC_CODE = -32602  # skip window, no retry (main.go:141-143)
@@ -172,14 +184,19 @@ class MockTransport:
             "removed": False,
         }
 
+    def _poison(self, lo: int, hi: int) -> None:
+        """``skip_from``/``skip_to``: every call at a block in that range
+        answers -32602."""
+        if self.skip_from >= 0 and lo <= self.skip_to and hi >= self.skip_from:
+            raise SkipWindow("mock poison window")
+
     def call(self, method: str, params: list) -> object:
         if method == "eth_blockNumber":
             return _hex(self.head)
         if method == "eth_getLogs":
             q = params[0]
             lo, hi = _from_hex(q["fromBlock"]), _from_hex(q["toBlock"])
-            if self.skip_from >= 0 and lo <= self.skip_to and hi >= self.skip_from:
-                raise SkipWindow("mock poison window")
+            self._poison(lo, hi)
             out = []
             addresses = q.get("address")
             for b in range(lo, hi + 1):
@@ -203,10 +220,12 @@ class MockTransport:
         if method == "eth_call":
             to = params[0]["to"]
             block = _from_hex(params[1])
+            self._poison(block, block)
             price = int(self._h("price", to, block)[:12], 16)
             return "0x" + format(price, "064x")
         if method == "eth_getBlockByNumber":
             block = _from_hex(params[0])
+            self._poison(block, block)
             if block > self.head:
                 return None  # geth returns null for unknown blocks
             # deterministic 12s block time from a fixed genesis
@@ -271,6 +290,11 @@ def _wire_to_row(log: dict) -> tuple:
     )
 
 
+def _skipped(source: str, lo: int, hi: int, err: SkipWindow) -> None:
+    """The one record a poison window leaves: it yields no rows."""
+    logger.warning("%s: skipped blocks [%d, %d]: %s", source, lo, hi, err)
+
+
 def _fetch_range(transport, rng: BlockRange, contracts: list[str] | None):
     """A1: one eth_getLogs call per sub-range; SkipWindow -> empty."""
     query = {"fromBlock": _hex(rng.start), "toBlock": _hex(rng.end)}
@@ -278,16 +302,18 @@ def _fetch_range(transport, rng: BlockRange, contracts: list[str] | None):
         query["address"] = contracts
     try:
         logs = transport.call("eth_getLogs", [query])
-    except SkipWindow:
+    except SkipWindow as e:
+        _skipped("evm_logs", rng.start, rng.end, e)
         return
     for log in logs:
         yield _wire_to_row(log)
 
 
-# Arrow-side mirrors of LOGS_SCHEMA / BLOCKS_SCHEMA.  The Python DataSource
-# API accepts ``pyarrow.RecordBatch`` yields from ``read()``; one Arrow
-# buffer per batch replaces one pickled tuple per row — the round-1
-# q_ingest_source bottleneck (1.85k rows/s vs 151k on the JVM path).
+# Arrow-side mirrors of LOGS_SCHEMA / BLOCKS_SCHEMA / PRICE_SCHEMA.  Both
+# the Python DataSource API and ``mapInArrow`` accept ``pyarrow.RecordBatch``
+# yields from ``read()``; one Arrow buffer per batch replaces one pickled
+# tuple per row — the round-1 q_ingest_source bottleneck (1.85k rows/s vs
+# 151k on the JVM path).
 def _arrow_logs_schema():
     import pyarrow as pa
 
@@ -318,6 +344,18 @@ def _arrow_blocks_schema():
             ("block_number", pa.int64()),
             ("block_hash", pa.string()),
             ("block_timestamp", pa.timestamp("us")),
+        ]
+    )
+
+
+def _arrow_price_schema():
+    import pyarrow as pa
+
+    return pa.schema(
+        [
+            ("address", pa.string()),
+            ("block_number", pa.int64()),
+            ("price", pa.decimal128(20, 0)),
         ]
     )
 
@@ -497,6 +535,9 @@ class EvmPriceBatchReader(_BlockRangeReader, DataSourceReader):
             raise ValueError("tokens and oracles must be equal-length CSVs")
 
     def _window(self, t, rng: BlockRange):
+        return _rows_to_batches(self._probes(t, rng), _arrow_price_schema())
+
+    def _probes(self, t, rng: BlockRange):
         from decimal import Decimal
 
         as_of = rng.start  # price sampled at window start (main.go:196)
@@ -506,7 +547,8 @@ class EvmPriceBatchReader(_BlockRangeReader, DataSourceReader):
                     "eth_call",
                     [{"to": oracle, "data": LATEST_ANSWER_SELECTOR}, _hex(as_of)],
                 )
-            except SkipWindow:
+            except SkipWindow as e:
+                _skipped("evm_price", rng.start, rng.end, e)
                 continue
             if not isinstance(res, str) or len(res) != 66:
                 continue  # validity check (get_price.go:59-66)
@@ -544,7 +586,8 @@ class EvmBlocksBatchReader(_BlockRangeReader, DataSourceReader):
         for block in range(partition.start, partition.end + 1):
             try:
                 hdr = t.call("eth_getBlockByNumber", [_hex(block), False])
-            except SkipWindow:
+            except SkipWindow as e:
+                _skipped("evm_blocks", block, block, e)
                 continue
             if not hdr:
                 continue
@@ -589,7 +632,35 @@ def enrich_block_timestamps(logs_df, blocks_df):
     )
 
 
+_SOURCES = {
+    cls.name(): cls for cls in (EvmLogsDataSource, EvmBlocksDataSource, EvmPriceDataSource)
+}
+
+
 def register(spark) -> None:
-    spark.dataSource.register(EvmLogsDataSource)
-    spark.dataSource.register(EvmBlocksDataSource)
-    spark.dataSource.register(EvmPriceDataSource)
+    """Register the ``evm_*`` sources for ``spark.read.format`` and
+    ``spark.readStream.format``."""
+    for cls in _SOURCES.values():
+        spark.dataSource.register(cls)
+
+
+def read_batch(spark, fmt: str, options: dict):
+    """``spark.read.format(fmt).options(**options).load()`` for an ``evm_*``
+    source, planned on the driver.  The source's own reader plans the
+    partitions here, so no Python planner process starts and the source
+    needs no ``register``; one ``mapInArrow`` task per partition then calls
+    ``reader.read`` on it.  Rows and partition count are those of the
+    ``spark.read`` path."""
+    from pyspark.sql.datasource import CaseInsensitiveDict
+
+    source = _SOURCES[fmt](CaseInsensitiveDict(options))
+    schema = source.schema()
+    reader = source.reader(schema)
+    parts = reader.partitions()
+
+    def read(batches):
+        for batch in batches:
+            for i in batch.column(0).to_pylist():
+                yield from reader.read(parts[i])
+
+    return spark.range(0, len(parts), 1, len(parts)).mapInArrow(read, schema)

@@ -19,8 +19,13 @@ from pyspark.sql import SparkSession
 
 def main() -> None:
     sf_dir, names = sys.argv[1], sys.argv[2:]
-    evdir = tempfile.mkdtemp(prefix="spark-ev-")
     sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+    # the event log lives only as long as this run reads it
+    with tempfile.TemporaryDirectory(prefix="spark-ev-") as evdir:
+        _profile(sf_dir, names, evdir)
+
+
+def _profile(sf_dir: str, names: list[str], evdir: str) -> None:
     import __spark_entry__ as E
     from evm_archive_spark.session import get_spark
     from perfbench.spans import read_event_logs
