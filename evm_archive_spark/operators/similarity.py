@@ -602,7 +602,7 @@ def ivf_probe_bucketed(
     driver — that is the index lookup, a handful of ints — and applied as
     a static ``isin`` filter, so the parquet scan prunes at the directory
     level (``PartitionFilters: centroid_id IN (...)`` — pinned by plan
-    test, the analog of tests/test_storage.py's block_range pruning).
+    test).
     The corpus is never shuffled: queries broadcast, lists scanned
     partition-local.  Queries are the first ``n_queries`` corpus ids, as
     in ``ivf_topk``; output matches ``quantized_dot_topk``."""

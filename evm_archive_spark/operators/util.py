@@ -30,16 +30,17 @@ def bind_once(expr, fn):
     return F.element_at(F.transform(F.array(expr), fn), 1)
 
 
-#: Logical operators that can never put an Exchange in the physical
-#: plan.  Anything NOT in this set (joins, aggregates, sorts, windows,
-#: repartitions, limits, ...) is treated as shuffle-introducing — the
-#: conservative direction for ``_shuffle_free``.
+#: Logical operators (JVM ``nodeName``) that can never put an Exchange
+#: in the physical plan.  Anything NOT in this set (joins, aggregates,
+#: sorts, windows, repartitions, limits, cached relations, ...) is
+#: treated as shuffle-introducing — the conservative direction for
+#: ``_shuffle_free``.
 _MAP_SIDE_NODES = frozenset({
-    "Relation", "LogicalRDD", "LocalRelation", "Range", "OneRowRelation",
-    "Project", "Filter", "Generate", "Union", "Sample",
+    "LogicalRelation", "LogicalRDD", "LocalRelation", "Range",
+    "OneRowRelation", "Project", "Filter", "Generate", "Union", "Sample",
     "MapInPandas", "PythonMapInArrow", "MapInArrow",
     "SerializeFromObject", "DeserializeToObject", "MapElements",
-    "TypedFilter", "InMemoryRelation",
+    "TypedFilter",
 })
 
 
@@ -47,13 +48,17 @@ def _shuffle_free(df: DataFrame) -> bool:
     """True when ``df``'s optimized logical plan contains only map-side
     operators, i.e. compiling the plan to an RDD cannot trigger AQE
     query-stage materialization (no Exchange can appear below).  Pure
-    plan inspection — analysis + optimization, no job.  Unknown node
-    names count as shuffle-introducing (conservative)."""
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    for line in plan.splitlines():
-        node = line.lstrip(" :+-").split(" ", 1)[0].split("(", 1)[0]
-        if node and node not in _MAP_SIDE_NODES:
+    plan inspection — analysis + optimization, no job — over the JVM
+    tree's ``nodeName``s, so no literal or alias text can pose as a
+    node.  Unknown node names count as shuffle-introducing
+    (conservative)."""
+    todo = [df._jdf.queryExecution().optimizedPlan()]
+    while todo:
+        node = todo.pop()
+        if node.nodeName() not in _MAP_SIDE_NODES:
             return False
+        children = node.children()
+        todo.extend(children.apply(i) for i in range(children.size()))
     return True
 
 

@@ -13,10 +13,20 @@ Determinism conventions (SURVEY §2.1): total ORDER BY with NULLS FIRST
 where row identity matters, monetary doubles cast to DECIMAL(18,2) before
 aggregation, floats only ever compared after integer quantization
 (FLOOR(x*1000)), timestamps truncated to engine-common precision.
+
+A synthesized-media gate (build a real file per document, decode it
+back) is written as ``_media(_documents(spark, sf_dir, "doc_id", ...),
+build)``: ``_documents`` registers ``documents``, range-partitions it by
+``doc_id`` and projects the builder's inputs; ``_media`` runs the Arrow
+batch loop and calls ``build(doc_id, *inputs) -> bytes`` per row.  The
+gate supplies only the per-row builder and ends with
+``sortWithinPartitions("media_id")``; a format writer the builder needs
+(``mk_ar``, ``mk_tar``, ...) lives in the gate.
 """
 
 from __future__ import annotations
 
+import re
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -54,6 +64,58 @@ def _add(name, spark, oracle, doc=""):
 def _shared(name, sql, doc=""):
     """Query whose SQL text runs verbatim on both Spark and DuckDB."""
     _add(name, _sql(sql), sql, doc)
+
+
+def _documents(spark: SparkSession, sf_dir: str, *cols) -> DataFrame:
+    """``documents`` range-partitioned by ``doc_id`` (see
+    ``util.ranged_by``), projected to ``cols`` (Columns or SQL
+    expression strings): the build input of a lane that ends in
+    ``sortWithinPartitions`` on the doc key."""
+    register_testdata(spark, sf_dir, ["documents"])
+    return ranged_by(spark.table("documents"), "doc_id").select(
+        *(F.expr(c) if isinstance(c, str) else c for c in cols)
+    )
+
+
+#: ``_documents`` columns that hand each document's text to a decoder
+#: as a payload (the dirty-input lanes: text is no valid media file).
+_TEXT_MEDIA = ("doc_id AS media_id", "encode(text, 'UTF-8') AS payload")
+
+
+def _media(df: DataFrame, build: Callable[..., bytes]) -> DataFrame:
+    """Synthesize one binary payload per row: ``build(id, *rest)`` gets
+    the row's first column (the id) and its other columns as Python
+    values, and returns the payload bytes.  The Arrow batch loop is
+    written here once; the result is ``media_id long, payload binary``
+    with the input's partitioning and row order."""
+
+    def batches(it):
+        import pyarrow as pa
+
+        for b in it:
+            cols = [c.to_pylist() for c in b.columns]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(cols[0], pa.int64()),
+                    pa.array([build(*r) for r in zip(*cols)], pa.binary()),
+                ],
+                ["media_id", "payload"],
+            )
+
+    return df.mapInArrow(batches, "media_id long, payload binary")
+
+
+#: What a JSON-identity text slice may not hold: non-printable ASCII,
+#: quote and backslash.
+_JSON_UNSAFE = r'[^ -~]|["\\]'
+
+
+def _two_cells(text: str | None, spaced: str = r"[\t\r\n]") -> tuple[str, str]:
+    """The first two 80-character slices of ``text`` with every match of
+    ``spaced`` (by default tab, CR and LF) replaced by a space: the
+    string cells of the spreadsheet, database and record-file gates."""
+    t = text or ""
+    return re.sub(spaced, " ", t[:80]), re.sub(spaced, " ", t[80:160])
 
 
 # ==========================================================================
@@ -2307,13 +2369,12 @@ _add(
 def _q_lang_id(spark, sf_dir):
     from ..operators.textanalysis import lang_id
 
-    register_testdata(spark, sf_dir, ["documents"])
     # ranged_by + sortWithinPartitions == the declared orderBy's global
     # order with the stopword-count chain executed ONCE and 32-way (the
     # codec-lane r13 pattern; the plain orderBy's range sampling ran the
     # whole single-task chain twice: twin 6 s stages at sf0.1)
     return (
-        lang_id(ranged_by(spark.table("documents"), "doc_id"))
+        lang_id(_documents(spark, sf_dir, "*"))
         .select("doc_id", "lang_pred")
         .sortWithinPartitions("doc_id")
     )
@@ -2826,14 +2887,11 @@ def _q_gopher(spark, sf_dir):
     engines; cast to BIGINT 0/1 for hash-stable output."""
     from ..operators.textanalysis import gopher_rules
 
-    register_testdata(spark, sf_dir, ["documents"])
     # pure map lane: range-partition the INPUT by the output sort key so
     # the heavy rule arithmetic runs once per row in parallel and the
     # final global order comes from sortWithinPartitions — a trailing
     # orderBy would sample (= re-execute) the whole rule chain
-    g = gopher_rules(
-        ranged_by(spark.table("documents"), "doc_id"), min_words=12
-    )
+    g = gopher_rules(_documents(spark, sf_dir, "*"), min_words=12)
     return g.select(
         "doc_id",
         "n_words",
@@ -3136,8 +3194,7 @@ def _q_bloom_decontam(spark, sf_dir):
     hash-checked too)."""
     from ..operators.bloom import bloom_decontaminate
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(spark.table("documents"), "doc_id")
+    docs = _documents(spark, sf_dir, "*")
     ev = docs.filter(F.col("doc_id") % 23 == 0)
     out = bloom_decontaminate(
         docs, ev, n=3, num_bits=1 << 15, num_hashes=4
@@ -3731,15 +3788,12 @@ def _q_fingerprint_md5(spark, sf_dir):
     q_fingerprint_md5; the xxhash64 form is engine-only, pytest-pinned)."""
     from ..operators.textanalysis import fingerprint_md5
 
-    register_testdata(spark, sf_dir, ["documents"])
     # ranged_by + sortWithinPartitions == the declared orderBy's order
     # with the md5-shingle fold executed ONCE and 32-way (r13; the plain
     # orderBy's range sampling ran it twice: twin 5 s single-task stages)
-    return (
-        ranged_by(spark.table("documents"), "doc_id")
-        .select("doc_id", fingerprint_md5("text", k=8).alias("fp"))
-        .sortWithinPartitions("doc_id")
-    )
+    return _documents(
+        spark, sf_dir, "doc_id", fingerprint_md5("text", k=8).alias("fp")
+    ).sortWithinPartitions("doc_id")
 
 
 _add(
@@ -6196,11 +6250,7 @@ _add(
 def _q_audio_features(spark, sf_dir):
     from ..operators.multimodal import audio_features
 
-    register_testdata(spark, sf_dir, ["documents"])
-    media = ranged_by(spark.table("documents"), "doc_id").select(
-        F.col("doc_id").alias("media_id"),
-        F.encode("text", "UTF-8").alias("payload"),
-    )
+    media = _documents(spark, sf_dir, *_TEXT_MEDIA)
     out = audio_features(media, strict=False)
     return out.select(
         "media_id",
@@ -7440,11 +7490,7 @@ def _q_sitemap(spark, sf_dir):
 def _q_spectral(spark, sf_dir):
     from ..operators.multimodal import spectral_features
 
-    register_testdata(spark, sf_dir, ["documents"])
-    media = ranged_by(spark.table("documents"), "doc_id").select(
-        F.col("doc_id").alias("media_id"),
-        F.encode("text", "UTF-8").alias("payload"),
-    )
+    media = _documents(spark, sf_dir, *_TEXT_MEDIA)
     return (
         spectral_features(media, strict=False)
         .select(
@@ -7489,11 +7535,7 @@ _add(
 def _q_vad(spark, sf_dir):
     from ..operators.multimodal import audio_vad
 
-    register_testdata(spark, sf_dir, ["documents"])
-    media = ranged_by(spark.table("documents"), "doc_id").select(
-        F.col("doc_id").alias("media_id"),
-        F.encode("text", "UTF-8").alias("payload"),
-    )
+    media = _documents(spark, sf_dir, *_TEXT_MEDIA)
     return audio_vad(media, strict=False).sortWithinPartitions("media_id")
 
 
@@ -7535,11 +7577,7 @@ _add(
 def _q_image_meta(spark, sf_dir):
     from ..operators.exif import image_metadata
 
-    register_testdata(spark, sf_dir, ["documents"])
-    media = ranged_by(spark.table("documents"), "doc_id").select(
-        F.col("doc_id").alias("media_id"),
-        F.encode("text", "UTF-8").alias("payload"),
-    )
+    media = _documents(spark, sf_dir, *_TEXT_MEDIA)
     return image_metadata(media, strict=False).sortWithinPartitions("media_id")
 
 
@@ -7584,11 +7622,7 @@ _add(
 def _q_audio_meta(spark, sf_dir):
     from ..operators.audiometa import audio_metadata
 
-    register_testdata(spark, sf_dir, ["documents"])
-    media = ranged_by(spark.table("documents"), "doc_id").select(
-        F.col("doc_id").alias("media_id"),
-        F.encode("text", "UTF-8").alias("payload"),
-    )
+    media = _documents(spark, sf_dir, *_TEXT_MEDIA)
     return audio_metadata(media, strict=False).sortWithinPartitions("media_id")
 
 
@@ -7629,11 +7663,7 @@ _add(
 def _q_exif_scrub(spark, sf_dir):
     from ..operators.exif import scrub_exif
 
-    register_testdata(spark, sf_dir, ["documents"])
-    media = ranged_by(spark.table("documents"), "doc_id").select(
-        F.col("doc_id").alias("media_id"),
-        F.encode("text", "UTF-8").alias("payload"),
-    )
+    media = _documents(spark, sf_dir, *_TEXT_MEDIA)
     out = scrub_exif(media)
     return out.select(
         "media_id",
@@ -7667,9 +7697,8 @@ _add(
 def _q_cdc(spark, sf_dir):
     from ..operators.cdc import cdc_chunks_positional
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(spark.table("documents"), "doc_id").select(
-        "doc_id", F.expr("substring(text, 1, 400)").alias("text")
+    docs = _documents(
+        spark, sf_dir, "doc_id", "substring(text, 1, 400) AS text"
     )
     return cdc_chunks_positional(docs).sortWithinPartitions("media_id", "chunk_idx")
 
@@ -7863,11 +7892,8 @@ _add(
 # truncation fuzz) is pytest-gated in test_pdf.py.
 
 def _q_pdf(spark, sf_dir):
-    import pandas as pd
-
     from ..operators.pdf import build_simple_pdf, pdf_to_text
 
-    register_testdata(spark, sf_dir, ["documents"])
     cleaned = F.regexp_replace(
         F.regexp_replace(
             F.coalesce(F.expr("substring(text, 1, 200)"), F.lit("")),
@@ -7877,23 +7903,10 @@ def _q_pdf(spark, sf_dir):
         r"[()\\]",
         " ",
     )
-    docs = ranged_by(spark.table("documents"), "doc_id").select(
-        F.col("doc_id").alias("media_id"), cleaned.alias("t")
+    media = _media(
+        _documents(spark, sf_dir, "doc_id", cleaned.alias("t")),
+        lambda _, t: build_simple_pdf([t], compress=True),
     )
-
-    def build(it):
-        for b in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": b["media_id"],
-                    "payload": [
-                        build_simple_pdf([t], compress=True)
-                        for t in b["t"]
-                    ],
-                }
-            )
-
-    media = docs.mapInPandas(build, "media_id long, payload binary")
     out = pdf_to_text(media, strict=True)
     return out.select(
         "media_id",
@@ -8133,8 +8146,9 @@ _add(
 def _q_ipynb(spark, sf_dir):
     from ..operators.sourcecode import ipynb_cells
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(spark.table("documents"), "doc_id").selectExpr(
+    docs = _documents(
+        spark,
+        sf_dir,
         "doc_id",
         "'{\"cells\":[{\"cell_type\":\"code\",\"source\":[\"' || "
         "regexp_replace(COALESCE(substring(text, 1, 150), ''), "
@@ -8180,10 +8194,14 @@ def _md_seg(off: int) -> str:
     )
 
 
+def _py_seg(t: str, off: int) -> str:
+    """``_md_seg`` in Python, for a payload builder."""
+    return "seg" + re.sub("[^a-z]", "", t[off - 1:off + 59].lower())
+
+
 def _q_markdown(spark, sf_dir):
     from ..operators.textanalysis import markdown_to_text
 
-    register_testdata(spark, sf_dir, ["documents"])
     md = (
         f"'# ' || {_md_seg(1)} || chr(10) || "
         f"'**' || {_md_seg(61)} || '** and [' || {_md_seg(121)} || "
@@ -8191,9 +8209,7 @@ def _q_markdown(spark, sf_dir):
         f"|| chr(10) || '- item ' || {_md_seg(241)} || chr(10) || "
         f"'> quote ' || {_md_seg(301)}"
     )
-    docs = ranged_by(spark.table("documents"), "doc_id").selectExpr(
-        "doc_id", md + " AS md"
-    )
+    docs = _documents(spark, sf_dir, "doc_id", md + " AS md")
     return docs.select(
         "doc_id", markdown_to_text("md").alias("text")
     ).sortWithinPartitions("doc_id")
@@ -8232,42 +8248,29 @@ _add(
 # members carry the raw UTF-8 text, so no cleaning is needed).
 
 def _q_archive(spark, sf_dir):
-    import pandas as pd
+    import io
+    import zipfile
 
     from ..operators.archive import explode_archives
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(spark.table("documents"), "doc_id").select(
-        F.col("doc_id").alias("media_id"),
-        F.coalesce("text", F.lit("")).alias("t"),
+    def build(_, t):
+        data = t.encode("utf-8")
+        buf = io.BytesIO()
+        with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
+            for name, body in (
+                ("a.txt", data),
+                ("sub/b.txt", b"copy:" + data),
+            ):
+                zi = zipfile.ZipInfo(name, date_time=(1980, 1, 1, 0, 0, 0))
+                zf.writestr(zi, body)
+        return buf.getvalue()
+
+    media = _media(
+        _documents(
+            spark, sf_dir, "doc_id", F.coalesce("text", F.lit("")).alias("t")
+        ),
+        build,
     )
-
-    def build(it):
-        import io
-        import zipfile
-
-        for b in it:
-            payloads = []
-            for t in b["t"]:
-                data = t.encode("utf-8")
-                buf = io.BytesIO()
-                with zipfile.ZipFile(
-                    buf, "w", zipfile.ZIP_DEFLATED
-                ) as zf:
-                    for name, body in (
-                        ("a.txt", data),
-                        ("sub/b.txt", b"copy:" + data),
-                    ):
-                        zi = zipfile.ZipInfo(
-                            name, date_time=(1980, 1, 1, 0, 0, 0)
-                        )
-                        zf.writestr(zi, body)
-                payloads.append(buf.getvalue())
-            yield pd.DataFrame(
-                {"media_id": b["media_id"], "payload": payloads}
-            )
-
-    media = docs.mapInPandas(build, "media_id long, payload binary")
     out = explode_archives(media, strict=True)
     return out.select(
         "media_id",
@@ -8303,58 +8306,47 @@ _add(
 # it exactly.
 
 def _q_email(spark, sf_dir):
-    import pandas as pd
+    import base64
 
     from ..operators.mail import emails_to_rows
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(spark.table("documents"), "doc_id").selectExpr(
+    docs = _documents(
+        spark,
+        sf_dir,
         "doc_id",
         "trim(regexp_replace(COALESCE(substring(text, 1, 80), ''), "
         "'[^ -~]', ' ')) AS subj",
         "COALESCE(substring(text, 81, 400), '') AS body",
     )
 
-    def build(it):
-        import base64
+    def build(did, subj, body):
+        b64 = base64.encodebytes(body.encode("utf-8")).decode()
+        att = base64.encodebytes(b"att-bytes").decode()
+        return (
+            f"From: user{did}@example.com\n"
+            f"Subject: {subj}\n"
+            "Date: Thu, 01 Jan 2026 00:00:00 +0000\n"
+            "MIME-Version: 1.0\n"
+            "Content-Type: multipart/mixed; "
+            'boundary="BOUND"\n'
+            "\n"
+            "--BOUND\n"
+            'Content-Type: text/plain; charset="utf-8"\n'
+            "Content-Transfer-Encoding: base64\n"
+            "\n"
+            f"{b64}"
+            "--BOUND\n"
+            "Content-Type: application/octet-stream; "
+            'name="a.bin"\n'
+            "Content-Disposition: attachment; "
+            'filename="a.bin"\n'
+            "Content-Transfer-Encoding: base64\n"
+            "\n"
+            f"{att}"
+            "--BOUND--\n"
+        ).encode("utf-8")
 
-        for b in it:
-            payloads = []
-            for did, subj, body in zip(
-                b["doc_id"], b["subj"], b["body"]
-            ):
-                b64 = base64.encodebytes(body.encode("utf-8")).decode()
-                att = base64.encodebytes(b"att-bytes").decode()
-                payloads.append(
-                    (
-                        f"From: user{did}@example.com\n"
-                        f"Subject: {subj}\n"
-                        "Date: Thu, 01 Jan 2026 00:00:00 +0000\n"
-                        "MIME-Version: 1.0\n"
-                        "Content-Type: multipart/mixed; "
-                        'boundary="BOUND"\n'
-                        "\n"
-                        "--BOUND\n"
-                        'Content-Type: text/plain; charset="utf-8"\n'
-                        "Content-Transfer-Encoding: base64\n"
-                        "\n"
-                        f"{b64}"
-                        "--BOUND\n"
-                        "Content-Type: application/octet-stream; "
-                        'name="a.bin"\n'
-                        "Content-Disposition: attachment; "
-                        'filename="a.bin"\n'
-                        "Content-Transfer-Encoding: base64\n"
-                        "\n"
-                        f"{att}"
-                        "--BOUND--\n"
-                    ).encode("utf-8")
-                )
-            yield pd.DataFrame(
-                {"media_id": b["doc_id"], "payload": payloads}
-            )
-
-    media = docs.mapInPandas(build, "media_id long, payload binary")
+    media = _media(docs, build)
     out = emails_to_rows(media, strict=True)
     return out.select(
         "media_id",
@@ -8440,13 +8432,12 @@ _add(
 # the per-branch expected text directly.
 
 def _q_extract(spark, sf_dir):
-    import pandas as pd
-
     from ..operators.extract import document_extract
     from ..operators.pdf import build_simple_pdf
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(spark.table("documents"), "doc_id").selectExpr(
+    docs = _documents(
+        spark,
+        sf_dir,
         "doc_id",
         # q_pdf cleaning (printable, no parens/backslash)
         "regexp_replace(regexp_replace(COALESCE(substring(text, 1, 200)"
@@ -8462,43 +8453,29 @@ def _q_extract(spark, sf_dir):
         f"{_md_seg(181)} AS s4",
     )
 
-    def build(it):
-        for b in it:
-            rows = {"media_id": [], "mime": [], "payload": []}
-            for did, pdfc, c1, c2, s1, s2, s3, s4 in zip(
-                b["doc_id"], b["pdfc"], b["c1"], b["c2"],
-                b["s1"], b["s2"], b["s3"], b["s4"],
-            ):
-                k = did % 4
-                if k == 0:
-                    mime = "application/pdf"
-                    payload = build_simple_pdf([pdfc], compress=True)
-                elif k == 1:
-                    mime = "application/x-ipynb+json"
-                    payload = (
-                        '{"cells":[{"cell_type":"code","source":["'
-                        + c1
-                        + '"]},{"cell_type":"markdown","source":"'
-                        + c2
-                        + '"}]}'
-                    ).encode("utf-8")
-                elif k == 2:
-                    mime = "text/html"
-                    payload = (
-                        f"<p>{s1}</p><p>{s2}</p>".encode("utf-8")
-                    )
-                else:
-                    mime = "text/markdown"
-                    payload = (
-                        f"# {s3}\n- item {s4}".encode("utf-8")
-                    )
-                rows["media_id"].append(did)
-                rows["mime"].append(mime)
-                rows["payload"].append(payload)
-            yield pd.DataFrame(rows)
+    def build(did, pdfc, c1, c2, s1, s2, s3, s4):
+        k = did % 4
+        if k == 0:
+            return build_simple_pdf([pdfc], compress=True)
+        if k == 1:
+            return (
+                '{"cells":[{"cell_type":"code","source":["'
+                + c1
+                + '"]},{"cell_type":"markdown","source":"'
+                + c2
+                + '"}]}'
+            ).encode("utf-8")
+        if k == 2:
+            return f"<p>{s1}</p><p>{s2}</p>".encode("utf-8")
+        return f"# {s3}\n- item {s4}".encode("utf-8")
 
-    media = docs.mapInPandas(
-        build, "media_id long, mime string, payload binary"
+    media = _media(docs, build).withColumn(
+        "mime",
+        F.expr(
+            "CASE media_id % 4 WHEN 0 THEN 'application/pdf' "
+            "WHEN 1 THEN 'application/x-ipynb+json' "
+            "WHEN 2 THEN 'text/html' ELSE 'text/markdown' END"
+        ),
     )
     return document_extract(media, mime_col="mime").sortWithinPartitions("media_id")
 
@@ -8545,27 +8522,10 @@ def _q_docx(spark, sf_dir):
     from ..operators.extract import document_extract
     from ..operators.officedoc import build_docx
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(
-        spark.table("documents").select("doc_id", "text"),
-        "doc_id",
+    media = _media(
+        _documents(spark, sf_dir, "doc_id", "text"),
+        lambda m, text: build_docx([text or "", f"closing paragraph {m % 7}"]),
     )
-
-    def mux(it):
-        import pandas as pd
-
-        for pdf in it:
-            out = {"media_id": [], "payload": []}
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                out["media_id"].append(int(did))
-                out["payload"].append(
-                    build_docx(
-                        [text or "", f"closing paragraph {int(did) % 7}"]
-                    )
-                )
-            yield pd.DataFrame(out)
-
-    media = docs.mapInPandas(mux, "media_id long, payload binary")
     return document_extract(media).sortWithinPartitions("media_id")
 
 
@@ -8592,22 +8552,10 @@ def _q_odt(spark, sf_dir):
     from ..operators.extract import document_extract
     from ..operators.officedoc import build_odt
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(spark.table("documents"), "doc_id").select("doc_id", "text")
-
-    def mux(it):
-        import pandas as pd
-
-        for pdf in it:
-            out = {"media_id": [], "payload": []}
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                out["media_id"].append(int(did))
-                out["payload"].append(
-                    build_odt([text or "", f"section {int(did) % 9}"])
-                )
-            yield pd.DataFrame(out)
-
-    media = docs.mapInPandas(mux, "media_id long, payload binary")
+    media = _media(
+        _documents(spark, sf_dir, "doc_id", "text"),
+        lambda m, text: build_odt([text or "", f"section {m % 9}"]),
+    )
     return document_extract(media).sortWithinPartitions("media_id")
 
 
@@ -8632,28 +8580,14 @@ _add(
 # \\par/\\tab/\\'hh/\\uN handled.
 
 def _q_rtf(spark, sf_dir):
-    import re as _re
-
     from ..operators.extract import document_extract
     from ..operators.officedoc import build_rtf
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(spark.table("documents"), "doc_id").select("doc_id", "text")
+    def build(m, text):
+        ascii_text = re.sub(r"[^ -~]", "?", text or "")
+        return build_rtf([ascii_text, f"closing {m % 11}"])
 
-    def mux(it):
-        import pandas as pd
-
-        for pdf in it:
-            out = {"media_id": [], "payload": []}
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                ascii_text = _re.sub(r"[^ -~]", "?", text or "")
-                out["media_id"].append(int(did))
-                out["payload"].append(
-                    build_rtf([ascii_text, f"closing {int(did) % 11}"])
-                )
-            yield pd.DataFrame(out)
-
-    media = docs.mapInPandas(mux, "media_id long, payload binary")
+    media = _media(_documents(spark, sf_dir, "doc_id", "text"), build)
     return document_extract(media).sortWithinPartitions("media_id")
 
 
@@ -8678,35 +8612,14 @@ _add(
 # rule); the oracle rebuilds the tab/newline-joined linearization.
 
 def _q_xls5(spark, sf_dir):
-    import re as _re
-
     from ..operators.extract import document_extract
     from ..operators.officedoc import build_xls_biff5
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(spark.table("documents"), "doc_id").select("doc_id", "text")
+    def build(m, text):
+        c1, c2 = (re.sub(r"[^ -~]", "?", c) for c in _two_cells(text))
+        return build_xls_biff5([[c1, f"b5 {m % 6}"], [f"old {m % 9}", c2]])
 
-    def mux(it):
-        import pandas as pd
-
-        def cell(s):
-            return _re.sub(r"[^ -~]", "?", _re.sub(r"[\t\r\n]", " ", s))
-
-        for pdf in it:
-            out = {"media_id": [], "payload": []}
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                t = text or ""
-                m = int(did)
-                out["media_id"].append(m)
-                out["payload"].append(
-                    build_xls_biff5(
-                        [[cell(t[:80]), f"b5 {m % 6}"],
-                         [f"old {m % 9}", cell(t[80:160])]]
-                    )
-                )
-            yield pd.DataFrame(out)
-
-    media = docs.mapInPandas(mux, "media_id long, payload binary")
+    media = _media(_documents(spark, sf_dir, "doc_id", "text"), build)
     return document_extract(media).sortWithinPartitions("media_id")
 
 
@@ -8739,32 +8652,16 @@ _add(
 # extraction maps back to \n.
 
 def _q_doc6(spark, sf_dir):
-    import re as _re
-
     from ..operators.extract import document_extract
     from ..operators.officedoc import build_doc_word6
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(spark.table("documents"), "doc_id").select("doc_id", "text")
+    def build(m, text):
+        ascii_text = re.sub(r"[^ -~]", "?", text or "")
+        return build_doc_word6(
+            ascii_text + f"\nw6 marker {m % 13}", fast_save=bool(m % 2)
+        )
 
-    def mux(it):
-        import pandas as pd
-
-        for pdf in it:
-            out = {"media_id": [], "payload": []}
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                ascii_text = _re.sub(r"[^ -~]", "?", text or "")
-                m = int(did)
-                out["media_id"].append(m)
-                out["payload"].append(
-                    build_doc_word6(
-                        ascii_text + f"\nw6 marker {m % 13}",
-                        fast_save=bool(m % 2),
-                    )
-                )
-            yield pd.DataFrame(out)
-
-    media = docs.mapInPandas(mux, "media_id long, payload binary")
+    media = _media(_documents(spark, sf_dir, "doc_id", "text"), build)
     return document_extract(media).sortWithinPartitions("media_id")
 
 
@@ -8795,20 +8692,10 @@ def _q_doc(spark, sf_dir):
     from ..operators.extract import document_extract
     from ..operators.officedoc import build_doc
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(spark.table("documents"), "doc_id").select("doc_id", "text")
-
-    def mux(it):
-        import pandas as pd
-
-        for pdf in it:
-            out = {"media_id": [], "payload": []}
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                out["media_id"].append(int(did))
-                out["payload"].append(build_doc(text or ""))
-            yield pd.DataFrame(out)
-
-    media = docs.mapInPandas(mux, "media_id long, payload binary")
+    media = _media(
+        _documents(spark, sf_dir, "doc_id", "text"),
+        lambda _, text: build_doc(text or ""),
+    )
     return document_extract(media).sortWithinPartitions("media_id")
 
 
@@ -8832,33 +8719,14 @@ _add(
 # linearization from the same slices; it never opens a ZIP.
 
 def _q_xlsx(spark, sf_dir):
-    import re as _re
-
     from ..operators.extract import document_extract
     from ..operators.officedoc import build_xlsx
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(spark.table("documents"), "doc_id").select("doc_id", "text")
+    def build(m, text):
+        c1, c2 = _two_cells(text)
+        return build_xlsx([[c1, f"qty {m % 5}"], [f"row2 {m % 3}", c2]])
 
-    def mux(it):
-        import pandas as pd
-
-        for pdf in it:
-            out = {"media_id": [], "payload": []}
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                t = text or ""
-                c1 = _re.sub(r"[\t\r\n]", " ", t[:80])
-                c2 = _re.sub(r"[\t\r\n]", " ", t[80:160])
-                m = int(did)
-                out["media_id"].append(m)
-                out["payload"].append(
-                    build_xlsx(
-                        [[c1, f"qty {m % 5}"], [f"row2 {m % 3}", c2]]
-                    )
-                )
-            yield pd.DataFrame(out)
-
-    media = docs.mapInPandas(mux, "media_id long, payload binary")
+    media = _media(_documents(spark, sf_dir, "doc_id", "text"), build)
     return document_extract(media).sortWithinPartitions("media_id")
 
 
@@ -8891,24 +8759,10 @@ def _q_pptx(spark, sf_dir):
     from ..operators.extract import document_extract
     from ..operators.officedoc import build_pptx
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(spark.table("documents"), "doc_id").select("doc_id", "text")
-
-    def mux(it):
-        import pandas as pd
-
-        for pdf in it:
-            out = {"media_id": [], "payload": []}
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                out["media_id"].append(int(did))
-                out["payload"].append(
-                    build_pptx(
-                        [[text or ""], [f"slide 2 note {int(did) % 13}"]]
-                    )
-                )
-            yield pd.DataFrame(out)
-
-    media = docs.mapInPandas(mux, "media_id long, payload binary")
+    media = _media(
+        _documents(spark, sf_dir, "doc_id", "text"),
+        lambda m, text: build_pptx([[text or ""], [f"slide 2 note {m % 13}"]]),
+    )
     return document_extract(media).sortWithinPartitions("media_id")
 
 
@@ -8933,33 +8787,14 @@ _add(
 # linearization from the same slices (the q_xlsx shape).
 
 def _q_ods(spark, sf_dir):
-    import re as _re
-
     from ..operators.extract import document_extract
     from ..operators.officedoc import build_ods
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(spark.table("documents"), "doc_id").select("doc_id", "text")
+    def build(m, text):
+        c1, c2 = _two_cells(text)
+        return build_ods([[c1, f"sum {m % 6}"], [f"r2 {m % 4}", c2]])
 
-    def mux(it):
-        import pandas as pd
-
-        for pdf in it:
-            out = {"media_id": [], "payload": []}
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                t = text or ""
-                c1 = _re.sub(r"[\t\r\n]", " ", t[:80])
-                c2 = _re.sub(r"[\t\r\n]", " ", t[80:160])
-                m = int(did)
-                out["media_id"].append(m)
-                out["payload"].append(
-                    build_ods(
-                        [[c1, f"sum {m % 6}"], [f"r2 {m % 4}", c2]]
-                    )
-                )
-            yield pd.DataFrame(out)
-
-    media = docs.mapInPandas(mux, "media_id long, payload binary")
+    media = _media(_documents(spark, sf_dir, "doc_id", "text"), build)
     return document_extract(media).sortWithinPartitions("media_id")
 
 
@@ -8990,33 +8825,14 @@ _add(
 # The oracle rebuilds the linearization from the same slices.
 
 def _q_xls(spark, sf_dir):
-    import re as _re
-
     from ..operators.extract import document_extract
     from ..operators.officedoc import build_xls
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(spark.table("documents"), "doc_id").select("doc_id", "text")
+    def build(m, text):
+        c1, c2 = _two_cells(text)
+        return build_xls([[c1, f"amt {m % 8}"], [f"row {m % 5}", c2]])
 
-    def mux(it):
-        import pandas as pd
-
-        for pdf in it:
-            out = {"media_id": [], "payload": []}
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                t = text or ""
-                c1 = _re.sub(r"[\t\r\n]", " ", t[:80])
-                c2 = _re.sub(r"[\t\r\n]", " ", t[80:160])
-                m = int(did)
-                out["media_id"].append(m)
-                out["payload"].append(
-                    build_xls(
-                        [[c1, f"amt {m % 8}"], [f"row {m % 5}", c2]]
-                    )
-                )
-            yield pd.DataFrame(out)
-
-    media = docs.mapInPandas(mux, "media_id long, payload binary")
+    media = _media(_documents(spark, sf_dir, "doc_id", "text"), build)
     return document_extract(media).sortWithinPartitions("media_id")
 
 
@@ -9049,57 +8865,30 @@ _add(
 # The oracle rebuilds the linearization from the same slices.
 
 def _q_sqlite(spark, sf_dir):
-    import re as _re
+    import sqlite3
 
     from ..operators.extract import document_extract
 
-    register_testdata(spark, sf_dir, ["documents"])
-    # ranged_by + final sortWithinPartitions == the declared orderBy's
-    # global order with the decode executed ONCE (see util.ranged_by)
-    docs = ranged_by(
-        spark.table("documents").select("doc_id", "text"), "doc_id"
-    )
+    def build(m, text):
+        c1, c2 = _two_cells(text)
+        conn = sqlite3.connect(":memory:")
+        conn.execute(
+            "create table docs (id INTEGER PRIMARY KEY, body TEXT, n INTEGER)"
+        )
+        conn.execute("insert into docs values (1, ?, ?)", (c1, m % 7))
+        conn.execute("insert into docs values (2, ?, ?)", (c2, m % 3))
+        conn.execute(
+            "create table wr (k TEXT, v INTEGER, "
+            "PRIMARY KEY (k)) WITHOUT ROWID"
+        )
+        conn.execute("insert into wr values ('b', ?)", (m % 5,))
+        conn.execute("insert into wr values ('a', ?)", (m % 11,))
+        conn.commit()
+        payload = conn.serialize()
+        conn.close()
+        return payload
 
-    def mux(it):
-        import sqlite3
-
-        import pandas as pd
-
-        for pdf in it:
-            out = {"media_id": [], "payload": []}
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                t = text or ""
-                c1 = _re.sub(r"[\t\r\n]", " ", t[:80])
-                c2 = _re.sub(r"[\t\r\n]", " ", t[80:160])
-                m = int(did)
-                conn = sqlite3.connect(":memory:")
-                conn.execute(
-                    "create table docs (id INTEGER PRIMARY KEY, "
-                    "body TEXT, n INTEGER)"
-                )
-                conn.execute(
-                    "insert into docs values (1, ?, ?)", (c1, m % 7)
-                )
-                conn.execute(
-                    "insert into docs values (2, ?, ?)", (c2, m % 3)
-                )
-                conn.execute(
-                    "create table wr (k TEXT, v INTEGER, "
-                    "PRIMARY KEY (k)) WITHOUT ROWID"
-                )
-                conn.execute(
-                    "insert into wr values ('b', ?)", (m % 5,)
-                )
-                conn.execute(
-                    "insert into wr values ('a', ?)", (m % 11,)
-                )
-                conn.commit()
-                out["media_id"].append(m)
-                out["payload"].append(conn.serialize())
-                conn.close()
-            yield pd.DataFrame(out)
-
-    media = docs.mapInPandas(mux, "media_id long, payload binary")
+    media = _media(_documents(spark, sf_dir, "doc_id", "text"), build)
     return document_extract(media).sortWithinPartitions("media_id")
 
 
@@ -9136,24 +8925,10 @@ def _q_odp(spark, sf_dir):
     from ..operators.extract import document_extract
     from ..operators.officedoc import build_odp
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(spark.table("documents"), "doc_id").select("doc_id", "text")
-
-    def mux(it):
-        import pandas as pd
-
-        for pdf in it:
-            out = {"media_id": [], "payload": []}
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                out["media_id"].append(int(did))
-                out["payload"].append(
-                    build_odp(
-                        [[text or ""], [f"page 2 note {int(did) % 10}"]]
-                    )
-                )
-            yield pd.DataFrame(out)
-
-    media = docs.mapInPandas(mux, "media_id long, payload binary")
+    media = _media(
+        _documents(spark, sf_dir, "doc_id", "text"),
+        lambda m, text: build_odp([[text or ""], [f"page 2 note {m % 10}"]]),
+    )
     return document_extract(media).sortWithinPartitions("media_id")
 
 
@@ -9182,11 +8957,7 @@ _add(
 def _q_mkv_decode(spark, sf_dir):
     from ..operators.mkv import build_mkv_audio, decode_mkv_audio
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(
-        spark.table("documents").select("doc_id"),
-        "doc_id",
-    )
+    docs = _documents(spark, sf_dir, "doc_id")
 
     def mux_decode(it):
         import numpy as np
@@ -9251,16 +9022,9 @@ _add(
 # face).  The oracle rebuilds the JSONL strings arithmetically.
 
 def _q_avro(spark, sf_dir):
-    import re as _re
-
     from ..operators.avrofile import build_avro
     from ..operators.extract import document_extract
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(
-        spark.table("documents").select("doc_id", "text"),
-        "doc_id",
-    )
     schema = {
         "type": "record", "name": "Doc",
         "fields": [
@@ -9270,30 +9034,18 @@ def _q_avro(spark, sf_dir):
         ],
     }
 
-    def mux(it):
-        import pandas as pd
+    def build(m, text):
+        c1, c2 = _two_cells(text, _JSON_UNSAFE)
+        return build_avro(
+            schema,
+            [
+                {"id": 1, "body": c1, "n": m % 7},
+                {"id": 2, "body": c2, "n": m % 3},
+            ],
+            codec="deflate",
+        )
 
-        for pdf in it:
-            out = {"media_id": [], "payload": []}
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                t = text or ""
-                c1 = _re.sub(r'[^ -~]|["\\]', " ", t[:80])
-                c2 = _re.sub(r'[^ -~]|["\\]', " ", t[80:160])
-                m = int(did)
-                out["media_id"].append(m)
-                out["payload"].append(
-                    build_avro(
-                        schema,
-                        [
-                            {"id": 1, "body": c1, "n": m % 7},
-                            {"id": 2, "body": c2, "n": m % 3},
-                        ],
-                        codec="deflate",
-                    )
-                )
-            yield pd.DataFrame(out)
-
-    media = docs.mapInPandas(mux, "media_id long, payload binary")
+    media = _media(_documents(spark, sf_dir, "doc_id", "text"), build)
     return document_extract(media).sortWithinPartitions("media_id")
 
 
@@ -9330,63 +9082,47 @@ _add(
 # agnostic: the archive kind is visible only through a successful walk.
 
 def _q_ar_cpio(spark, sf_dir):
-    import pandas as pd
-
     from ..operators.archive import explode_archives
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(spark.table("documents"), "doc_id").select(
-        F.col("doc_id").alias("media_id"),
-        F.coalesce("text", F.lit("")).alias("t"),
-    )
+    def mk_ar(members):
+        out = bytearray(b"!<arch>\n")
+        for name, data in members:
+            hdr = (
+                f"{name + '/':<16}{'0':<12}{'0':<6}{'0':<6}"
+                f"{'100644':<8}{len(data):<10}"
+            ).encode()
+            out += hdr + b"`\n" + data
+            if len(data) & 1:
+                out += b"\n"
+        return bytes(out)
 
-    def build(it):
-        def mk_ar(members):
-            out = bytearray(b"!<arch>\n")
-            for name, data in members:
-                hdr = (
-                    f"{name + '/':<16}{'0':<12}{'0':<6}{'0':<6}"
-                    f"{'100644':<8}{len(data):<10}"
-                ).encode()
-                out += hdr + b"`\n" + data
-                if len(data) & 1:
-                    out += b"\n"
-            return bytes(out)
+    def mk_cpio(members):
+        out = bytearray()
 
-        def mk_cpio(members):
-            out = bytearray()
-
-            def entry(name, data, mode):
-                nm = name.encode() + b"\x00"
-                hdr = b"070701" + b"".join(
-                    f"{v:08X}".encode()
-                    for v in (0, mode, 0, 0, 1, 0, len(data), 0, 0,
-                              0, 0, len(nm), 0)
-                )
-                out.extend(hdr + nm)
-                out.extend(b"\x00" * (-len(out) % 4))
-                out.extend(data)
-                out.extend(b"\x00" * (-len(out) % 4))
-
-            for name, data in members:
-                entry(name, data, 0o100644)
-            entry("TRAILER!!!", b"", 0)
-            return bytes(out)
-
-        for b in it:
-            payloads = []
-            for mid, t in zip(b["media_id"], b["t"]):
-                data = t.encode("utf-8")
-                members = [("a.txt", data), ("b.txt", b"copy:" + data)]
-                payloads.append(
-                    mk_ar(members) if int(mid) % 2 == 0
-                    else mk_cpio(members)
-                )
-            yield pd.DataFrame(
-                {"media_id": b["media_id"], "payload": payloads}
+        def entry(name, data, mode):
+            nm = name.encode() + b"\x00"
+            hdr = b"070701" + b"".join(
+                f"{v:08X}".encode()
+                for v in (0, mode, 0, 0, 1, 0, len(data), 0, 0,
+                          0, 0, len(nm), 0)
             )
+            out.extend(hdr + nm)
+            out.extend(b"\x00" * (-len(out) % 4))
+            out.extend(data)
+            out.extend(b"\x00" * (-len(out) % 4))
 
-    media = docs.mapInPandas(build, "media_id long, payload binary")
+        for name, data in members:
+            entry(name, data, 0o100644)
+        entry("TRAILER!!!", b"", 0)
+        return bytes(out)
+
+    def build(mid, t):
+        data = t.encode("utf-8")
+        members = [("a.txt", data), ("b.txt", b"copy:" + data)]
+        return mk_ar(members) if mid % 2 == 0 else mk_cpio(members)
+
+    docs = _documents(spark, sf_dir, "doc_id", "COALESCE(text, '') AS t")
+    media = _media(docs, build)
     out = explode_archives(media, strict=True)
     return out.select(
         "media_id",
@@ -9421,38 +9157,22 @@ _add(
 # signature-CRC + header walk + folder-chain decode.
 
 def _q_7z(spark, sf_dir):
-    import pandas as pd
-
     from ..operators.archive import explode_archives
     from ..operators.sevenzip import build_7z
-
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(
-        spark.table("documents").select(
-        F.col("doc_id").alias("media_id"),
-        F.coalesce("text", F.lit("")).alias("t"),
-    ),
-        "media_id",
-    )
 
     codecs = ["copy", "lzma2", "delta4+lzma2", "bcj+lzma2",
               "bcj2+lzma2", "arm+lzma2", "ppc+lzma2", "sparc+lzma2",
               "arm64+lzma2", "aes"]
 
-    def build(it):
-        for b in it:
-            payloads = []
-            for mid, t in zip(b["media_id"], b["t"]):
-                data = t.encode("utf-8")
-                payloads.append(build_7z(
-                    [("a.txt", data), ("b.txt", b"copy:" + data)],
-                    codec=codecs[int(mid) % 10],
-                ))
-            yield pd.DataFrame(
-                {"media_id": b["media_id"], "payload": payloads}
-            )
+    def build(mid, t):
+        data = t.encode("utf-8")
+        return build_7z(
+            [("a.txt", data), ("b.txt", b"copy:" + data)],
+            codec=codecs[mid % 10],
+        )
 
-    media = docs.mapInPandas(build, "media_id long, payload binary")
+    docs = _documents(spark, sf_dir, "doc_id", "COALESCE(text, '') AS t")
+    media = _media(docs, build)
     out = explode_archives(media, strict=True)
     return out.select(
         "media_id",
@@ -9493,37 +9213,19 @@ _add(
 # the oracle's NULL pattern checks both paths.
 
 def _q_rar(spark, sf_dir):
-    import pandas as pd
-
     from ..operators.archive import explode_archives
+    from ..operators.rar import build_rar
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(
-        spark.table("documents").select(
-        F.col("doc_id").alias("media_id"),
-        F.coalesce("text", F.lit("")).alias("t"),
-    ),
-        "media_id",
-    )
+    def build(did, t):
+        data = t.encode("utf-8")
+        return build_rar(
+            [("a.txt", data), ("b.txt", b"copy:" + data)],
+            rar5=did % 2 == 0,
+            stored=did % 4 < 2,
+        )
 
-    def build(it):
-        from ..operators.rar import build_rar
-
-        for b in it:
-            payloads = []
-            for mid, t in zip(b["media_id"], b["t"]):
-                data = t.encode("utf-8")
-                did = int(mid)
-                payloads.append(build_rar(
-                    [("a.txt", data), ("b.txt", b"copy:" + data)],
-                    rar5=did % 2 == 0,
-                    stored=did % 4 < 2,
-                ))
-            yield pd.DataFrame(
-                {"media_id": b["media_id"], "payload": payloads}
-            )
-
-    media = docs.mapInPandas(build, "media_id long, payload binary")
+    docs = _documents(spark, sf_dir, "doc_id", "COALESCE(text, '') AS t")
+    media = _media(docs, build)
     out = explode_archives(media, strict=True)
     return out.select(
         "media_id",
@@ -9561,36 +9263,18 @@ _add(
 # the other containers.
 
 def _q_cab(spark, sf_dir):
-    import pandas as pd
-
     from ..operators.archive import explode_archives
+    from ..operators.cab import build_cab
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(
-        spark.table("documents").select(
-        F.col("doc_id").alias("media_id"),
-        F.coalesce("text", F.lit("")).alias("t"),
-    ),
-        "media_id",
-    )
+    def build(mid, t):
+        data = t.encode("utf-8")
+        return build_cab(
+            [("a.txt", data), ("b.txt", b"copy:" + data)],
+            compression=["none", "mszip", "lzx"][mid % 3],
+        )
 
-    def build(it):
-        from ..operators.cab import build_cab
-
-        for b in it:
-            payloads = []
-            for mid, t in zip(b["media_id"], b["t"]):
-                data = t.encode("utf-8")
-                comps = ["none", "mszip", "lzx"]
-                payloads.append(build_cab(
-                    [("a.txt", data), ("b.txt", b"copy:" + data)],
-                    compression=comps[int(mid) % 3],
-                ))
-            yield pd.DataFrame(
-                {"media_id": b["media_id"], "payload": payloads}
-            )
-
-    media = docs.mapInPandas(build, "media_id long, payload binary")
+    docs = _documents(spark, sf_dir, "doc_id", "COALESCE(text, '') AS t")
+    media = _media(docs, build)
     out = explode_archives(media, strict=True)
     return out.select(
         "media_id",
@@ -9629,13 +9313,8 @@ _add(
 def _q_cab_set(spark, sf_dir):
     import pandas as pd
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(
-        spark.table("documents").select(
-        F.col("doc_id").alias("media_id"),
-        F.coalesce("text", F.lit("")).alias("t"),
-    ),
-        "media_id",
+    docs = _documents(
+        spark, sf_dir, "doc_id AS media_id", "COALESCE(text, '') AS t"
     )
 
     def run(it):
@@ -9700,9 +9379,7 @@ _add(
 # directly — the integration is part of what is gated.
 
 def _q_aiff(spark, sf_dir):
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(spark.table("documents"), "doc_id").select(
-        F.col("doc_id").alias("media_id"))
+    docs = _documents(spark, sf_dir, "doc_id AS media_id")
 
     def run(it):
         import numpy as np
@@ -9767,12 +9444,7 @@ _add(
 # every field replays in SQL.
 
 def _q_font_meta(spark, sf_dir):
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(
-        spark.table("documents").select(
-        F.col("doc_id").alias("media_id")),
-        "media_id",
-    )
+    docs = _documents(spark, sf_dir, "doc_id AS media_id")
 
     def run(it):
         import pandas as pd
@@ -9844,47 +9516,30 @@ _add(
 # analytically in SQL (the q_webp pattern).
 
 def _q_retro_image(spark, sf_dir):
+    import numpy as np
+
     from ..operators.multimodal import image_ahash
+    from ..operators.pcx import build_pcx
+    from ..operators.tga import build_tga
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(spark.table("documents"), "doc_id").select(
-        F.col("doc_id").alias("media_id"))
+    def build(did):
+        bits = ((did * 47 + np.arange(64) * 19) % 5) < 2
+        v = np.where(bits, 240, 16).astype(np.uint8)
+        img = np.empty((8, 8, 4), dtype=np.uint8)
+        img[:, :, 0] = img[:, :, 1] = img[:, :, 2] = v.reshape(8, 8)
+        img[:, :, 3] = 255
+        k = did % 5
+        if k == 0:
+            return build_tga(img, img_type=2)
+        if k == 1:
+            return build_tga(img, img_type=2, rle=True, top_down=False)
+        if k == 2:
+            return build_tga(img, img_type=3, rle=True)
+        if k == 3:
+            return build_pcx(img)
+        return build_pcx(img, palette=True)
 
-    def build(it):
-        import numpy as np
-        import pandas as pd
-
-        from ..operators.pcx import build_pcx
-        from ..operators.tga import build_tga
-
-        ks = np.arange(64)
-        for b in it:
-            payloads = []
-            for mid in b["media_id"]:
-                did = int(mid)
-                bits = ((did * 47 + ks * 19) % 5) < 2
-                v = np.where(bits, 240, 16).astype(np.uint8)
-                img = np.empty((8, 8, 4), dtype=np.uint8)
-                img[:, :, 0] = img[:, :, 1] = img[:, :, 2] = (
-                    v.reshape(8, 8))
-                img[:, :, 3] = 255
-                k = did % 5
-                if k == 0:
-                    payloads.append(build_tga(img, img_type=2))
-                elif k == 1:
-                    payloads.append(build_tga(
-                        img, img_type=2, rle=True, top_down=False))
-                elif k == 2:
-                    payloads.append(build_tga(
-                        img, img_type=3, rle=True))
-                elif k == 3:
-                    payloads.append(build_pcx(img))
-                else:
-                    payloads.append(build_pcx(img, palette=True))
-            yield pd.DataFrame(
-                {"media_id": b["media_id"], "payload": payloads})
-
-    media = docs.mapInPandas(build, "media_id long, payload binary")
+    media = _media(_documents(spark, sf_dir, "doc_id"), build)
     return image_ahash(media, strict=True).sortWithinPartitions("media_id")
 
 
@@ -9916,49 +9571,30 @@ _add(
 # pixels do not).
 
 def _q_pnm(spark, sf_dir):
+    import numpy as np
+
     from ..operators.multimodal import image_ahash
+    from ..operators.netpbm import build_pnm
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(
-        spark.table("documents").select(
-        F.col("doc_id").alias("media_id")),
-        "media_id",
-    )
+    def build(did):
+        bits = ((did * 47 + np.arange(64) * 19) % 5) < 2
+        kind = ("P1", "P2", "P3", "P4", "P5", "P6", "P7")[did % 7]
+        cm = f"doc {did}" if did % 2 else None
+        if kind in ("P1", "P4"):
+            # PBM: 1 = black -> invert so bits decode HIGH
+            img = (~bits).astype(np.uint8).reshape(8, 8)
+            return build_pnm(img, kind, comment=cm)
+        v = np.where(bits, 240, 16).astype(np.uint32)
+        hi = did % 3 == 1
+        if hi:
+            v = v * 257
+        g = v.reshape(8, 8)
+        img = (np.repeat(g[:, :, None], 3, 2)
+               if kind in ("P3", "P6", "P7") else g)
+        return build_pnm(
+            img, kind, maxval=65535 if hi else 255, comment=cm)
 
-    def build(it):
-        import numpy as np
-        import pandas as pd
-
-        from ..operators.netpbm import build_pnm
-
-        ks = np.arange(64)
-        for b in it:
-            payloads = []
-            for mid in b["media_id"]:
-                did = int(mid)
-                bits = ((did * 47 + ks * 19) % 5) < 2
-                kind = ("P1", "P2", "P3", "P4", "P5", "P6",
-                        "P7")[did % 7]
-                cm = f"doc {did}" if did % 2 else None
-                if kind in ("P1", "P4"):
-                    # PBM: 1 = black -> invert so bits decode HIGH
-                    img = (~bits).astype(np.uint8).reshape(8, 8)
-                    payloads.append(build_pnm(img, kind, comment=cm))
-                    continue
-                v = np.where(bits, 240, 16).astype(np.uint32)
-                hi = did % 3 == 1
-                if hi:
-                    v = v * 257
-                g = v.reshape(8, 8)
-                img = (np.repeat(g[:, :, None], 3, 2)
-                       if kind in ("P3", "P6", "P7") else g)
-                payloads.append(build_pnm(
-                    img, kind, maxval=65535 if hi else 255,
-                    comment=cm))
-            yield pd.DataFrame(
-                {"media_id": b["media_id"], "payload": payloads})
-
-    media = docs.mapInPandas(build, "media_id long, payload binary")
+    media = _media(_documents(spark, sf_dir, "doc_id"), build)
     return image_ahash(media, strict=True).sortWithinPartitions("media_id")
 
 
@@ -9986,38 +9622,22 @@ _add(
 # — same two-tone pattern and analytic aHash oracle as q_retro_image.
 
 def _q_xim(spark, sf_dir):
+    import numpy as np
+
     from ..operators.multimodal import image_ahash
+    from ..operators.xim import build_xbm, build_xpm
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(spark.table("documents"), "doc_id").select(
-        F.col("doc_id").alias("media_id"))
+    def build(did):
+        bits = (((did * 47 + np.arange(64) * 19) % 5) < 2).reshape(8, 8)
+        if did % 2 == 0:
+            # XBM: 1 = foreground/black -> invert so bit positions
+            # decode HIGH
+            return build_xbm((~bits).astype(np.uint8), name=f"d{did}")
+        v = np.where(bits, 240, 16).astype(np.uint8)
+        img = np.repeat(v[:, :, None], 3, axis=2)
+        return build_xpm(img, name=f"d{did}", cpp=1 + (did // 2) % 2)
 
-    def build(it):
-        import numpy as np
-        import pandas as pd
-
-        from ..operators.xim import build_xbm, build_xpm
-
-        ks = np.arange(64)
-        for b in it:
-            payloads = []
-            for mid in b["media_id"]:
-                did = int(mid)
-                bits = (((did * 47 + ks * 19) % 5) < 2).reshape(8, 8)
-                if did % 2 == 0:
-                    # XBM: 1 = foreground/black -> invert so bit
-                    # positions decode HIGH
-                    payloads.append(build_xbm(
-                        (~bits).astype(np.uint8), name=f"d{did}"))
-                else:
-                    v = np.where(bits, 240, 16).astype(np.uint8)
-                    img = np.repeat(v[:, :, None], 3, axis=2)
-                    payloads.append(build_xpm(
-                        img, name=f"d{did}", cpp=1 + (did // 2) % 2))
-            yield pd.DataFrame(
-                {"media_id": b["media_id"], "payload": payloads})
-
-    media = docs.mapInPandas(build, "media_id long, payload binary")
+    media = _media(_documents(spark, sf_dir, "doc_id"), build)
     return image_ahash(media, strict=True).sortWithinPartitions("media_id")
 
 
@@ -10052,9 +9672,7 @@ _add(
 # to 0 (255 per white pixel), the raster contributes 240/16 per bit.
 
 def _q_pdf_images(spark, sf_dir):
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(spark.table("documents"), "doc_id").select(
-        F.col("doc_id").alias("media_id"))
+    docs = _documents(spark, sf_dir, "doc_id AS media_id")
 
     def run(it):
         import numpy as np
@@ -10123,11 +9741,7 @@ _add(
 # pattern).
 
 def _q_dicom(spark, sf_dir):
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(
-        spark.table("documents").select(F.col("doc_id").alias("media_id")),
-        "media_id",
-    )
+    docs = _documents(spark, sf_dir, "doc_id AS media_id")
 
     def run(it):
         import numpy as np
@@ -10214,44 +9828,26 @@ _add(
 # pattern); vCard 2.1 QP/base64 conventions are pytest-pinned.
 
 def _q_ics(spark, sf_dir):
-    import re as _re
-
     from ..operators.extract import document_extract
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(
-        spark.table("documents").select("doc_id", "text"),
-        "doc_id",
-    )
+    def build(did, text):
+        c1 = re.sub(r"[^ -~]|[\\,;]", " ", (text or "")[:60])
+        mm = f"{1 + did % 12:02d}"
+        dd = f"{1 + did % 28:02d}"
+        hh = f"{did % 24:02d}"
+        return (
+            "BEGIN:VCALENDAR\r\nVERSION:2.0\r\n"
+            "PRODID:-//Synth//EN\r\n"
+            "BEGIN:VEVENT\r\n"
+            f"UID:evt-{did}@synth\r\n"
+            f"DTSTART;TZID=UTC:2026{mm}{dd}T{hh}0000\r\n"
+            # fold after 40 chars: one CRLF + single space
+            f"SUMMARY:{c1[:40]}\r\n {c1[40:]}\r\n"
+            f"LOCATION:Room {did % 97}\r\n"
+            "END:VEVENT\r\nEND:VCALENDAR\r\n"
+        ).encode()
 
-    def mux(it):
-        import pandas as pd
-
-        for pdf in it:
-            out = {"media_id": [], "payload": []}
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                c1 = _re.sub(r"[^ -~]|[\\,;]", " ",
-                             (text or "")[:60])
-                mm = f"{1 + did % 12:02d}"
-                dd = f"{1 + did % 28:02d}"
-                hh = f"{did % 24:02d}"
-                body = (
-                    "BEGIN:VCALENDAR\r\nVERSION:2.0\r\n"
-                    "PRODID:-//Synth//EN\r\n"
-                    "BEGIN:VEVENT\r\n"
-                    f"UID:evt-{did}@synth\r\n"
-                    f"DTSTART;TZID=UTC:2026{mm}{dd}T{hh}0000\r\n"
-                    # fold after 40 chars: one CRLF + single space
-                    f"SUMMARY:{c1[:40]}\r\n {c1[40:]}\r\n"
-                    f"LOCATION:Room {did % 97}\r\n"
-                    "END:VEVENT\r\nEND:VCALENDAR\r\n"
-                )
-                out["media_id"].append(did)
-                out["payload"].append(body.encode())
-            yield pd.DataFrame(out)
-
-    media = docs.mapInPandas(mux, "media_id long, payload binary")
+    media = _media(_documents(spark, sf_dir, "doc_id", "text"), build)
     return document_extract(media).sortWithinPartitions("media_id")
 
 
@@ -10286,45 +9882,24 @@ _add(
 def _q_latex(spark, sf_dir):
     from ..operators.extract import document_extract
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(spark.table("documents"), "doc_id").select(
-        F.col("doc_id").alias("media_id"),
-        F.coalesce("text", F.lit("")).alias("t"),
-    )
+    def build(_, t):
+        s1, s2, s3, s4, s5, s6 = (
+            _py_seg(t, off) for off in (1, 61, 121, 181, 241, 301))
+        return (
+            "\\documentclass{article}\n\\usepackage{x}\n"
+            "% preamble comment\n\\begin{document}\n"
+            "\\section{" + s1 + "}\n"
+            + s2 + " $x^2$ \\textbf{" + s3
+            + "} \\cite{k} more.\n"
+            "\\begin{equation}E=mc^2\\end{equation}\n"
+            "\\begin{itemize}\\item " + s4
+            + "\\item 50\\% of " + s5 + "\\end{itemize}\n"
+            "\\begin{figure}\\includegraphics{f}\\caption{"
+            + s6 + "}\\end{figure}\n\\end{document}"
+        ).encode("utf-8")
 
-    def build(it):
-        import re as _re
-
-        import pandas as pd
-
-        def seg(t, off):
-            return "seg" + _re.sub(
-                "[^a-z]", "", t[off - 1:off + 59].lower())
-
-        for b in it:
-            payloads = []
-            for t in b["t"]:
-                s1, s2, s3, s4, s5, s6 = (
-                    seg(t, off) for off in (1, 61, 121, 181, 241, 301))
-                tex = (
-                    "\\documentclass{article}\n\\usepackage{x}\n"
-                    "% preamble comment\n\\begin{document}\n"
-                    "\\section{" + s1 + "}\n"
-                    + s2 + " $x^2$ \\textbf{" + s3
-                    + "} \\cite{k} more.\n"
-                    "\\begin{equation}E=mc^2\\end{equation}\n"
-                    "\\begin{itemize}\\item " + s4
-                    + "\\item 50\\% of " + s5 + "\\end{itemize}\n"
-                    "\\begin{figure}\\includegraphics{f}\\caption{"
-                    + s6 + "}\\end{figure}\n\\end{document}"
-                )
-                payloads.append(tex.encode("utf-8"))
-            yield pd.DataFrame({"media_id": b["media_id"],
-                                "payload": payloads,
-                                "mime": ["text/x-tex"] * len(payloads)})
-
-    media = docs.mapInPandas(
-        build, "media_id long, payload binary, mime string")
+    docs = _documents(spark, sf_dir, "doc_id", "COALESCE(text, '') AS t")
+    media = _media(docs, build).withColumn("mime", F.lit("text/x-tex"))
     return document_extract(media, mime_col="mime").sortWithinPartitions("media_id")
 
 
@@ -10356,23 +9931,15 @@ _add(
 def _q_ass(spark, sf_dir):
     from ..operators.subtitles import ass_cues
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(spark.table("documents"), "doc_id").select(
-        F.col("doc_id"), F.coalesce("text", F.lit("")).alias("t"))
+    docs = _documents(spark, sf_dir, "doc_id", "COALESCE(text, '') AS t")
 
     def build(it):
-        import re as _re
-
         import pandas as pd
-
-        def seg(t, off):
-            return "seg" + _re.sub(
-                "[^a-z]", "", t[off - 1:off + 59].lower())
 
         for b in it:
             texts = []
             for did, t in zip(b["doc_id"], b["t"]):
-                s1, s2, s3 = (seg(t, o) for o in (1, 61, 121))
+                s1, s2, s3 = (_py_seg(t, o) for o in (1, 61, 121))
                 ss = int(did) % 50
                 texts.append(
                     "[Script Info]\nTitle: x\n\n[Events]\n"
@@ -10422,60 +9989,41 @@ _add(
 # the oracle stays container-agnostic (same rows as q_ar_cpio/q_7z).
 
 def _q_tgz(spark, sf_dir):
-    import pandas as pd
+    import bz2
+    import gzip
+    import io
+    import tarfile
 
-    from ..operators.archive import explode_archives
+    import pyarrow as pa
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(
-        spark.table("documents").select(
-        F.col("doc_id").alias("media_id"),
-        F.coalesce("text", F.lit("")).alias("t"),
-    ),
-        "media_id",
-    )
+    from ..operators.archive import build_lzip, explode_archives
 
-    def build(it):
-        import bz2
-        import gzip
-        import io
-        import tarfile
+    wraps = [
+        lambda raw: gzip.compress(raw, mtime=0),
+        bz2.compress,
+        lambda raw: pa.Codec("zstd").compress(raw, asbytes=True),
+        lambda raw: pa.Codec("lz4").compress(raw, asbytes=True),
+        build_lzip,
+    ]
 
-        import pyarrow as pa
+    def mk_tar(members):
+        buf = io.BytesIO()
+        with tarfile.open(fileobj=buf, mode="w") as tf:
+            for name, data in members:
+                ti = tarfile.TarInfo(name)
+                ti.size = len(data)
+                ti.mtime = 0
+                tf.addfile(ti, io.BytesIO(data))
+        return buf.getvalue()
 
-        def mk_tar(members):
-            buf = io.BytesIO()
-            with tarfile.open(fileobj=buf, mode="w") as tf:
-                for name, data in members:
-                    ti = tarfile.TarInfo(name)
-                    ti.size = len(data)
-                    ti.mtime = 0
-                    tf.addfile(ti, io.BytesIO(data))
-            return buf.getvalue()
+    def build(mid, t):
+        data = t.encode("utf-8")
+        return wraps[mid % 5](
+            mk_tar([("a.txt", data), ("b.txt", b"copy:" + data)])
+        )
 
-        from ..operators.archive import build_lzip
-
-        wraps = [
-            lambda raw: gzip.compress(raw, mtime=0),
-            bz2.compress,
-            lambda raw: pa.Codec("zstd").compress(raw, asbytes=True),
-            lambda raw: pa.Codec("lz4").compress(raw, asbytes=True),
-            build_lzip,
-        ]
-
-        for b in it:
-            payloads = []
-            for mid, t in zip(b["media_id"], b["t"]):
-                data = t.encode("utf-8")
-                raw = mk_tar(
-                    [("a.txt", data), ("b.txt", b"copy:" + data)]
-                )
-                payloads.append(wraps[int(mid) % 5](raw))
-            yield pd.DataFrame(
-                {"media_id": b["media_id"], "payload": payloads}
-            )
-
-    media = docs.mapInPandas(build, "media_id long, payload binary")
+    docs = _documents(spark, sf_dir, "doc_id", "COALESCE(text, '') AS t")
+    media = _media(docs, build)
     out = explode_archives(media, strict=True)
     return out.select(
         "media_id",
@@ -10508,16 +10056,8 @@ _add(
 # prefix, emitted verbatim by the oracle).
 
 def _q_iso(spark, sf_dir):
-    import pandas as pd
-
     from ..operators.archive import explode_archives
     from ..operators.iso9660 import build_iso
-
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(spark.table("documents"), "doc_id").select(
-        F.col("doc_id").alias("media_id"),
-        F.coalesce("text", F.lit("")).alias("t"),
-    )
 
     # odd docs: the Rock Ridge layout (8.3 short names in the ISO
     # fields, real >31-char names in SUSP NM entries) — the walker
@@ -10525,25 +10065,16 @@ def _q_iso(spark, sf_dir):
     rr_a = "a-rock-ridge-long-name-well-past-31-chars.txt"
     rr_b = "nested-dir-long-name/b-second-long-member-name.txt"
 
-    def build(it):
-        for b in it:
-            payloads = []
-            for mid, t in zip(b["media_id"], b["t"]):
-                data = t.encode("utf-8")
-                if int(mid) % 2:
-                    payloads.append(build_iso(
-                        [(rr_a, data), (rr_b, b"copy:" + data)],
-                        rr=True,
-                    ))
-                else:
-                    payloads.append(build_iso(
-                        [("A.TXT", data), ("SUB/B.TXT", b"copy:" + data)]
-                    ))
-            yield pd.DataFrame(
-                {"media_id": b["media_id"], "payload": payloads}
+    def build(mid, t):
+        data = t.encode("utf-8")
+        if mid % 2:
+            return build_iso(
+                [(rr_a, data), (rr_b, b"copy:" + data)], rr=True
             )
+        return build_iso([("A.TXT", data), ("SUB/B.TXT", b"copy:" + data)])
 
-    media = docs.mapInPandas(build, "media_id long, payload binary")
+    docs = _documents(spark, sf_dir, "doc_id", "COALESCE(text, '') AS t")
+    media = _media(docs, build)
     out = explode_archives(media, strict=True)
     return out.select(
         "media_id",
@@ -10581,48 +10112,32 @@ _add(
 # oracle rebuilds the JSON strings and the format by parity.
 
 def _q_columnar(spark, sf_dir):
-    import re as _re
+    import io
+
+    import pyarrow as pa
+    import pyarrow.ipc as ipc
+    import pyarrow.parquet as pq
 
     from ..operators.extract import document_extract
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(spark.table("documents"), "doc_id").select("doc_id", "text")
+    def build(m, text):
+        c1, c2 = _two_cells(text, _JSON_UNSAFE)
+        table = pa.table(
+            {
+                "id": pa.array([1, 2], pa.int64()),
+                "body": pa.array([c1, c2], pa.string()),
+                "n": pa.array([m % 7, m % 3], pa.int64()),
+            }
+        )
+        buf = io.BytesIO()
+        if m % 2 == 0:
+            pq.write_table(table, buf)
+        else:
+            with ipc.new_file(buf, table.schema) as w:
+                w.write_table(table)
+        return buf.getvalue()
 
-    def mux(it):
-        import io
-
-        import pandas as pd
-        import pyarrow as pa
-        import pyarrow.ipc as ipc
-        import pyarrow.parquet as pq
-
-        for pdf in it:
-            out = {"media_id": [], "payload": []}
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                t = text or ""
-                c1 = _re.sub(r'[^ -~]|["\\]', " ", t[:80])
-                c2 = _re.sub(r'[^ -~]|["\\]', " ", t[80:160])
-                m = int(did)
-                table = pa.table(
-                    {
-                        "id": pa.array([1, 2], pa.int64()),
-                        "body": pa.array([c1, c2], pa.string()),
-                        "n": pa.array(
-                            [m % 7, m % 3], pa.int64()
-                        ),
-                    }
-                )
-                buf = io.BytesIO()
-                if m % 2 == 0:
-                    pq.write_table(table, buf)
-                else:
-                    with ipc.new_file(buf, table.schema) as w:
-                        w.write_table(table)
-                out["media_id"].append(m)
-                out["payload"].append(buf.getvalue())
-            yield pd.DataFrame(out)
-
-    media = docs.mapInPandas(mux, "media_id long, payload binary")
+    media = _media(_documents(spark, sf_dir, "doc_id", "text"), build)
     return document_extract(media).sortWithinPartitions("media_id")
 
 
@@ -10654,39 +10169,21 @@ _add(
 # shape as q_avro.
 
 def _q_msgpack(spark, sf_dir):
-    import re as _re
-
     from ..operators.extract import document_extract
     from ..operators.msgpackfile import build_msgpack
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(spark.table("documents"), "doc_id").select("doc_id", "text")
+    def build(m, text):
+        c1, c2 = _two_cells(text, _JSON_UNSAFE)
+        return build_msgpack(
+            [
+                {"id": 1, "body": c1, "n": m % 7},
+                {"id": 2, "body": c2, "n": m % 3},
+            ]
+        )
 
-    def mux(it):
-        import pandas as pd
-
-        for pdf in it:
-            out = {"media_id": [], "payload": [], "mime": []}
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                t = text or ""
-                c1 = _re.sub(r'[^ -~]|["\\]', " ", t[:80])
-                c2 = _re.sub(r'[^ -~]|["\\]', " ", t[80:160])
-                m = int(did)
-                out["media_id"].append(m)
-                out["payload"].append(
-                    build_msgpack(
-                        [
-                            {"id": 1, "body": c1, "n": m % 7},
-                            {"id": 2, "body": c2, "n": m % 3},
-                        ]
-                    )
-                )
-                out["mime"].append("application/x-msgpack")
-            yield pd.DataFrame(out)
-
-    media = docs.mapInPandas(
-        mux, "media_id long, payload binary, mime string"
-    )
+    media = _media(
+        _documents(spark, sf_dir, "doc_id", "text"), build
+    ).withColumn("mime", F.lit("application/x-msgpack"))
     return document_extract(media, mime_col="mime").sortWithinPartitions("media_id")
 
 
@@ -10718,36 +10215,16 @@ _add(
 # rebuilds the JSON string arithmetically.
 
 def _q_protowire(spark, sf_dir):
-    import re as _re
-
     from ..operators.extract import document_extract
     from ..operators.protowire import build_protowire
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(spark.table("documents"), "doc_id").select("doc_id", "text")
+    def build(m, text):
+        c1, c2 = _two_cells(text, _JSON_UNSAFE)
+        return build_protowire([(1, m % 7), (2, c1), (3, c2), (4, m % 3)])
 
-    def mux(it):
-        import pandas as pd
-
-        for pdf in it:
-            out = {"media_id": [], "payload": [], "mime": []}
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                t = text or ""
-                c1 = _re.sub(r'[^ -~]|["\\]', " ", t[:80])
-                c2 = _re.sub(r'[^ -~]|["\\]', " ", t[80:160])
-                m = int(did)
-                out["media_id"].append(m)
-                out["payload"].append(
-                    build_protowire(
-                        [(1, m % 7), (2, c1), (3, c2), (4, m % 3)]
-                    )
-                )
-                out["mime"].append("application/x-protobuf")
-            yield pd.DataFrame(out)
-
-    media = docs.mapInPandas(
-        mux, "media_id long, payload binary, mime string"
-    )
+    media = _media(
+        _documents(spark, sf_dir, "doc_id", "text"), build
+    ).withColumn("mime", F.lit("application/x-protobuf"))
     return document_extract(media, mime_col="mime").sortWithinPartitions("media_id")
 
 
@@ -10784,24 +10261,11 @@ def _q_ppt(spark, sf_dir):
     from ..operators.extract import document_extract
     from ..operators.officedoc import build_ppt
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(spark.table("documents"), "doc_id").select("doc_id", "text")
+    def build(m, text):
+        t = (text or "").replace("\x0b", " ").replace("\x00", " ")
+        return build_ppt([t, f"notes {m % 12}"])
 
-    def mux(it):
-        import pandas as pd
-
-        for pdf in it:
-            out = {"media_id": [], "payload": []}
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                m = int(did)
-                t = (text or "").replace("\x0b", " ").replace("\x00", " ")
-                out["media_id"].append(m)
-                out["payload"].append(
-                    build_ppt([t, f"notes {m % 12}"])
-                )
-            yield pd.DataFrame(out)
-
-    media = docs.mapInPandas(mux, "media_id long, payload binary")
+    media = _media(_documents(spark, sf_dir, "doc_id", "text"), build)
     return document_extract(media).sortWithinPartitions("media_id")
 
 
@@ -10831,27 +10295,14 @@ def _q_ppt_fastsave(spark, sf_dir):
     from ..operators.extract import document_extract
     from ..operators.officedoc import build_ppt_fastsave
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(spark.table("documents"), "doc_id").select("doc_id", "text")
+    def build(m, text):
+        t = (text or "").replace("\x0b", " ").replace("\x00", " ")
+        return build_ppt_fastsave([
+            [f"superseded draft {m % 9}", "stale notes"],
+            [t, f"final {m % 12}"],
+        ])
 
-    def mux(it):
-        import pandas as pd
-
-        for pdf in it:
-            out = {"media_id": [], "payload": []}
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                m = int(did)
-                t = (text or "").replace("\x0b", " ").replace("\x00", " ")
-                out["media_id"].append(m)
-                out["payload"].append(
-                    build_ppt_fastsave([
-                        [f"superseded draft {m % 9}", "stale notes"],
-                        [t, f"final {m % 12}"],
-                    ])
-                )
-            yield pd.DataFrame(out)
-
-    media = docs.mapInPandas(mux, "media_id long, payload binary")
+    media = _media(_documents(spark, sf_dir, "doc_id", "text"), build)
     return document_extract(media).sortWithinPartitions("media_id")
 
 
@@ -10878,28 +10329,14 @@ _add(
 # the expected text with the same regexp — never touching a ZIP.
 
 def _q_epub(spark, sf_dir):
-    import re as _re
-
     from ..operators.extract import document_extract
     from ..operators.officedoc import build_epub
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(spark.table("documents"), "doc_id").select("doc_id", "text")
+    def build(m, text):
+        norm = re.sub(r"[ \t\r\n]+", " ", text or "").strip()
+        return build_epub([norm, f"chapter {m % 5}"])
 
-    def mux(it):
-        import pandas as pd
-
-        for pdf in it:
-            out = {"media_id": [], "payload": []}
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                norm = _re.sub(r"[ \t\r\n]+", " ", text or "").strip()
-                out["media_id"].append(int(did))
-                out["payload"].append(
-                    build_epub([norm, f"chapter {int(did) % 5}"])
-                )
-            yield pd.DataFrame(out)
-
-    media = docs.mapInPandas(mux, "media_id long, payload binary")
+    media = _media(_documents(spark, sf_dir, "doc_id", "text"), build)
     return document_extract(media).sortWithinPartitions("media_id")
 
 
@@ -11093,16 +10530,15 @@ _BOILER_HTML_EXPR = (
 def _q_boilerplate(spark, sf_dir):
     from ..operators.weburl import extract_main_text
 
-    register_testdata(spark, sf_dir, ["documents"])
     # r14: pure map chain (synth -> regexp block classifier) under a
     # global orderBy ran TWICE per action (the range sampling pass —
     # profiled as twin 0.48/0.49 s single-task stages) and in ONE task.
     # Range the cheap doc_id scan, synthesize after the exchange, end
     # with sortWithinPartitions — identical global order, chain once,
     # cluster-wide (the committed r13 codec-lane pattern).
-    pages = ranged_by(
-        spark.table("documents").select("doc_id"), "doc_id"
-    ).selectExpr("doc_id", _BOILER_HTML_EXPR + " AS html")
+    pages = _documents(
+        spark, sf_dir, "doc_id", _BOILER_HTML_EXPR + " AS html"
+    )
     return (
         pages
         .select("doc_id", extract_main_text("html").alias("text_out"))
@@ -11718,11 +11154,7 @@ _add(
 def _q_phash(spark, sf_dir):
     from ..operators.multimodal import image_phash
 
-    register_testdata(spark, sf_dir, ["documents"])
-    media = ranged_by(spark.table("documents"), "doc_id").select(
-        F.col("doc_id").alias("media_id"),
-        F.encode("text", "UTF-8").alias("payload"),
-    )
+    media = _documents(spark, sf_dir, *_TEXT_MEDIA)
     return (
         image_phash(media, strict=False)
         .select(
@@ -11863,32 +11295,14 @@ _add(
 # can derive the expected row without replaying the dispatch.
 
 def _q_gz_extract(spark, sf_dir):
+    import gzip
+
     from ..operators.extract import document_extract
 
     register_testdata(spark, sf_dir, ["documents"])
-
-    def gz(it):
-        import gzip
-
-        import pandas as pd
-
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": [
-                        gzip.compress(
-                            f"doc {did} {t or ''}".encode()
-                        )
-                        for did, t in zip(pdf["doc_id"], pdf["text"])
-                    ],
-                }
-            )
-
-    media = (
-        spark.table("documents")
-        .select("doc_id", "text")
-        .mapInPandas(gz, "media_id long, payload binary")
+    media = _media(
+        spark.table("documents").select("doc_id", "text"),
+        lambda did, t: gzip.compress(f"doc {did} {t or ''}".encode()),
     )
     return (
         document_extract(media)
@@ -11922,37 +11336,21 @@ _add(
 # (same member rows as q_iso / q_7z).
 
 def _q_squashfs(spark, sf_dir):
-    import pandas as pd
-
     from ..operators.archive import explode_archives
     from ..operators.squashfs import build_squashfs
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(
-        spark.table("documents").select(
-        F.col("doc_id").alias("media_id"),
-        F.coalesce("text", F.lit("")).alias("t"),
-    ),
-        "media_id",
-    )
-
     comps = ["gzip", "xz", "lz4", "zstd", "lzma", "lzo"]
 
-    def build(it):
-        for b in it:
-            payloads = []
-            for mid, t in zip(b["media_id"], b["t"]):
-                data = t.encode("utf-8")
-                payloads.append(build_squashfs(
-                    [("a.txt", data), ("sub/b.txt", b"copy:" + data)],
-                    use_fragments=bool(int(mid) % 2),
-                    compressor=comps[int(mid) % 6],
-                ))
-            yield pd.DataFrame(
-                {"media_id": b["media_id"], "payload": payloads}
-            )
+    def build(mid, t):
+        data = t.encode("utf-8")
+        return build_squashfs(
+            [("a.txt", data), ("sub/b.txt", b"copy:" + data)],
+            use_fragments=bool(mid % 2),
+            compressor=comps[mid % 6],
+        )
 
-    media = docs.mapInPandas(build, "media_id long, payload binary")
+    docs = _documents(spark, sf_dir, "doc_id", "COALESCE(text, '') AS t")
+    media = _media(docs, build)
     out = explode_archives(media, strict=True)
     return out.select(
         "media_id",
@@ -11990,41 +11388,23 @@ _add(
 # hash bits — this is a pixel-exactness gate, not a plumbing gate.
 
 def _q_webp(spark, sf_dir):
-    from ..operators.multimodal import image_ahash
+    import numpy as np
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(
-        spark.table("documents").select(
-        F.col("doc_id").alias("media_id")),
-        "media_id",
-    )
+    from ..operators.multimodal import image_ahash
+    from ..operators.webp import build_webp_lossless
 
     variants = ["literal", "cache", "backref", "subgreen",
                 "predictor", "palette", "colortx", "meta"]
 
-    def build(it):
-        import numpy as np
-        import pandas as pd
+    def build(did):
+        bits = ((did * 37 + np.arange(64) * 11) % 5) < 2
+        v = np.where(bits, 240, 16).astype(np.uint8)
+        img = np.empty((8, 8, 4), dtype=np.uint8)
+        img[:, :, 0] = img[:, :, 1] = img[:, :, 2] = v.reshape(8, 8)
+        img[:, :, 3] = 255
+        return build_webp_lossless(img, variant=variants[did % 8])
 
-        from ..operators.webp import build_webp_lossless
-
-        for b in it:
-            payloads = []
-            for mid in b["media_id"]:
-                did = int(mid)
-                ks = np.arange(64)
-                bits = ((did * 37 + ks * 11) % 5) < 2
-                v = np.where(bits, 240, 16).astype(np.uint8)
-                img = np.empty((8, 8, 4), dtype=np.uint8)
-                img[:, :, 0] = img[:, :, 1] = img[:, :, 2] = (
-                    v.reshape(8, 8))
-                img[:, :, 3] = 255
-                payloads.append(build_webp_lossless(
-                    img, variant=variants[did % 8]))
-            yield pd.DataFrame(
-                {"media_id": b["media_id"], "payload": payloads})
-
-    media = docs.mapInPandas(build, "media_id long, payload binary")
+    media = _media(_documents(spark, sf_dir, "doc_id"), build)
     return image_ahash(media, strict=True).sortWithinPartitions("media_id")
 
 
@@ -12061,37 +11441,20 @@ _add(
 # gap, so any ENTROPY mistake flips hash bits.
 
 def _q_jpeg_arith(spark, sf_dir):
+    import numpy as np
+
+    from ..operators.jpegarith import encode_jpeg_arith
     from ..operators.multimodal import image_ahash
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(
-        spark.table("documents").select(
-        F.col("doc_id").alias("media_id")),
-        "media_id",
-    )
+    def build(did):
+        bits = ((did * 29 + np.arange(64) * 13) % 7) < 3
+        v = np.where(bits, 240, 16).astype(np.uint8)
+        img = np.kron(v.reshape(8, 8), np.ones((2, 2), dtype=np.uint8))
+        if did % 2:
+            img = np.repeat(img[:, :, None], 3, axis=2)
+        return encode_jpeg_arith(img)
 
-    def build(it):
-        import numpy as np
-        import pandas as pd
-
-        from ..operators.jpegarith import encode_jpeg_arith
-
-        up = np.ones((2, 2), dtype=np.uint8)
-        for b in it:
-            payloads = []
-            for mid in b["media_id"]:
-                did = int(mid)
-                ks = np.arange(64)
-                bits = ((did * 29 + ks * 13) % 7) < 3
-                v = np.where(bits, 240, 16).astype(np.uint8)
-                img = np.kron(v.reshape(8, 8), up)
-                if did % 2:
-                    img = np.repeat(img[:, :, None], 3, axis=2)
-                payloads.append(encode_jpeg_arith(img))
-            yield pd.DataFrame(
-                {"media_id": b["media_id"], "payload": payloads})
-
-    media = docs.mapInPandas(build, "media_id long, payload binary")
+    media = _media(_documents(spark, sf_dir, "doc_id"), build)
     return image_ahash(media, strict=True).sortWithinPartitions("media_id")
 
 
@@ -12126,35 +11489,20 @@ _add(
 # libtiff in pytest.
 
 def _q_ccitt_fax(spark, sf_dir):
+    import numpy as np
+
+    from ..operators.ccittfax import build_tiff_fax
     from ..operators.multimodal import image_ahash
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(
-        spark.table("documents").select(
-        F.col("doc_id").alias("media_id")),
-        "media_id",
-    )
+    variants = [(2, False), (3, False), (3, True), (4, False)]
 
-    def build(it):
-        import numpy as np
-        import pandas as pd
+    def build(did):
+        white = ((did * 41 + np.arange(64) * 13) % 5) < 2
+        rows = (~white).astype(np.uint8).reshape(8, 8)
+        comp, td = variants[did % 4]
+        return build_tiff_fax(rows, comp, two_d=td)
 
-        from ..operators.ccittfax import build_tiff_fax
-
-        variants = [(2, False), (3, False), (3, True), (4, False)]
-        for b in it:
-            payloads = []
-            for mid in b["media_id"]:
-                did = int(mid)
-                ks = np.arange(64)
-                white = ((did * 41 + ks * 13) % 5) < 2
-                rows = (~white).astype(np.uint8).reshape(8, 8)
-                comp, td = variants[did % 4]
-                payloads.append(build_tiff_fax(rows, comp, two_d=td))
-            yield pd.DataFrame(
-                {"media_id": b["media_id"], "payload": payloads})
-
-    media = docs.mapInPandas(build, "media_id long, payload binary")
+    media = _media(_documents(spark, sf_dir, "doc_id"), build)
     return image_ahash(media, strict=True).sortWithinPartitions("media_id")
 
 
@@ -12189,9 +11537,7 @@ _add(
 # text-placement mistake flips hash bits.
 
 def _q_jbig2(spark, sf_dir):
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(spark.table("documents"), "doc_id").select(
-        F.col("doc_id").alias("media_id"))
+    docs = _documents(spark, sf_dir, "doc_id AS media_id")
 
     def run(it):
         import numpy as np
@@ -12272,9 +11618,7 @@ _add(
 # the sum).
 
 def _q_jpeg2000(spark, sf_dir):
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(spark.table("documents"), "doc_id").select(
-        F.col("doc_id").alias("media_id"))
+    docs = _documents(spark, sf_dir, "doc_id AS media_id")
 
     def run(it):
         import numpy as np
@@ -12331,9 +11675,7 @@ _add(
 # analytically in SQL.
 
 def _q_tiff_pages(spark, sf_dir):
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(spark.table("documents"), "doc_id").select(
-        F.col("doc_id").alias("media_id"))
+    docs = _documents(spark, sf_dir, "doc_id AS media_id")
 
     def run(it):
         import numpy as np
@@ -12393,35 +11735,20 @@ _add(
 # < 3 replays analytically; any predictor/entropy mistake flips bits.
 
 def _q_jpeg_lossless(spark, sf_dir):
+    import numpy as np
+
+    from ..operators.jpeglossless import build_jpeg_lossless
     from ..operators.multimodal import image_ahash
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(spark.table("documents"), "doc_id").select(
-        F.col("doc_id").alias("media_id"))
+    def build(did):
+        bits = ((did * 31 + np.arange(64) * 17) % 6) < 3
+        v = np.where(bits, 240, 16).astype(np.uint8)
+        img = np.kron(v.reshape(8, 8), np.ones((2, 2), dtype=np.uint8))
+        if did % 2:
+            img = np.repeat(img[:, :, None], 3, axis=2)
+        return build_jpeg_lossless(img, predictor=1 + did % 7)
 
-    def build(it):
-        import numpy as np
-        import pandas as pd
-
-        from ..operators.jpeglossless import build_jpeg_lossless
-
-        up = np.ones((2, 2), dtype=np.uint8)
-        for b in it:
-            payloads = []
-            for mid in b["media_id"]:
-                did = int(mid)
-                ks = np.arange(64)
-                bits = ((did * 31 + ks * 17) % 6) < 3
-                v = np.where(bits, 240, 16).astype(np.uint8)
-                img = np.kron(v.reshape(8, 8), up)
-                if did % 2:
-                    img = np.repeat(img[:, :, None], 3, axis=2)
-                payloads.append(build_jpeg_lossless(
-                    img, predictor=1 + did % 7))
-            yield pd.DataFrame(
-                {"media_id": b["media_id"], "payload": payloads})
-
-    media = docs.mapInPandas(build, "media_id long, payload binary")
+    media = _media(_documents(spark, sf_dir, "doc_id"), build)
     return image_ahash(media, strict=True).sortWithinPartitions("media_id")
 
 
@@ -12453,36 +11780,21 @@ _add(
 # decoded best frame == the analytic bit-pattern replay.
 
 def _q_ico(spark, sf_dir):
+    import numpy as np
+
+    from ..operators.ico import build_ico
     from ..operators.multimodal import image_ahash
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(spark.table("documents"), "doc_id").select(
-        F.col("doc_id").alias("media_id"))
+    def build(did):
+        bits = ((did * 41 + np.arange(64) * 19) % 8) < 4
+        v = np.where(bits, 240, 16).astype(np.uint8)
+        img = np.empty((8, 8, 4), dtype=np.uint8)
+        img[:, :, 0] = img[:, :, 1] = img[:, :, 2] = v.reshape(8, 8)
+        img[:, :, 3] = 255
+        decoy = np.full((4, 4, 4), 128, dtype=np.uint8)
+        return build_ico([decoy, img], png=bool(did % 2))
 
-    def build(it):
-        import numpy as np
-        import pandas as pd
-
-        from ..operators.ico import build_ico
-
-        for b in it:
-            payloads = []
-            for mid in b["media_id"]:
-                did = int(mid)
-                ks = np.arange(64)
-                bits = ((did * 41 + ks * 19) % 8) < 4
-                v = np.where(bits, 240, 16).astype(np.uint8)
-                img = np.empty((8, 8, 4), dtype=np.uint8)
-                img[:, :, 0] = img[:, :, 1] = img[:, :, 2] = \
-                    v.reshape(8, 8)
-                img[:, :, 3] = 255
-                decoy = np.full((4, 4, 4), 128, dtype=np.uint8)
-                payloads.append(build_ico([decoy, img],
-                                          png=bool(did % 2)))
-            yield pd.DataFrame(
-                {"media_id": b["media_id"], "payload": payloads})
-
-    media = docs.mapInPandas(build, "media_id long, payload binary")
+    media = _media(_documents(spark, sf_dir, "doc_id"), build)
     return image_ahash(media, strict=True).sortWithinPartitions("media_id")
 
 
@@ -12511,36 +11823,22 @@ _add(
 # cycles RLE vs raw, doc_id % 3 == 0 uses grayscale mode.
 
 def _q_psd(spark, sf_dir):
+    import numpy as np
+
     from ..operators.multimodal import image_ahash
+    from ..operators.psd import build_psd
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(spark.table("documents"), "doc_id").select(
-        F.col("doc_id").alias("media_id"))
+    def build(did):
+        bits = ((did * 43 + np.arange(64) * 23) % 9) < 4
+        v = np.where(bits, 240, 16).astype(np.uint8)
+        if did % 3 == 0:
+            img = v.reshape(8, 8)
+        else:
+            img = np.empty((8, 8, 3), dtype=np.uint8)
+            img[:, :, 0] = img[:, :, 1] = img[:, :, 2] = v.reshape(8, 8)
+        return build_psd(img, rle=bool(did % 2))
 
-    def build(it):
-        import numpy as np
-        import pandas as pd
-
-        from ..operators.psd import build_psd
-
-        for b in it:
-            payloads = []
-            for mid in b["media_id"]:
-                did = int(mid)
-                ks = np.arange(64)
-                bits = ((did * 43 + ks * 23) % 9) < 4
-                v = np.where(bits, 240, 16).astype(np.uint8)
-                if did % 3 == 0:
-                    img = v.reshape(8, 8)
-                else:
-                    img = np.empty((8, 8, 3), dtype=np.uint8)
-                    img[:, :, 0] = img[:, :, 1] = img[:, :, 2] = \
-                        v.reshape(8, 8)
-                payloads.append(build_psd(img, rle=bool(did % 2)))
-            yield pd.DataFrame(
-                {"media_id": b["media_id"], "payload": payloads})
-
-    media = docs.mapInPandas(build, "media_id long, payload binary")
+    media = _media(_documents(spark, sf_dir, "doc_id"), build)
     return image_ahash(media, strict=True).sortWithinPartitions("media_id")
 
 
@@ -12572,9 +11870,7 @@ _add(
 # analytically replayable; any wrong sample anywhere shifts the sum.
 
 def _q_dng(spark, sf_dir):
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(spark.table("documents"), "doc_id").select(
-        F.col("doc_id").alias("media_id"))
+    docs = _documents(spark, sf_dir, "doc_id AS media_id")
 
     def run(it):
         import numpy as np
@@ -12654,43 +11950,30 @@ _add(
 # every field is an integer formula of doc_id, replayed in SQL.
 
 def _q_heif_meta(spark, sf_dir):
+    import struct as _s
+
     from ..operators.exif import image_metadata
+    from ..operators.heif import build_heif_meta
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(spark.table("documents"), "doc_id").select(
-        F.col("doc_id").alias("media_id"))
+    def tiff(make: bytes) -> bytes:
+        hdr = b"II*\x00" + _s.pack("<I", 8)
+        val = 8 + 2 + 12 + 4
+        ifd = (_s.pack("<H", 1)
+               + _s.pack("<HHII", 0x010F, 2, len(make) + 1, val)
+               + _s.pack("<I", 0))
+        return hdr + ifd + make + b"\x00"
 
-    def build(it):
-        import struct as _s
+    def build(did):
+        return build_heif_meta(
+            1 + (did * 7) % 8192,
+            1 + (did * 13) % 8192,
+            avif=bool(did % 2),
+            rotation=did % 4,
+            exif_tiff=(tiff(b"make_%d" % (did % 16))
+                       if did % 3 == 0 else None),
+        )
 
-        import pandas as pd
-
-        from ..operators.heif import build_heif_meta
-
-        def tiff(make: bytes) -> bytes:
-            hdr = b"II*\x00" + _s.pack("<I", 8)
-            val = 8 + 2 + 12 + 4
-            ifd = (_s.pack("<H", 1)
-                   + _s.pack("<HHII", 0x010F, 2, len(make) + 1, val)
-                   + _s.pack("<I", 0))
-            return hdr + ifd + make + b"\x00"
-
-        for b in it:
-            payloads = []
-            for mid in b["media_id"]:
-                did = int(mid)
-                payloads.append(build_heif_meta(
-                    1 + (did * 7) % 8192,
-                    1 + (did * 13) % 8192,
-                    avif=bool(did % 2),
-                    rotation=did % 4,
-                    exif_tiff=(tiff(b"make_%d" % (did % 16))
-                               if did % 3 == 0 else None),
-                ))
-            yield pd.DataFrame(
-                {"media_id": b["media_id"], "payload": payloads})
-
-    media = docs.mapInPandas(build, "media_id long, payload binary")
+    media = _media(_documents(spark, sf_dir, "doc_id"), build)
     out = image_metadata(media, strict=True)
     return out.select(
         "media_id", "format", "width", "height", "make", "orientation"
@@ -13012,11 +12295,7 @@ _add(
 def _q_video_meta(spark, sf_dir):
     from ..operators.videometa import video_metadata
 
-    register_testdata(spark, sf_dir, ["documents"])
-    media = ranged_by(spark.table("documents"), "doc_id").select(
-        F.col("doc_id").alias("media_id"),
-        F.encode("text", "UTF-8").alias("payload"),
-    )
+    media = _documents(spark, sf_dir, *_TEXT_MEDIA)
     return video_metadata(media, strict=False).sortWithinPartitions("media_id")
 
 
@@ -13059,30 +12338,15 @@ def _q_mkv_meta(spark, sf_dir):
     from ..operators.mkv import build_mkv
     from ..operators.videometa import video_metadata
 
-    register_testdata(spark, sf_dir, ["documents"])
-    docs = ranged_by(spark.table("documents"), "doc_id").select(
-        F.col("doc_id").alias("media_id")
+    media = _media(
+        _documents(spark, sf_dir, "doc_id"),
+        lambda m: build_mkv(
+            width=16 * (1 + m % 120),
+            height=16 * (1 + m % 68),
+            duration_ms=(10 + m % 50) * (20 + m % 80),
+            frame_ms=20 + m % 80,
+        ),
     )
-
-    def mux(it):
-        import pandas as pd
-
-        for pdf in it:
-            out = {"media_id": [], "payload": []}
-            for mid in pdf["media_id"]:
-                m = int(mid)
-                out["media_id"].append(m)
-                out["payload"].append(
-                    build_mkv(
-                        width=16 * (1 + m % 120),
-                        height=16 * (1 + m % 68),
-                        duration_ms=(10 + m % 50) * (20 + m % 80),
-                        frame_ms=20 + m % 80,
-                    )
-                )
-            yield pd.DataFrame(out)
-
-    media = docs.mapInPandas(mux, "media_id long, payload binary")
     return video_metadata(media, strict=True).sortWithinPartitions("media_id")
 
 

@@ -1,122 +1,12 @@
-"""Physical storage layout for the logs table (SCALING.md §1).
+"""Physical storage layout helpers (SCALING.md §1).
 
-The reference's access paths are nine Postgres btrees (schema.sql:54-62).
-The columnar equivalent is layout, not indexes:
-
-- hash-partition *directories* by ``block_range = block_number DIV
-  range_size`` → partition pruning for every block-bounded query (backfill
-  windows, resume reconciliation, reorg checks);
-- ``sortWithinPartitions(address, topic0)`` → parquet row-group min/max
-  stats emulate the composite (address, topic0) btree (schema.sql:59) via
-  data skipping, and the per-topic single-column accesses ride the same
-  sort.
-
-``read_logs`` restores the logical ``logs`` schema (drops the derived
-partition column) so every view/query is layout-agnostic.
+``write_bucketed`` persists a table hash-bucketed on its join key, so two
+tables bucketed alike join without an Exchange.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
-DEFAULT_RANGE_SIZE = 100_000
-
-
-def write_logs_partitioned(
-    logs: DataFrame, path: str, range_size: int = DEFAULT_RANGE_SIZE
-) -> None:
-    (
-        logs.withColumn(
-            "block_range",
-            (F.col("block_number") / F.lit(range_size)).cast("long"),
-        )
-        .repartition("block_range")
-        .sortWithinPartitions("address", "topic0")
-        .write.mode("overwrite")
-        .partitionBy("block_range")
-        .parquet(path)
-    )
-
-
-def read_logs(spark: SparkSession, path: str) -> DataFrame:
-    df = spark.read.parquet(path)
-    return df.drop("block_range")
-
-
-def compact_block_range(
-    spark: SparkSession,
-    path: str,
-    block_range: int,
-    target_files: int = 1,
-) -> int:
-    """Compact one ``block_range=N`` partition directory in place: re-read,
-    coalesce to ``target_files``, restore the (address, topic0) sort, and
-    swap the directory.  Streaming micro-batches append small files to the
-    *newest* partition only, so steady-state compaction touches one bounded
-    directory per cycle (SCALING.md §1).
-
-    Scratch directories are dot-prefixed (``.compact-*`` / ``.old-*``) so
-    Spark's partition discovery ignores them — they never surface as bogus
-    ``block_range`` values to a concurrent reader.  Orphans from a crashed
-    previous run are swept on entry.
-
-    Durability contract: SINGLE WRITER, and the directory swap is two
-    ``os.rename`` calls — atomic per rename on a POSIX filesystem only.  A
-    reader listing files exactly between the two renames can miss the
-    partition, and on object stores (S3 etc.) rename is copy+delete and
-    not atomic at all: there, compact via a table format with commit
-    semantics (Iceberg/Delta rewrite) instead of this path.
-
-    Returns the row count of the compacted partition.
-    """
-    import os
-    import shutil
-    import uuid
-
-    # sweep orphaned scratch dirs left by a previous crashed compaction
-    for d in os.listdir(path):
-        if d.startswith(".compact-") or d.startswith(".old-"):
-            shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-
-    part_dir = os.path.join(path, f"block_range={block_range}")
-    df = (
-        spark.read.parquet(part_dir)
-        .coalesce(target_files)
-        .sortWithinPartitions("address", "topic0")
-    )
-    token = uuid.uuid4().hex[:8]
-    tmp = os.path.join(path, f".compact-{token}")
-    df.write.mode("overwrite").parquet(tmp)
-    n = spark.read.parquet(tmp).count()
-    old = os.path.join(path, f".old-{token}")
-    os.rename(part_dir, old)
-    os.rename(tmp, part_dir)
-    shutil.rmtree(old, ignore_errors=True)
-    return n
-
-
-def read_logs_block_window(
-    spark: SparkSession,
-    path: str,
-    from_block: int,
-    to_block: int,
-    range_size: int = DEFAULT_RANGE_SIZE,
-) -> DataFrame:
-    """Block-window scan that prunes partitions via the derived
-    ``block_range`` predicate (the planner can't infer it from
-    ``block_number`` alone — deriving it here is what makes the directory
-    layout pay off)."""
-    df = spark.read.parquet(path)
-    lo, hi = from_block // range_size, to_block // range_size
-    return (
-        df.filter(
-            (F.col("block_range") >= lo)
-            & (F.col("block_range") <= hi)
-            & (F.col("block_number") >= from_block)
-            & (F.col("block_number") <= to_block)
-        )
-        .drop("block_range")
-    )
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(

@@ -5,58 +5,24 @@ Usage: python scripts/check_parity.py [sf_dir]
 Runs every parity query on Spark and its oracle on DuckDB, canonicalizes
 (order-insensitive rows, columns sorted by name), and prints PASS/FAIL per
 query plus a summary — same convention as CORRECTNESS_r{N}.json.
+Environment: SKIP_QUERIES / ONLY_QUERIES (comma lists), POOL (thread
+count; >1 pools the non-serial gates), SWEEP_OUT (JSON record path).
 """
 
 from __future__ import annotations
 
-import datetime as dt
-import math
+import os
 import sys
-import time
-from decimal import Decimal
 
-import duckdb
-
+from evm_archive_spark.parity.check import check, oracle_connection, serial
 from evm_archive_spark.parity.queries import PARITY_QUERIES
-from evm_archive_spark.schemas import TESTDATA_TABLES
 from evm_archive_spark.session import get_spark
-
-
-def _canon_value(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    if isinstance(v, Decimal):
-        return str(v.normalize()) if v == v.to_integral_value() else str(v)
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return repr(v)
-    if isinstance(v, dt.datetime):
-        return v.replace(tzinfo=None).isoformat()
-    if isinstance(v, dt.date):
-        return v.isoformat()
-    if isinstance(v, list):
-        return "[" + ",".join(_canon_value(x) for x in v) + "]"
-    return str(v)
-
-
-def canon(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(tuple(_canon_value(r[i]) for i in order) for r in rows)
 
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = get_spark()
-    duck = duckdb.connect()
-    for t in TESTDATA_TABLES:
-        duck.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-
-    import os
+    duck = oracle_connection(sf_dir)
 
     skip = set(filter(None, os.environ.get("SKIP_QUERIES", "").split(",")))
     only = set(filter(None, os.environ.get("ONLY_QUERIES", "").split(",")))
@@ -67,50 +33,17 @@ def main() -> int:
         if q.name not in skip and (not only or q.name in only)
     ]
 
-    def check(q, con):
-        """Returns (name, message-or-None, detail)."""
-        t0 = time.time()
-        try:
-            sdf = q.spark(spark, sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
-        except Exception as e:  # noqa: BLE001
-            return q.name, f"spark error {e!r}", ""
-        if q.oracle is None:
-            return (q.name, None,
-                    f"rows-only, {len(srows)} rows, "
-                    f"{time.time() - t0:.1f}s",
-                    {"rows": len(srows),
-                     "wall_s": round(time.time() - t0, 2),
-                     "mode": "ROWS_ONLY"})
-        try:
-            res = con.execute(q.oracle)
-            ocols = [d[0] for d in res.description]
-            orows = res.fetchall()
-        except Exception as e:  # noqa: BLE001
-            return q.name, f"oracle error {e!r}", ""
-        if sorted(scols) != sorted(ocols):
-            return q.name, f"columns {scols} vs {ocols}", ""
-        sc, oc = canon(srows, scols), canon(orows, ocols)
-        if sc != oc:
-            diffs = [(a, b) for a, b in zip(sc, oc) if a != b][:3]
-            return q.name, f"rows {len(sc)} vs {len(oc)}, diffs {diffs}", ""
-        return (q.name, None,
-                f"{len(sc)} rows, {time.time() - t0:.1f}s",
-                {"rows": len(sc), "wall_s": round(time.time() - t0, 2),
-                 "mode": "PASS"})
-
     failures = []
     gates: dict[str, dict] = {}
 
-    def report(name, msg, detail, rec=None):
-        if msg:
-            failures.append(name)
-            gates[name] = {"pass": False, "mode": "FAIL", "why": msg}
-            print(f"FAIL {name}: {msg}", flush=True)
+    def report(r):
+        if r.ok:
+            gates[r.name] = {"pass": True, "mode": r.mode, "rows": r.rows,
+                             "wall_s": r.wall_s}
         else:
-            gates[name] = {"pass": True, **(rec or {})}
-            print(f"PASS {name} ({detail})", flush=True)
+            failures.append(r.name)
+            gates[r.name] = {"pass": False, "mode": "FAIL"}
+        print(r, flush=True)
 
     if pool > 1:
         # Same split as tests/test_parity.py: streaming + RPC-DataSource
@@ -118,32 +51,23 @@ def main() -> int:
         # DuckDB connections.
         from concurrent.futures import ThreadPoolExecutor
 
-        serial_names = {"q_ingest_transform", "q_enrich_ts", "q_rpc_ingest",
-                        "q_price_source"}
-        pooled = [q for q in todo
-                  if not q.name.startswith("q_st") and q.name not in serial_names]
-        serial = [q for q in todo if q not in pooled]
+        pooled = [q for q in todo if not serial(q)]
 
         def run_pooled(q):
-            con = duckdb.connect()
+            con = oracle_connection(sf_dir)
             try:
-                for t in TESTDATA_TABLES:
-                    con.execute(
-                        f"CREATE VIEW {t} AS SELECT * FROM "
-                        f"read_parquet('{sf_dir}/{t}.parquet')"
-                    )
-                return check(q, con)
+                return check(spark, q, sf_dir, con)
             finally:
                 con.close()
 
         with ThreadPoolExecutor(max_workers=pool) as ex:
             for res in ex.map(run_pooled, pooled):
-                report(*res)
-        for q in serial:
-            report(*check(q, duck))
+                report(res)
+        todo_serial = [q for q in todo if serial(q)]
     else:
-        for q in todo:
-            report(*check(q, duck))
+        todo_serial = todo
+    for q in todo_serial:
+        report(check(spark, q, sf_dir, duck))
 
     print(f"\n{len(todo) - len(failures)}/{len(todo)} ok; "
           f"failures: {failures}")

@@ -12,14 +12,11 @@ Default checks the first 50 registry entries (the graded window).
 from __future__ import annotations
 
 import sys
-import time
 
-import duckdb
 from pyspark.sql import SparkSession
 
+from evm_archive_spark.parity.check import check, oracle_connection
 from evm_archive_spark.parity.queries import PARITY_QUERIES
-from evm_archive_spark.schemas import TESTDATA_TABLES
-from scripts.check_parity import canon
 
 
 def main() -> int:
@@ -49,71 +46,25 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    duck = duckdb.connect()
-    for t in TESTDATA_TABLES:
-        duck.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    duck = oracle_connection(sf_dir)
 
     todo = [q for q in PARITY_QUERIES[:head] if only is None or q.name in only]
     failures = []
     record: dict[str, dict] = {}
 
-    def note(name, status, rows, t0, detail=None):
-        record[name] = {
-            "pass": status in ("PASS", "rows_only"),
-            "mode": status,
-            "rows": rows,
-            "wall_s": round(time.time() - t0, 2),
-        }
-        if detail:
-            record[name]["detail"] = detail
-
     for q in todo:
-        t0 = time.time()
-        try:
-            sdf = q.spark(spark, sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
-        except Exception as e:  # noqa: BLE001
+        r = check(spark, q, sf_dir, duck)
+        record[q.name] = {
+            "pass": r.ok,
+            "mode": r.mode,
+            "rows": r.rows,
+            "wall_s": r.wall_s,
+        }
+        if r.mode in ("spark_error", "oracle_error"):
+            record[q.name]["detail"] = r.why[:200]
+        if not r.ok:
             failures.append(q.name)
-            note(q.name, "spark_error", 0, t0, repr(e)[:200])
-            print(f"FAIL {q.name}: spark error {e!r}", flush=True)
-            continue
-        if q.oracle is None:
-            note(q.name, "rows_only", len(srows), t0)
-            print(f"ok   {q.name} (rows-only, {len(srows)} rows)", flush=True)
-            continue
-        try:
-            res = duck.execute(q.oracle)
-            ocols = [d[0] for d in res.description]
-            orows = res.fetchall()
-        except Exception as e:  # noqa: BLE001
-            failures.append(q.name)
-            note(q.name, "oracle_error", len(srows), t0, repr(e)[:200])
-            print(f"FAIL {q.name}: oracle error {e!r}", flush=True)
-            continue
-        if sorted(scols) != sorted(ocols):
-            failures.append(q.name)
-            note(q.name, "schema_mismatch", len(srows), t0)
-            print(f"FAIL {q.name}: columns {scols} vs {ocols}", flush=True)
-            continue
-        sc, oc = canon(srows, scols), canon(orows, ocols)
-        if sc != oc:
-            failures.append(q.name)
-            diffs = [(a, b) for a, b in zip(sc, oc) if a != b][:3]
-            note(q.name, "value_mismatch", len(sc), t0)
-            print(
-                f"FAIL {q.name}: rows {len(sc)} vs {len(oc)}, diffs {diffs}",
-                flush=True,
-            )
-            continue
-        note(q.name, "PASS", len(sc), t0)
-        print(
-            f"PASS {q.name} ({len(sc)} rows, {time.time() - t0:.1f}s)",
-            flush=True,
-        )
+        print(r, flush=True)
 
     print(f"\n{len(todo) - len(failures)}/{len(todo)} ok; failures: {failures}")
     if out_path:

@@ -238,7 +238,7 @@ def test_cosine_near_duplicate_pairs_planted(spark):
 def _pooled_ivf_bucketed_persist_prunes_partitions(spark):
     """SCALING.md §6 layout exercised end-to-end: corpus persisted
     hive-partitioned by centroid_id, probe scans only the nprobe lists
-    (PartitionFilters pinned, like test_storage does for block_range),
+    (PartitionFilters pinned),
     and nprobe == n_centroids reproduces exact brute force.
     (r13: pooled — was a 5.9 s standalone item.)"""
     import contextlib
@@ -1567,6 +1567,8 @@ def test_fan_out_and_ranged_by_scale_guards(spark):
     n = spark.sparkContext.defaultParallelism
     scan = spark.range(1000).select(F.col("id").alias("doc_id"))
     assert _shuffle_free(scan)
+    # a literal whose text looks like a plan node is not a node
+    assert _shuffle_free(spark.range(10).withColumn("s", F.lit("x\nSort y")))
     shuffled = scan.groupBy("doc_id").count()
     assert not _shuffle_free(shuffled)
     # no-op on shuffled input: same object back, no repartition added

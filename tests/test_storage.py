@@ -1,106 +1,7 @@
-"""Partitioned-layout tests: directory pruning + round-trip fidelity."""
+"""Bucketed-layout tests: ``storage.write_bucketed`` tables join without
+an Exchange on the bucketed side."""
 
 from __future__ import annotations
-
-import contextlib
-import io
-import os
-
-from pyspark.sql import functions as F
-
-from evm_archive_spark import fixtures, storage
-
-
-def _synthetic_logs(spark, n=2000, range_size=100):
-    i = F.col("id")
-    return spark.range(n).select(
-        F.format_string("0x%040x", F.pmod(i, F.lit(7))).alias("address"),
-        F.format_string("0x%064x", F.pmod(i, F.lit(3))).alias("topic0"),
-        F.lit("").alias("topic1"),
-        F.lit("").alias("topic2"),
-        F.lit("").alias("topic3"),
-        F.format_string("0x%064x", i).alias("data"),
-        F.format_string("0x%064x", F.expr("id DIV 10")).alias("block_hash"),
-        F.expr("id DIV 2").alias("block_number"),
-        F.format_string("0x%064x", i).alias("transaction_hash"),
-        F.lit(0).cast("long").alias("transaction_index"),
-        F.pmod(i, F.lit(2)).cast("long").alias("log_index"),
-        F.lit(False).alias("removed"),
-        F.lit(None).cast("timestamp").alias("block_timestamp"),
-    )
-
-
-def test_partitioned_roundtrip_and_layout(spark, tmp_path):
-    path = str(tmp_path / "logs_part")
-    logs = _synthetic_logs(spark)
-    storage.write_logs_partitioned(logs, path, range_size=100)
-    # hive-style block_range=N directories exist
-    dirs = sorted(d for d in os.listdir(path) if d.startswith("block_range="))
-    assert dirs == [f"block_range={i}" for i in range(10)]
-    back = storage.read_logs(spark, path)
-    assert back.count() == logs.count()
-    assert sorted(back.columns) == sorted(logs.columns)
-
-
-def test_block_window_prunes_partitions(spark, tmp_path):
-    path = str(tmp_path / "logs_part")
-    storage.write_logs_partitioned(_synthetic_logs(spark), path, range_size=100)
-    df = storage.read_logs_block_window(spark, path, 150, 249, range_size=100)
-    rows = df.select("block_number").distinct().collect()
-    got = sorted(r[0] for r in rows)
-    assert got[0] == 150 and got[-1] == 249
-    # the derived block_range predicate must surface as a partition filter
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
-    assert "PartitionFilters" in plan
-    assert "block_range" in plan.split("PartitionFilters", 1)[1].splitlines()[0]
-
-
-def test_sorted_layout_skips_on_address(spark, tmp_path):
-    # address/topic0 predicates must be pushed so row-group stats of the
-    # sorted files can skip (the btree emulation, SCALING.md §1)
-    path = str(tmp_path / "logs_part")
-    storage.write_logs_partitioned(_synthetic_logs(spark), path, range_size=100)
-    df = storage.read_logs(spark, path).filter(
-        (F.col("address") == "0x" + "0" * 39 + "1")
-        & (F.col("topic0") == "0x" + "0" * 63 + "1")
-    )
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
-    assert "EqualTo(address," in plan and "EqualTo(topic0," in plan
-    assert df.count() > 0
-
-
-def test_compact_block_range(spark, tmp_path):
-    import os
-
-    path = str(tmp_path / "logs_part")
-    logs = _synthetic_logs(spark)
-    # write fragmented: many small files inside each partition
-    (
-        logs.withColumn(
-            "block_range", (F.col("block_number") / F.lit(100)).cast("long")
-        )
-        .repartition(16)
-        .write.mode("overwrite")
-        .partitionBy("block_range")
-        .parquet(path)
-    )
-    part = os.path.join(path, "block_range=0")
-    before = len([f for f in os.listdir(part) if f.endswith(".parquet")])
-    assert before > 1
-    n_before = spark.read.parquet(part).count()
-
-    n = storage.compact_block_range(spark, path, 0)
-    after = len([f for f in os.listdir(part) if f.endswith(".parquet")])
-    assert after == 1
-    assert n == n_before
-    # whole-table read still sees every row with the logical schema
-    assert storage.read_logs(spark, path).count() == logs.count()
 
 
 def test_bucketed_join_has_no_exchange(spark, tmp_path):
@@ -146,56 +47,6 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         spark.sql("DROP TABLE IF EXISTS t_logs_b")
         spark.sql("DROP TABLE IF EXISTS t_prices_b")
-
-
-def test_zorder_manifest_prunes_both_dimensions(spark, tmp_path):
-    """Z-order + manifest: a range predicate on EITHER clustered column
-    prunes files; under a plain single-column sort only the first column
-    is selective.  Result equality vs a full-scan filter is exact."""
-    from evm_archive_spark import skipping
-
-    n = 40_000
-    df = spark.range(n).selectExpr(
-        "id",
-        "CAST(id % 200 AS LONG) AS a",
-        "CAST((id * 7919) % 200 AS LONG) AS b",
-    )
-    zpath, spath = str(tmp_path / "z"), str(tmp_path / "s")
-    skipping.write_zordered(df, zpath, ["a", "b"], n_files=16)
-    # contrast layout: sorted by a only
-    (
-        df.repartitionByRange(16, "a")
-        .sortWithinPartitions("a")
-        .write.mode("overwrite")
-        .parquet(spath)
-    )
-
-    man_z = skipping.build_manifest(spark, zpath, ["a", "b"]).cache()
-    man_s = skipping.build_manifest(spark, spath, ["a", "b"]).cache()
-    total_z = man_z.count()
-    total_s = man_s.count()
-
-    pred = {"a": (20, 40), "b": (100, 120)}
-    kept_z = len(skipping.prune_files(man_z, pred))
-    assert kept_z < total_z  # 2-dim predicate prunes under z-order
-
-    # predicate on the SECOND column only: z-order prunes, plain sort can't
-    kept_z_b = len(skipping.prune_files(man_z, {"b": (100, 120)}))
-    kept_s_b = len(skipping.prune_files(man_s, {"b": (100, 120)}))
-    assert kept_z_b < total_z
-    assert kept_s_b == total_s
-
-    got = (
-        skipping.read_pruned(spark, man_z, pred)
-        .filter("a BETWEEN 20 AND 40 AND b BETWEEN 100 AND 120")
-        .select("id")
-    )
-    expect = df.filter("a BETWEEN 20 AND 40 AND b BETWEEN 100 AND 120").select("id")
-    assert sorted(r["id"] for r in got.collect()) == sorted(
-        r["id"] for r in expect.collect()
-    )
-    man_z.unpersist()
-    man_s.unpersist()
 
 
 def test_incremental_minhash_bucketed_index_one_sided(spark, tmp_path):
