@@ -268,28 +268,11 @@ def sink_upsert_200k(spark, sf_dir: str):
     import tempfile
     import threading
 
-    from pyspark.sql import functions as F
-
     from evm_archive_spark.schemas import LOGS_PK
     from evm_archive_spark.sinks import upsert
 
     n = 200_000
-    i = F.col("id")
-    logs = spark.range(n).select(
-        F.format_string("0x%040x", F.pmod(i, F.lit(50))).alias("address"),
-        F.format_string("0x%064x", F.pmod(i, F.lit(10))).alias("topic0"),
-        F.lit("").alias("topic1"),
-        F.lit("").alias("topic2"),
-        F.lit("").alias("topic3"),
-        F.format_string("0x%064x", i).alias("data"),
-        F.format_string("0x%064x", F.expr("id DIV 100")).alias("block_hash"),
-        F.expr("id DIV 100").alias("block_number"),
-        F.format_string("0x%064x", i).alias("transaction_hash"),
-        F.pmod(i, F.lit(500)).cast("long").alias("transaction_index"),
-        F.pmod(i, F.lit(100)).cast("long").alias("log_index"),
-        F.lit(False).alias("removed"),
-        F.lit(None).cast("timestamp").alias("block_timestamp"),
-    )
+    logs = _pg_logs_df(spark, n)
     base = tempfile.mkdtemp(prefix="sink_bench_")
 
     def factory():
@@ -425,20 +408,6 @@ def stage_pg_input(spark, n: int = 200_000) -> str:
     return path
 
 
-def sink_pg_insert_200k(spark, staged: str, pg: "_ScratchPg") -> int:
-    """Baseline: the interpolated-text executemany path into live
-    PostgreSQL (the r2 q_sink_upsert shape, real server)."""
-    from evm_archive_spark.schemas import LOGS_PK
-    from evm_archive_spark.sinks import upsert
-
-    pg.reset_logs()
-    r = upsert.write_conflict_ignore(
-        spark.read.parquet(staged), "logs", LOGS_PK,
-        pg.factory(), paramstyle="format", parallel=True,
-    )
-    return r.attempted
-
-
 def sink_pg_copy_200k(spark, staged: str, pg: "_ScratchPg") -> int:
     """Bulk path (VERDICT r2 #5): COPY FROM STDIN into a temp stage + one
     set-based ON CONFLICT merge per partition writer, Arrow-CSV encoded."""
@@ -448,7 +417,7 @@ def sink_pg_copy_200k(spark, staged: str, pg: "_ScratchPg") -> int:
     pg.reset_logs()
     r = upsert.write_conflict_ignore(
         spark.read.parquet(staged), "logs", LOGS_PK,
-        pg.factory(), parallel=True, method="copy",
+        pg.factory(), parallel=True,
     )
     return r.attempted
 
@@ -463,7 +432,7 @@ def sink_pg_copy_part_200k(spark, staged: str, pg: "_ScratchPg") -> int:
     pg.reset_logs_partitioned(8)
     r = upsert.write_conflict_ignore(
         spark.read.parquet(staged), "logs", LOGS_PK,
-        pg.factory(), parallel=True, method="copy",
+        pg.factory(), parallel=True,
     )
     return r.attempted
 
@@ -477,11 +446,14 @@ def sink_pg_copy_part_200k(spark, staged: str, pg: "_ScratchPg") -> int:
 N_RUNS = 3
 
 
-def run_pg_sinks(spark, timings: dict[str, float]) -> float:
-    """Time the three live-Postgres sink benches (median-of-3 each)
-    into ``timings``; returns their wall-clock sum.  Called at the HEAD
-    of the bench so their medians see the same box load every round
-    instead of whatever the 60-query tail left behind."""
+def run_pg_sinks(
+    spark, timings: dict[str, float], n_rows: int = 200_000
+) -> float:
+    """Time the two live-Postgres sink benches (median-of-3 each) over
+    ``n_rows`` staged rows into ``timings``; returns their wall-clock
+    sum.  Called at the HEAD of the bench so their medians see the same
+    box load every round instead of whatever the 60-query tail left
+    behind."""
     pg = _ScratchPg()
     if not pg.ok:
         print(
@@ -491,21 +463,17 @@ def run_pg_sinks(spark, timings: dict[str, float]) -> float:
     import shutil
 
     total = 0.0
-    staged = stage_pg_input(spark)
+    staged = stage_pg_input(spark, n_rows)
     try:
-        # warm the Arrow-CSV writer path (pyarrow.csv import in each
-        # Python worker is a session cost, same convention as the
-        # DataSource pool warm-up): tiny copy into a scratch table
-        from evm_archive_spark.schemas import LOGS_PK
-        from evm_archive_spark.sinks import upsert as _ups
-
-        pg.reset_logs()
-        _ups.write_conflict_ignore(
-            spark.read.parquet(staged).limit(1000).repartition(8),
-            "logs", LOGS_PK, pg.factory(), parallel=True, method="copy",
-        )
+        # untimed full runs warm the Arrow-CSV writers (pyarrow.csv
+        # import in each Python worker is a session cost, same convention
+        # as the DataSource pool warm-up) and the JVM paths: behind a
+        # 1000-row warm-up the first timed 200k run took 4.4-5.6 s and
+        # behind one full run 2.9-3.7 s, against ~2.5 s warm (4-core box,
+        # local[4])
+        for _ in range(N_RUNS):
+            sink_pg_copy_200k(spark, staged, pg)
         for name, fn in (
-            ("q_sink_pg_insert", sink_pg_insert_200k),
             ("q_sink_pg_copy", sink_pg_copy_200k),
             ("q_sink_pg_copy_part", sink_pg_copy_part_200k),
         ):
@@ -520,7 +488,8 @@ def run_pg_sinks(spark, timings: dict[str, float]) -> float:
             timings[name] = round(dt, 4)
             total += dt
             print(
-                f"# {name}: {dt:.3f}s ({n} rows, {n / dt:,.0f} rows/s)",
+                f"# {name}: {dt:.3f}s ({n} rows, {n / dt:,.0f} rows/s; "
+                f"runs {[round(r, 3) for r in runs]})",
                 file=sys.stderr,
             )
     finally:
@@ -618,7 +587,7 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     # SPARK_GRAFT_ONLY=a,b,c restricts the run to a named subset (used
     # by the sf1 scale-up study — BASELINE.md's 10x table); the PG
-    # sink trio is skipped unless explicitly named.  Unset = full set.
+    # sink pair is skipped unless explicitly named.  Unset = full set.
     only_env = os.environ.get("SPARK_GRAFT_ONLY", "").strip()
     only = set(only_env.split(",")) if only_env else None
 
@@ -664,8 +633,7 @@ def main() -> None:
     # at the tail of the 60+-query run their medians inherited
     # end-of-run box load (r6 recorded 3.24 s vs 2.09 s isolated);
     # leading the bench gives them the same quiet box every round.
-    if only is None or only & {
-            "q_sink_pg_insert", "q_sink_pg_copy", "q_sink_pg_copy_part"}:
+    if only is None or only & {"q_sink_pg_copy", "q_sink_pg_copy_part"}:
         total += run_pg_sinks(spark, timings)
 
     rerunners: dict = {}
@@ -718,14 +686,13 @@ def main() -> None:
 
     sentinel_end = _sentinel(spark)
     load_end = os.getloadavg()
-    # self-heal pass (the PG trio is out of scope — its cluster is
+    # self-heal pass (the PG pair is out of scope — its cluster is
     # torn down; it already runs at the quiet head of the bench)
     heal = _self_heal(
         spark, timings, rerunners, [sentinel_start, sentinel_end], sf)
     total += sum(
-        v for k, v in timings.items() if k not in ("q_sink_pg_insert",
-                                                   "q_sink_pg_copy",
-                                                   "q_sink_pg_copy_part"))
+        v for k, v in timings.items()
+        if k not in ("q_sink_pg_copy", "q_sink_pg_copy_part"))
     record = {
         "metric": "headline_queries_wall",
         "value": round(total, 4),

@@ -1065,7 +1065,7 @@ def image_dedup_pipeline(
     Returns surviving ``(media_id, ahash)`` rows — the hash rides along
     so survivors can be appended straight into a persisted
     ``image_hash_index`` (the incremental lane's state)."""
-    from .dedup import connected_components
+    from .dedup import dedup_survivors
 
     # materialize the hashes ONCE: the lane references them three times
     # (both sides of the band join + the survivor join-back), and without
@@ -1076,11 +1076,7 @@ def image_dedup_pipeline(
         media, payload_col, id_col, strict=strict
     ).localCheckpoint(eager=True)
     pairs = image_near_duplicates(hashes, max_hamming, id_col, "ahash")
-    comp = connected_components(pairs)
-    losers = comp.filter(F.col("node") != F.col("component")).select(
-        F.col("node").alias(id_col)
-    )
-    return hashes.join(losers, id_col, "left_anti")
+    return dedup_survivors(hashes, pairs, id_col)
 
 
 def prepare_image_corpus(
@@ -1114,7 +1110,7 @@ def prepare_image_corpus(
     the already-gated operators (q_image_meta, q_exif_scrub,
     q_image_dedup); q_image_corpus hash-checks the composition
     end-to-end."""
-    from .dedup import connected_components
+    from .dedup import dedup_survivors
     from .exif import image_metadata
 
     # the dims frame is referenced twice (admission join + final dims
@@ -1136,11 +1132,7 @@ def prepare_image_corpus(
     pairs = image_near_duplicates(
         hk.select("media_id", "ahash"), max_hamming, "media_id", "ahash"
     )
-    comp = connected_components(pairs)
-    losers = comp.filter(F.col("node") != F.col("component")).select(
-        F.col("node").alias("media_id")
-    )
-    survivors = hk.join(losers, "media_id", "left_anti")
+    survivors = dedup_survivors(hk, pairs, "media_id")
     return survivors.join(ok, "media_id").select(
         "media_id", "width", "height", "out_md5"
     )
@@ -1167,7 +1159,7 @@ def prepare_audio_corpus(
     q_audio_neardup); q_audio_corpus hash-checks the composition
     end-to-end over the shared sha256 fake profiles."""
     from .audiometa import audio_metadata
-    from .dedup import connected_components
+    from .dedup import dedup_survivors
 
     # both floor frames are referenced twice (admission join + final
     # join-back); without the cut each reference re-runs its payload
@@ -1193,11 +1185,7 @@ def prepare_audio_corpus(
     # fingerprint once (the decode pass); three downstream references
     fp = audio_fingerprint(m3, strict=strict).localCheckpoint(eager=True)
     pairs = audio_near_duplicates(fp, max_hamming=max_hamming)
-    comp = connected_components(pairs)
-    losers = comp.filter(F.col("node") != F.col("component")).select(
-        F.col("node").alias("media_id")
-    )
-    surv = fp.join(losers, "media_id", "left_anti").select("media_id")
+    surv = dedup_survivors(fp, pairs, "media_id").select("media_id")
     return surv.join(meta_ok, "media_id").join(vad_ok, "media_id").select(
         "media_id", "sample_rate", "duration_ms", "active_ppm"
     )
@@ -1553,21 +1541,13 @@ def video_dedup_pipeline(
     localCheckpoint — the image_dedup_pipeline discipline) -> shared-
     frame pair join -> connected components -> min-id survivor per
     cluster.  Returns surviving (media_id) rows."""
-    from .dedup import connected_components
+    from .dedup import dedup_survivors
 
     frames = frame_sample(
         media, payload_col, id_col, every_n=every_n, strict=strict
     ).localCheckpoint(eager=True)
     pairs = video_near_duplicates(frames, min_shared, id_col)
-    comp = connected_components(pairs)
-    losers = comp.filter(F.col("node") != F.col("component")).select(
-        F.col("node").alias(id_col)
-    )
-    return (
-        frames.select(id_col)
-        .distinct()
-        .join(losers, id_col, "left_anti")
-    )
+    return dedup_survivors(frames.select(id_col).distinct(), pairs, id_col)
 
 
 def persist_frame_index(
@@ -1608,17 +1588,13 @@ def incremental_video_dedup(
     already-admitted video (the index equi-join — admitted corpus
     payloads are NEVER re-decoded, the incremental-lane contract).
     Returns surviving (media_id) rows."""
-    from .dedup import connected_components
+    from .dedup import dedup_survivors
 
     frames = frame_sample(
         shard_media, every_n=every_n, strict=strict
     ).localCheckpoint(eager=True)
     pairs = video_near_duplicates(frames, min_shared)
-    comp = connected_components(pairs)
-    losers = comp.filter(F.col("node") != F.col("component")).select(
-        F.col("node").alias("media_id")
-    )
-    within = frames.join(losers, "media_id", "left_anti")
+    within = dedup_survivors(frames, pairs, "media_id")
     cross_hits = (
         within.join(
             index.select(F.col("frame_hash").alias("frame_hash")),

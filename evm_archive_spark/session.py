@@ -1,8 +1,9 @@
 """SparkSession factory tuned for the engine.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]``; the configs below are
-the ones that matter at cluster scale too (AQE, adaptive coalescing, skew
-join handling, Arrow for the few pandas-UDF paths).
+Local testing runs on ``local[$SPARK_GRAFT_CPUS]``, by default one task
+thread per core this process may run on; the configs below are the ones
+that matter at cluster scale too (AQE, adaptive coalescing, skew join
+handling, Arrow for the few pandas-UDF paths).
 """
 
 from __future__ import annotations
@@ -21,7 +22,9 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get(
+        "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))
+    )
     if shuffle_partitions is None:
         shuffle_partitions = max(int(cpus), 4)
     builder = (

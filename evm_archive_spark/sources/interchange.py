@@ -11,7 +11,7 @@ CSV is the delicate one: document text contains quotes, commas and
 newlines.  The writer is pinned to RFC 4180 semantics (quote doubling via
 ``escape='"'``) and the reader to ``multiLine`` so quoted embedded
 newlines parse; NULL travels as the ``\\N`` sentinel (the PostgreSQL
-COPY convention, matching sinks/pgwire.copy_in) while empty strings are
+COPY text-format convention) while empty strings are
 written quoted (``""``), so empty string != NULL survives the trip.
 One documented limitation, pinned by test: a field whose CONTENT is
 exactly the sentinel reads back as NULL — Spark's CSV reader applies

@@ -1,17 +1,16 @@
-"""Standalone PG sink bench: insert vs COPY vs COPY-into-partitioned.
+"""Standalone PG sink bench: COPY into a flat and a hash-partitioned logs
+table.
 
-Mirrors bench.py's q_sink_pg_* entries (same staged input, same scratch
-cluster, median of 3) without running the whole bench — used to measure
-the server-side lever variants in isolation.
+Runs bench.py's q_sink_pg_copy / q_sink_pg_copy_part entries (same staged
+input, same scratch cluster, median of 3; each run's time goes to stderr)
+without running the whole bench.
 
 Usage: python scripts/bench_pg_sink.py [n_rows]
 """
 
 from __future__ import annotations
 
-import shutil
 import sys
-import time
 
 
 def main() -> int:
@@ -21,40 +20,11 @@ def main() -> int:
 
     spark = get_spark("pg-sink-bench")
     spark.sparkContext.setLogLevel("ERROR")
-    pg = bench._ScratchPg()
-    if not pg.ok:
-        print("no PostgreSQL server; abort")
-        return 1
-    staged = bench.stage_pg_input(spark, n)
-    try:
-        from evm_archive_spark.schemas import LOGS_PK
-        from evm_archive_spark.sinks import upsert
-
-        # warm the Arrow-CSV path (session cost, excluded by convention)
-        pg.reset_logs()
-        upsert.write_conflict_ignore(
-            spark.read.parquet(staged).limit(1000).repartition(8),
-            "logs", LOGS_PK, pg.factory(), parallel=True, method="copy",
-        )
-        for name, fn in (
-            ("insert", bench.sink_pg_insert_200k),
-            ("copy_flat", bench.sink_pg_copy_200k),
-            ("copy_part8", bench.sink_pg_copy_part_200k),
-        ):
-            runs = []
-            for _ in range(3):
-                t0 = time.perf_counter()
-                rows = fn(spark, staged, pg)
-                runs.append(time.perf_counter() - t0)
-            med = sorted(runs)[1]
-            print(
-                f"{name}: median {med:.3f}s of {sorted(round(r, 3) for r in runs)} "
-                f"= {rows / med:,.0f} rows/s ({rows} rows)"
-            )
-    finally:
-        pg.stop()
-        shutil.rmtree(staged, ignore_errors=True)
-    return 0
+    timings: dict[str, float] = {}
+    bench.run_pg_sinks(spark, timings, n)
+    for name, dt in timings.items():
+        print(f"{name}: median {dt:.3f}s = {n / dt:,.0f} rows/s ({n} rows)")
+    return 0 if timings else 1
 
 
 if __name__ == "__main__":

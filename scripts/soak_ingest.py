@@ -116,9 +116,9 @@ def main() -> int:
         del args[k:k + 2]
     sf_dir = args[0] if args else "testdata_sf3"
 
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
     spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+        SparkSession.builder.master(f"local[{cpus}]")
         .appName("ingest-soak")
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.ui.enabled", "false")

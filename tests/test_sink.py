@@ -1,8 +1,9 @@
 """Q-SC3 / Q-ST4: idempotent sink round-trip + ndjson ingestion replay.
 
 Reproduces get_logs.go:118-132 semantics: PK + ON CONFLICT DO NOTHING,
-second write inserts 0 rows.  DuckDB stands in for Postgres (same DDL/SQL
-shape; the production factory is psycopg2 with paramstyle='format')."""
+second write inserts 0 rows.  DuckDB and sqlite3 stand in for Postgres
+(same DDL/SQL shape); as connections without ``copy_in`` they take the
+batched executemany INSERT writer (test_pg_live.py covers the COPY one)."""
 
 from __future__ import annotations
 
@@ -85,32 +86,16 @@ def test_sink_parallel_arrow_path(spark, tmp_path):
     con.close()
 
 
-def test_sink_exact_counts(spark, tmp_path):
-    """exact_counts=True executes row-at-a-time and reports a trustworthy
-    inserted count (0 on replay) instead of executemany's undefined -1.
-    sqlite3 is the DBAPI driver that actually reports per-statement
-    rowcount (DuckDB's returns -1 for INSERT)."""
+def test_insert_placeholder_from_paramstyle(monkeypatch):
+    """The INSERT writer's placeholder is the connection module's PEP 249
+    paramstyle; a style it cannot express positionally raises."""
     import sqlite3
 
-    db = str(tmp_path / "exact.sqlite")
-    con = sqlite3.connect(db)
-    con.execute(upsert.LOGS_DDL_GENERIC)
-    con.commit()
-    con.close()
-
-    df = fixtures.logs_df(spark)
-    n_unique = df.dropDuplicates(LOGS_PK).count()
-    factory = lambda: sqlite3.connect(db, timeout=60)  # noqa: E731
-
-    r1 = upsert.write_conflict_ignore(
-        df, "logs", LOGS_PK, factory, parallel=False, exact_counts=True
-    )
-    assert r1.attempted == n_unique and r1.inserted == n_unique
-
-    r2 = upsert.write_conflict_ignore(
-        df, "logs", LOGS_PK, factory, parallel=False, exact_counts=True
-    )
-    assert r2.attempted == n_unique and r2.inserted == 0
+    assert upsert._placeholder(sqlite3.connect(":memory:")) == "?"
+    assert upsert._placeholder(duckdb.connect()) == "?"
+    monkeypatch.setattr(sqlite3, "paramstyle", "named")
+    with pytest.raises(TypeError, match="named"):
+        upsert._placeholder(sqlite3.connect(":memory:"))
 
 
 def _write_ndjson(path, rows):
