@@ -317,8 +317,10 @@ def _pg_logs_df(spark, n: int):
 
 
 class _ScratchPg:
-    """Throwaway live-PostgreSQL cluster on a unix socket (the
-    test_pg_live.py recipe); .ok False -> skip the PG sink benches."""
+    """Throwaway live-PostgreSQL cluster on a unix socket at ``base`` and
+    ``port``, tuned for bulk loads.  ``ok`` False: there is none, and
+    ``reason`` says why; the PG sink benches and tests/test_pg_live.py
+    skip then.  ``stop`` removes it."""
 
     def __init__(self):
         import shutil
@@ -326,9 +328,9 @@ class _ScratchPg:
         import subprocess
         import tempfile
 
-        self.ok = False
-        self.base = None
+        self.ok, self.base, self.reason = False, None, ""
         if shutil.which("initdb") is None or shutil.which("pg_ctl") is None:
+            self.reason = "no PostgreSQL server binaries"
             return
         base = tempfile.mkdtemp(prefix="pgbench-", dir="/tmp")
         with socket.socket() as s:
@@ -339,6 +341,7 @@ class _ScratchPg:
             shutil.chown(base, "postgres")
         except (PermissionError, LookupError):
             shutil.rmtree(base, ignore_errors=True)
+            self.reason = "cannot hand a scratch dir to a postgres user"
             return
 
         def su(cmd):
@@ -348,19 +351,21 @@ class _ScratchPg:
             )
 
         self._su = su
-        if su(f"initdb -D {base}/data -A trust --no-instructions "
-              "-U postgres").returncode != 0:
+        r = su(f"initdb -D {base}/data -A trust --no-instructions -U postgres")
+        if r.returncode != 0:
             shutil.rmtree(base, ignore_errors=True)
+            self.reason = f"initdb failed: {r.stderr[-300:]}"
             return
         # standard bulk-load tuning for a throwaway backfill target: no
-        # durability on a cluster whose lifetime is one bench run
+        # durability on a cluster whose lifetime is one run
         tuning = (
             "-c fsync=off -c synchronous_commit=off -c full_page_writes=off"
         )
-        if su(f"pg_ctl -D {base}/data -l {base}/log -w "
-              f"-o \"-k {base} -p {port} -c listen_addresses='' {tuning}\" "
-              "start").returncode != 0:
+        r = su(f"pg_ctl -D {base}/data -l {base}/log -w "
+               f"-o \"-k {base} -p {port} -c listen_addresses='' {tuning}\" start")
+        if r.returncode != 0:
             shutil.rmtree(base, ignore_errors=True)
+            self.reason = f"pg_ctl start failed: {r.stderr[-300:]}"
             return
         self.ok, self.base, self.port = True, base, port
 
@@ -456,9 +461,7 @@ def run_pg_sinks(
     behind."""
     pg = _ScratchPg()
     if not pg.ok:
-        print(
-            "# q_sink_pg_*: skipped (no PostgreSQL server)", file=sys.stderr
-        )
+        print(f"# q_sink_pg_*: skipped ({pg.reason})", file=sys.stderr)
         return 0.0
     import shutil
 

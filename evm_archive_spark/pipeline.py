@@ -31,10 +31,12 @@ range ``[lo, hi]`` and the price probes over it; ``run_batch`` runs one
 unit over [resume start, toBlock or the head], and ``run_stream`` one per
 micro-batch, over the blocks it carries.  Every unit:
 
-- dedups logs on ``LOGS_PK + removed``: a reorg re-delivers a log's PK with
-  removed=true, and the row and its tombstone are both stored
-  (get_logs.go:52); ``read_sink`` resolves them at read time.  Prices dedup
-  on ``PRICE_PK``;
+- stores one row per ``LOGS_PK + removed`` of each reader partition: a
+  reorg re-delivers a log's PK with removed=true, and the row and its
+  tombstone are both stored (get_logs.go:52).  The reader dedups inside its
+  partition (``rpc._BlockRangeReader.read``), and ``read_sink`` dedups
+  across partitions and units and resolves tombstones at read time.  Prices
+  are one row per ``PRICE_PK`` the same way;
 - overwrites only its own ``ingest_batch=<key>`` partition
   (``_write_idempotent``).  A ``run_batch`` unit's key is its start block
   (>= 0), a micro-batch's is ``-1 - batch_id`` (< 0): the two never meet, a
@@ -45,13 +47,16 @@ micro-batch, over the blocks it carries.  Every unit:
   fails the unit.  A micro-batch that carries no rows lands nothing: no
   partition, no ``publish``, no price probe.
 
-One scan of the node per unit.  The logs write is the unit's only
-``eth_getLogs`` read: its row count and ``min``/``max(block_number)`` come
-from a ``DataFrame.observe`` on the write itself, at no extra job, and feed
-the unit's INFO log line, the micro-batch's price range (the bounds of the
-blocks it carries) and ``run_batch``'s returned counts.  A micro-batch with
-timestamp enrichment needs its bounds before the write, for the header
-range, so it persists the deduped batch and takes them from that one read.
+One scan of the node per unit.  With no dedup shuffle, the logs write is
+one Spark job that fetches and writes in the same tasks, one parquet file
+per reader partition (up to defaultParallelism per unit).  It is the
+unit's only ``eth_getLogs`` read: its row count and
+``min``/``max(block_number)`` come from a ``DataFrame.observe`` on the
+write itself, at no extra job, and feed the unit's INFO log line, the
+micro-batch's price range (the bounds of the blocks it carries) and
+``run_batch``'s returned counts.  A micro-batch with timestamp enrichment
+needs its bounds before the write, for the header range, so it persists
+the batch and takes them from that one read.
 
 Batch reads plan on the driver.  ``run_batch``'s logs read and every
 unit's header and price reads go through ``rpc.read_batch``: the source's
@@ -73,7 +78,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-from .schemas import LOGS_PK, PRICE_PK
 from .sources import rpc
 
 log = logging.getLogger(__name__)
@@ -225,7 +229,6 @@ def _ingest_unit(logs, cfg: dict, logs_path: str, price_path: str,
     from pyspark.sql import functions as F
 
     spark = logs.sparkSession
-    logs = logs.dropDuplicates(LOGS_PK + ["removed"])
     # the header range needs a micro-batch's bounds before the write: take
     # them from one materialized read of the node
     cached = logs.persist() if cfg["enrich"] and bounds is None else None
@@ -249,7 +252,7 @@ def _ingest_unit(logs, cfg: dict, logs_path: str, price_path: str,
     if cfg["tokens"] and cfg["oracles"]:
         price = _source(spark, "evm_price", cfg, *(bounds or (seen["lo"], seen["hi"])),
                         tokens=cfg["tokens"], oracles=cfg["oracles"])
-        written["price"] = _write_idempotent(price.dropDuplicates(PRICE_PK), price_path, key)["rows"]
+        written["price"] = _write_idempotent(price, price_path, key)["rows"]
         _notify(publish, "price")
     return written
 

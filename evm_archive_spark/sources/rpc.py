@@ -16,6 +16,9 @@ upsert, advance (main.go:217-241).  Re-architected for Spark
   windows runs in one wave of tasks; unset, each window is a partition;
 - rows come out in the storage shape (A5-A7 applied in the reader), as
   Arrow batches from every reader;
+- a logs or price partition keeps the first row of each dedup key
+  (``LOGS_PK + removed``, ``PRICE_PK``) across its windows, so the sink
+  write needs no dedup shuffle;
 - the sink side composes with ``sinks.upsert.foreach_batch_upsert``.
 
 Two faces read the same readers.  ``register`` makes the ``DataSource``
@@ -43,6 +46,7 @@ from __future__ import annotations
 import hashlib
 import json
 import logging
+import operator
 import time
 import urllib.error
 import urllib.request
@@ -58,7 +62,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
-from ..schemas import BLOCKS_SCHEMA, LOGS_SCHEMA, PRICE_SCHEMA
+from ..schemas import BLOCKS_SCHEMA, LOGS_PK, LOGS_SCHEMA, PRICE_PK, PRICE_SCHEMA
 
 if SparkFiles._is_running_on_worker:
     # a Python worker unpickling an evm_* source.  The data source planner
@@ -296,20 +300,6 @@ def _skipped(source: str, lo: int, hi: int, err: SkipWindow) -> None:
     logger.warning("%s: skipped blocks [%d, %d]: %s", source, lo, hi, err)
 
 
-def _fetch_range(transport, rng: BlockRange, contracts: list[str] | None):
-    """A1: one eth_getLogs call per sub-range; SkipWindow -> empty."""
-    query = {"fromBlock": _hex(rng.start), "toBlock": _hex(rng.end)}
-    if contracts:
-        query["address"] = contracts
-    try:
-        logs = transport.call("eth_getLogs", [query])
-    except SkipWindow as e:
-        _skipped("evm_logs", rng.start, rng.end, e)
-        return
-    for log in logs:
-        yield _wire_to_row(log)
-
-
 # Arrow forms of LOGS_SCHEMA / BLOCKS_SCHEMA / PRICE_SCHEMA.  Both the
 # Python DataSource API and ``mapInArrow`` accept ``pyarrow.RecordBatch``
 # yields from ``read()``; one Arrow buffer per batch replaces one pickled
@@ -318,6 +308,23 @@ def _fetch_range(transport, rng: BlockRange, contracts: list[str] | None):
 _ARROW_LOGS = to_arrow_schema(LOGS_SCHEMA)
 _ARROW_BLOCKS = to_arrow_schema(BLOCKS_SCHEMA)
 _ARROW_PRICE = to_arrow_schema(PRICE_SCHEMA)
+
+# The dedup keys of the logs and price rows, as their positions in the
+# reader's row tuples: a log row per ``LOGS_PK + removed`` (a reorg
+# re-delivers a PK with removed=true, and both rows are kept,
+# get_logs.go:52), a price row per ``PRICE_PK``.
+_LOGS_KEY = operator.itemgetter(*(LOGS_SCHEMA.names.index(c) for c in LOGS_PK + ["removed"]))
+_PRICE_KEY = operator.itemgetter(*(PRICE_SCHEMA.names.index(c) for c in PRICE_PK))
+
+
+def _first(rows, key):
+    """The first of the rows that share a ``key(row)``, in order."""
+    seen = set()
+    for r in rows:
+        k = key(r)
+        if k not in seen:
+            seen.add(k)
+            yield r
 
 
 def _rows_to_batches(rows, schema, max_rows: int = 8192):
@@ -371,10 +378,13 @@ def _opts(options) -> dict:
 
 class _BlockRangeReader:
     """What every block-range reader shares: its options, its transport,
-    ``blockStep`` window planning and packing, and the empty-range guard.
-    A subclass supplies only ``_window(transport, rng)``, the rows of one
-    window; ``partitions()`` is the batch planner (a stream reader plans
-    from its offsets instead)."""
+    ``blockStep`` window planning and packing, the empty-range guard, and
+    a partition's Arrow batches.  A subclass supplies ``_rows(transport,
+    rng)``, the row tuples of one window, their Arrow schema ``_arrow``,
+    and an optional dedup ``_key``; ``partitions()`` is the batch planner
+    (a stream reader plans from its offsets instead)."""
+
+    _key = None
 
     def __init__(self, options):
         self.o = _opts(options)
@@ -407,24 +417,42 @@ class _BlockRangeReader:
         return self._plan(o["from_block"], end)
 
     def read(self, partition: BlockRange):
+        """The rows of the partition's windows, in order, keeping the first
+        row of each ``_key`` across all of them: the write needs no dedup
+        shuffle (see ``pipeline``)."""
         t = self._transport()
-        for rng in plan_ranges(partition.start, partition.end, self.o["block_step"]):
-            yield from self._window(t, rng)
+        rows = (r for rng in plan_ranges(partition.start, partition.end, self.o["block_step"])
+                for r in self._rows(t, rng))
+        if self._key is not None:
+            rows = _first(rows, self._key)
+        return _rows_to_batches(rows, self._arrow)
 
 
-class EvmLogsBatchReader(_BlockRangeReader, DataSourceReader):
-    """Bounded backfill: one ``eth_getLogs`` call per window."""
+class _LogsReader(_BlockRangeReader):
+    """One ``eth_getLogs`` call per window (A1); a -32602 window yields
+    no rows."""
 
-    def _window(self, t, rng: BlockRange):
-        return _rows_to_batches(
-            _fetch_range(t, rng, self.o["contracts"]), _ARROW_LOGS
-        )
+    _arrow, _key = _ARROW_LOGS, _LOGS_KEY
+
+    def _rows(self, t, rng: BlockRange):
+        query = {"fromBlock": _hex(rng.start), "toBlock": _hex(rng.end)}
+        if self.o["contracts"]:
+            query["address"] = self.o["contracts"]
+        try:
+            logs = t.call("eth_getLogs", [query])
+        except SkipWindow as e:
+            _skipped("evm_logs", rng.start, rng.end, e)
+            return
+        for log in logs:
+            yield _wire_to_row(log)
 
 
-class EvmLogsStreamReader(_BlockRangeReader, DataSourceStreamReader):
+class EvmLogsBatchReader(_LogsReader, DataSourceReader):
+    """Bounded backfill over the planned windows."""
+
+
+class EvmLogsStreamReader(_LogsReader, DataSourceStreamReader):
     """Tail-follow: block-number offsets, same windows as the batch reader."""
-
-    _window = EvmLogsBatchReader._window
 
     def initialOffset(self) -> dict:
         # A11: start = FROM_BLOCK arg; resume-from-sink reconciliation is
@@ -484,7 +512,11 @@ class EvmLogsDataSource(DataSource):
 class EvmPriceBatchReader(_BlockRangeReader, DataSourceReader):
     """One row (token, block, price) per (token, oracle) pair per window
     start — the reference's price probe (get_price.go:31-50, main.go:191-198)
-    generalized to a partition per window."""
+    generalized to a partition per window.  A token listed twice keeps the
+    probe of its first oracle: windows never share a start block, so that
+    is one row per ``PRICE_PK``."""
+
+    _arrow, _key = _ARROW_PRICE, _PRICE_KEY
 
     def __init__(self, options):
         super().__init__(options)
@@ -494,10 +526,7 @@ class EvmPriceBatchReader(_BlockRangeReader, DataSourceReader):
             # the reference panics on index (main.go:192-193); we fail early
             raise ValueError("tokens and oracles must be equal-length CSVs")
 
-    def _window(self, t, rng: BlockRange):
-        return _rows_to_batches(self._probes(t, rng), _ARROW_PRICE)
-
-    def _probes(self, t, rng: BlockRange):
+    def _rows(self, t, rng: BlockRange):
         from decimal import Decimal
 
         as_of = rng.start  # price sampled at window start (main.go:196)
@@ -537,13 +566,12 @@ class EvmBlocksBatchReader(_BlockRangeReader, DataSourceReader):
     ``eth_getBlockByNumber`` fetched per block within partition-parallel
     block sub-ranges (same planning as the logs source)."""
 
-    def _window(self, t, rng: BlockRange):
-        return _rows_to_batches(self._headers(t, rng), _ARROW_BLOCKS)
+    _arrow = _ARROW_BLOCKS
 
-    def _headers(self, t, partition: BlockRange):
+    def _rows(self, t, rng: BlockRange):
         import datetime as dt
 
-        for block in range(partition.start, partition.end + 1):
+        for block in range(rng.start, rng.end + 1):
             try:
                 hdr = t.call("eth_getBlockByNumber", [_hex(block), False])
             except SkipWindow as e:

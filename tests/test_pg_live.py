@@ -1,8 +1,9 @@
 """Live-PostgreSQL round-trip for the upsert sink (VERDICT r1 #8).
 
 ``sinks.pgwire`` is the minimal wire-protocol client for a real
-PostgreSQL server.  This test initdb's a scratch cluster on a unix socket,
-runs the sink's COPY + ON CONFLICT merge against it — one writer task
+PostgreSQL server.  This test starts a scratch cluster on a unix socket
+(``bench._ScratchPg``, the recipe the PG sink benches use), runs the
+sink's COPY + ON CONFLICT merge against it — one writer task
 (``parallel=False``) and partition-parallel writers — and checks
 real-server semantics: exact insert counts, idempotent replay,
 conflict-ignore under concurrent writers, values that survive the COPY
@@ -11,12 +12,6 @@ present.
 """
 
 from __future__ import annotations
-
-import os
-import shutil
-import socket
-import subprocess
-import tempfile
 
 import pytest
 
@@ -51,51 +46,17 @@ def test_literal_adaptation_no_server():
         _quote("bad\x00string")
 
 
-def _free_port() -> int:
-    with socket.socket() as s:
-        s.bind(("127.0.0.1", 0))
-        return s.getsockname()[1]
-
-
-def _su_postgres(cmd: str) -> subprocess.CompletedProcess:
-    return subprocess.run(
-        ["su", "postgres", "-s", "/bin/sh", "-c", cmd],
-        capture_output=True,
-        text=True,
-        timeout=120,
-    )
-
-
 @pytest.fixture(scope="module")
 def pg():
-    if shutil.which("initdb") is None or shutil.which("pg_ctl") is None:
-        pytest.skip("no PostgreSQL server binaries")
-    base = tempfile.mkdtemp(prefix="pglive-", dir="/tmp")
-    port = _free_port()
+    from bench import _ScratchPg
+
+    cluster = _ScratchPg()
+    if not cluster.ok:
+        pytest.skip(cluster.reason)
     try:
-        os.chmod(base, 0o777)
-        shutil.chown(base, "postgres")
-    except (PermissionError, LookupError):
-        shutil.rmtree(base, ignore_errors=True)
-        pytest.skip("cannot hand a scratch dir to a postgres user")
-    r = _su_postgres(
-        f"initdb -D {base}/data -A trust --no-instructions -U postgres"
-    )
-    if r.returncode != 0:
-        shutil.rmtree(base, ignore_errors=True)
-        pytest.skip(f"initdb failed: {r.stderr[-300:]}")
-    r = _su_postgres(
-        f"pg_ctl -D {base}/data -l {base}/log -w "
-        f"-o \"-k {base} -p {port} -c listen_addresses=''\" start"
-    )
-    if r.returncode != 0:
-        shutil.rmtree(base, ignore_errors=True)
-        pytest.skip(f"pg_ctl start failed: {r.stderr[-300:]}")
-    try:
-        yield {"host": base, "port": port}
+        yield {"host": cluster.base, "port": cluster.port}
     finally:
-        _su_postgres(f"pg_ctl -D {base}/data -m immediate stop")
-        shutil.rmtree(base, ignore_errors=True)
+        cluster.stop()
 
 
 def _connect(pg):

@@ -3,6 +3,8 @@ same env surface as the reference (main.go:18-91), idempotent re-run."""
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 
 from evm_archive_spark.pipeline import env_config, run_batch
@@ -22,18 +24,18 @@ def _cfg(tmp_path, **over):
     return env_config(env)
 
 
-@pytest.fixture
-def node():
-    """A live JSON-RPC node on localhost that answers from MockTransport
-    and counts the calls per method: ``(endpoint, Counter)``."""
+@contextlib.contextmanager
+def _serve(answer):
+    """A live JSON-RPC node on localhost whose ``answer(method, params)``
+    gives each result, and which counts the calls per method:
+    ``(endpoint, Counter)``."""
     import http.server
     import json
     import threading
     from collections import Counter
 
-    from evm_archive_spark.sources.rpc import MockTransport, SkipWindow
+    from evm_archive_spark.sources.rpc import SkipWindow
 
-    mock = MockTransport("mock://head=19,logs_per_block=2")
     calls: Counter = Counter()
     lock = threading.Lock()
 
@@ -43,7 +45,7 @@ def node():
             with lock:
                 calls[body["method"]] += 1
             try:
-                reply = {"result": mock.call(body["method"], body["params"])}
+                reply = {"result": answer(body["method"], body["params"])}
             except SkipWindow as e:
                 reply = {"error": {"code": -32602, "message": str(e)}}
             out = json.dumps({"jsonrpc": "2.0", "id": body["id"], **reply}).encode()
@@ -58,9 +60,20 @@ def node():
 
     srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
     threading.Thread(target=srv.serve_forever, daemon=True).start()
-    yield f"http://127.0.0.1:{srv.server_address[1]}", calls
-    srv.shutdown()
-    srv.server_close()
+    try:
+        yield f"http://127.0.0.1:{srv.server_address[1]}", calls
+    finally:
+        srv.shutdown()
+        srv.server_close()
+
+
+@pytest.fixture
+def node():
+    """A node that answers from MockTransport: ``(endpoint, Counter)``."""
+    from evm_archive_spark.sources.rpc import MockTransport
+
+    with _serve(MockTransport("mock://head=19,logs_per_block=2").call) as served:
+        yield served
 
 
 def _logs_batch(spark, endpoint, lo, hi, step=5, **opts):
@@ -495,3 +508,68 @@ def test_corrupt_sink_fails_the_catch_up(spark, tmp_path):
     with pytest.raises(Exception, match="(?i)parquet"):
         run_batch(spark, _cfg(tmp_path))
     assert bad.exists()
+
+
+def test_reader_dedups_within_its_partition(spark, tmp_path):
+    """The node answers window [5, 9] twice over, and that window holds
+    block 6's logs and their removed=true re-delivery.  run_batch and a
+    micro-batch each land one row per LOGS_PK + removed, the log and its
+    tombstone both, with one eth_getLogs per window; a token listed twice
+    gets one price row per window start, its first oracle's."""
+    from evm_archive_spark.pipeline import _stream_batch_writer
+    from evm_archive_spark.schemas import LOGS_PK
+    from evm_archive_spark.sources.rpc import MockTransport
+
+    mock = MockTransport("mock://head=19,logs_per_block=2,reorg_block=6,reorg_seen_from=6")
+
+    def twice(method, params):
+        res = mock.call(method, params)
+        return res * 2 if method == "eth_getLogs" and params[0]["fromBlock"] == "0x5" else res
+
+    def assert_unit(out, blocks, starts):
+        raw = spark.read.parquet(str(out / "logs"))
+        assert raw.count() == raw.dropDuplicates(LOGS_PK + ["removed"]).count() == 2 * blocks + 2
+        assert raw.filter("block_number = 6 AND removed").count() == 2
+        assert raw.filter("block_number = 6 AND NOT removed").count() == 2
+        prices = spark.read.parquet(str(out / "price")).collect()
+        assert sorted(r["block_number"] for r in prices) == starts
+        assert all(r["address"] == "A" and r["price"] == int(
+            mock.call("eth_call", [{"to": "0xoracleA"}, hex(r["block_number"])]), 16)
+            for r in prices)
+
+    with _serve(twice) as (endpoint, calls):
+        cfg = _cfg(tmp_path, EVM_ARCHIVE_ENDPOINT=endpoint, EVM_ARCHIVE_TOKENS="A,A",
+                   EVM_ARCHIVE_ORACLES="0xoracleA,0xoracleB")
+        assert run_batch(spark, cfg) == {"logs": 42, "price": 4}
+        assert calls["eth_getLogs"] == 4
+        assert_unit(tmp_path / "out", 20, [0, 5, 10, 15])
+
+        mb = tmp_path / "mb"
+        _stream_batch_writer(cfg, str(mb / "logs"), str(mb / "price"))(
+            _logs_batch(spark, endpoint, 0, 9), 0)
+        assert calls["eth_getLogs"] == 6
+        assert_unit(mb, 10, [0, 5])
+
+
+def test_ingest_unit_is_one_job(spark, tmp_path):
+    """A catch-up of 10 windows into a new sink, and a micro-batch without
+    enrichment, each run one Spark job: the fetch and the write share its
+    tasks, with no dedup shuffle between them."""
+    from evm_archive_spark.pipeline import _stream_batch_writer
+
+    cfg = _cfg(tmp_path, EVM_ARCHIVE_BLOCK_STEP="2", EVM_ARCHIVE_TOKENS="", EVM_ARCHIVE_ORACLES="")
+    batch = _logs_batch(spark, cfg["endpoint"], 0, 9)
+    mb = tmp_path / "mb"
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("unit-batch", "one catch-up")
+        assert run_batch(spark, cfg) == {"logs": 40}
+        assert len(sc.statusTracker().getJobIdsForGroup("unit-batch")) == 1
+
+        sc.setJobGroup("unit-stream", "one micro-batch")
+        _stream_batch_writer(cfg, str(mb / "logs"), str(mb / "price"))(batch, 0)
+        assert len(sc.statusTracker().getJobIdsForGroup("unit-stream")) == 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert spark.read.parquet(str(mb / "logs")).count() == 20
